@@ -59,15 +59,6 @@ def load_merges(path: str = DEFAULT_MERGES_PATH) -> list[tuple[str, str]]:
     return merges
 
 
-def save_merges(merges: list[tuple[str, str]], path: str) -> None:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as f:
-        f.write("# BPE merges: rank = line order; trained by "
-                "functions/bpe.py:train_bpe (deterministic)\n")
-        for l, r in merges:
-            f.write(f"{l} {r}\n")
-
-
 def word_counts(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, cnt): analyzer-word frequencies — one explode + one groupBy."""
     toks = F.explode(F.regexp_extract_all(

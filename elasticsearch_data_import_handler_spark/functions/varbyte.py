@@ -105,17 +105,6 @@ def delta_decode(deltas: np.ndarray) -> np.ndarray:
     return np.cumsum(d, dtype=np.uint64)
 
 
-def zigzag_encode(v: np.ndarray) -> np.ndarray:
-    """Map signed int64 → uint64 (doc_ids are xxhash64 outputs, i.e. signed)."""
-    v = np.asarray(v, dtype=np.int64)
-    return ((v << 1) ^ (v >> 63)).astype(np.uint64)
-
-
-def zigzag_decode(u: np.ndarray) -> np.ndarray:
-    u = np.asarray(u, dtype=np.uint64)
-    return ((u >> np.uint64(1)) ^ (-(u & np.uint64(1))).astype(np.uint64)).astype(np.int64)
-
-
 def _block_starts(n: int) -> np.ndarray:
     return np.arange(0, n, BLOCK_SIZE, dtype=np.int64)
 

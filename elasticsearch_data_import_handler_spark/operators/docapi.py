@@ -64,12 +64,8 @@ def mget(reader, doc_ids: list[int]) -> DataFrame:
     ``found: false`` by omission here).  One pushed-down id filter."""
     if not doc_ids:
         raise ValueError("mget needs at least one doc id")
-    out = reader.doc_stats().filter(
-        F.col("doc_id").isin([int(i) for i in doc_ids]))
-    tomb = reader.tombstones_df()
-    if tomb is not None:
-        out = out.join(tomb, "doc_id", "left_anti")
-    return out
+    return reader.live(reader.doc_stats().filter(
+        F.col("doc_id").isin([int(i) for i in doc_ids])))
 
 
 def explain_score(spark: SparkSession, reader, doc_id: int,
@@ -81,18 +77,12 @@ def explain_score(spark: SparkSession, reader, doc_id: int,
     Plan: the postings scan is bucket-pruned by the query terms exactly
     like scoring, then filtered to the one doc — O(Σ df of query terms)
     read, a 1×|terms| result."""
-    from .indexing import bm25_score_expr
-
     ts = sorted(set(terms))
     if not ts:
         raise ValueError("explain_score needs at least one term")
-    dec = (reader.decoded_postings_for_terms(ts)
-           .filter(F.col("doc_id") == int(doc_id)))
-    lex = reader.lexicon().filter(F.col("term").isin(ts)).select(
-        "term", "df", "idf")
-    rows = (dec.join(F.broadcast(lex), "term")
-            .withColumn("avgdl", F.lit(reader.avgdl_value()))
-            .withColumn("contribution", F.round(bm25_score_expr(), round_to))
+    rows = (reader.term_contribs(ts)
+            .filter(F.col("doc_id") == int(doc_id))
+            .withColumn("contribution", F.round("contrib", round_to))
             .select("term", F.col("tf").cast("long").alias("tf"),
                     F.col("df").cast("long").alias("df"),
                     F.round("idf", round_to).alias("idf"),

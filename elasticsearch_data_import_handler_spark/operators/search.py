@@ -420,25 +420,14 @@ def multi_match(spark, readers: dict, terms, boosts: dict | None = None,
         # rewrite every field's statistics per query; the per-term max
         # keeps each leg a local O(Σ df_f) index scan.  Documented
         # deviation: ES blends df, we pick the best field per term.)
-        from functools import reduce
-
-        from .indexing import bm25_score_expr
-
         tlegs = []
         ts = sorted({t for t in terms})
         for field, rd in sorted(readers.items()):
-            dec = rd.decoded_postings_for_terms(ts)
-            lex = rd.lexicon().filter(F.col("term").isin(ts)) \
-                .select("term", "idf")
             b = float(boosts.get(field, 1.0))
-            leg = (dec.join(F.broadcast(lex), "term")
-                   .withColumn("avgdl", F.lit(rd.avgdl_value()))
-                   .withColumn("contrib", bm25_score_expr() * F.lit(b))
-                   .select("doc_id", "term", "contrib"))
-            tomb = rd.tombstones_df()
-            if tomb is not None:
-                leg = leg.join(tomb, "doc_id", "left_anti")
-            tlegs.append(leg)
+            tlegs.append(rd.live(
+                rd.term_contribs(ts)
+                .withColumn("contrib", F.col("contrib") * F.lit(b))
+                .select("doc_id", "term", "contrib")))
         u = reduce(lambda a, c: a.unionByName(c), tlegs)
         out = (u.groupBy("doc_id", "term")
                .agg(F.max("contrib").alias("best_term"))
@@ -636,17 +625,6 @@ def rrf_fuse(legs: list[DataFrame], k: int = 10, rrf_k: int = 60,
     out = top.withColumn("rank", F.row_number().over(w).cast("long"))
     score = F.round("rrf", round_to) if round_to is not None else F.col("rrf")
     return out.select("doc_id", score.alias("rrf_score"), "rank")
-
-
-def _levenshtein(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[-1] + 1,
-                           prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
 
 
 def query_string_search(spark, reader, q: str, k: int = 10,

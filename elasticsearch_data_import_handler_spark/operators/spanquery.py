@@ -46,11 +46,8 @@ def _clause_positions(reader, words, analyzer):
 
 
 def _finish(reader, acc, count_expr) -> DataFrame:
-    out = acc.select("doc_id", count_expr.cast("long").alias("n_matches"))
-    tomb = reader.tombstones_df()
-    if tomb is not None:
-        out = out.join(tomb, "doc_id", "left_anti")
-    return out
+    return reader.live(
+        acc.select("doc_id", count_expr.cast("long").alias("n_matches")))
 
 
 def span_near(spark, reader, terms: list[str], slop: int = 0,

@@ -350,11 +350,8 @@ def phrase_search_index(spark, reader, phrase: str,
                .select("doc_id",
                        F.array_intersect("acc", f"p{i}").alias("acc"))
                .filter(F.size("acc") > 0))
-    out = acc.select("doc_id", F.size("acc").cast("long").alias("n_occurrences"))
-    tomb = reader.tombstones_df()
-    if tomb is not None:
-        out = out.join(tomb, "doc_id", "left_anti")
-    return out
+    return reader.live(
+        acc.select("doc_id", F.size("acc").cast("long").alias("n_occurrences")))
 
 
 def phrase_search_slop(spark, reader, phrase: str, slop: int = 0,
@@ -413,11 +410,8 @@ def phrase_search_slop(spark, reader, phrase: str, slop: int = 0,
                .select("doc_id", F.expr(step).alias("pairs"))
                .filter(F.size("pairs") > 0)
                .select("doc_id", F.expr(dedup).alias("acc")))
-    out = acc.select("doc_id", F.size("acc").cast("long").alias("n_matches"))
-    tomb = reader.tombstones_df()
-    if tomb is not None:
-        out = out.join(tomb, "doc_id", "left_anti")
-    return out
+    return reader.live(
+        acc.select("doc_id", F.size("acc").cast("long").alias("n_matches")))
 
 
 def _clause_groups(clauses) -> list[list[str]]:
@@ -583,34 +577,17 @@ def dis_max_query(spark, reader, clauses, tie_breaker: float = 0.0,
     conditional sum in the same aggregate, then a scalar max/total combine
     and the tombstone anti-join.  No per-clause pass, no second shuffle.
     """
-    from ..operators.indexing import bm25_score_expr
-
     groups = _clause_groups(clauses)
     if not groups:
         raise ValueError("dis_max_query needs at least one clause")
     flat = [t for g in groups for t in g]
     if len(flat) != len(set(flat)):
         raise ValueError("a term cannot appear in two dis_max clauses")
-    terms = sorted(flat)
-    dec = reader.decoded_postings_for_terms(terms)
-    lex = reader.lexicon().filter(F.col("term").isin(terms)).select("term", "idf")
-    # avgdl as a literal (driver-known snapshot scalar): same double
-    # as the former 1-row crossJoin, minus a BroadcastExchange per query
-    avgdl = F.lit(reader.avgdl_value())
     aggs = [
         F.sum(F.when(F.col("term").isin(g), F.col("contrib"))
               .otherwise(F.lit(0.0))).alias(f"__c{i}")
         for i, g in enumerate(groups)]
-    contrib = bm25_score_expr()
-    if boosts:
-        # ES clause boosts (term^2): multiply the term's BM25 contribution.
-        # The map is |boosted terms|-sized — a closure literal, never data.
-        bmap = F.create_map(*[x for t, w in sorted(boosts.items())
-                              for x in (F.lit(t), F.lit(float(w)))])
-        contrib = contrib * F.coalesce(bmap[F.col("term")], F.lit(1.0))
-    agg = (dec.join(F.broadcast(lex), "term")
-           .withColumn("avgdl", avgdl)
-           .withColumn("contrib", contrib)
+    agg = (reader.term_contribs(sorted(flat), boosts)
            .groupBy("doc_id")
            .agg(*aggs))
     cols = [F.col(f"__c{i}") for i in range(len(groups))]
@@ -619,10 +596,7 @@ def dis_max_query(spark, reader, clauses, tie_breaker: float = 0.0,
     for c in cols[1:]:
         total = total + c
     score = best + F.lit(float(tie_breaker)) * (total - best)
-    out = agg.select("doc_id", score.alias("score"))
-    tomb = reader.tombstones_df()
-    if tomb is not None:
-        out = out.join(tomb, "doc_id", "left_anti")
+    out = reader.live(agg.select("doc_id", score.alias("score")))
     if round_to is not None:
         out = out.select("doc_id", F.round("score", round_to).alias("score"))
     return out
@@ -712,8 +686,6 @@ def bool_query(spark, reader, must=None, should=None,
     proportional to the query terms' df; pair it with the WAND scorer when
     only a top-k is needed.
     """
-    from ..operators.indexing import bm25_score_expr
-
     mgroups = _clause_groups(must)
     sgroups = _clause_groups(should)
     if isinstance(min_should, str):
@@ -727,11 +699,6 @@ def bool_query(spark, reader, must=None, should=None,
     terms = sorted(mflat | sflat)
     if not terms:
         raise ValueError("bool_query needs at least one must or should term")
-    dec = reader.decoded_postings_for_terms(terms)
-    lex = reader.lexicon().filter(F.col("term").isin(terms)).select("term", "idf")
-    # avgdl as a literal (driver-known snapshot scalar): same double
-    # as the former 1-row crossJoin, minus a BroadcastExchange per query
-    avgdl = F.lit(reader.avgdl_value())
 
     def _flag(group):
         return F.max(F.when(F.col("term").isin(group), 1).otherwise(0))
@@ -739,16 +706,7 @@ def bool_query(spark, reader, must=None, should=None,
     aggs = ([_flag(g).alias(f"__m{i}") for i, g in enumerate(mgroups)]
             + [_flag(g).alias(f"__s{i}") for i, g in enumerate(sgroups)]
             + [F.sum("contrib").alias("score")])
-    contrib = bm25_score_expr()
-    if boosts:
-        # ES clause boosts (term^2): multiply the term's BM25 contribution.
-        # The map is |boosted terms|-sized — a closure literal, never data.
-        bmap = F.create_map(*[x for t, w in sorted(boosts.items())
-                              for x in (F.lit(t), F.lit(float(w)))])
-        contrib = contrib * F.coalesce(bmap[F.col("term")], F.lit(1.0))
-    agg = (dec.join(F.broadcast(lex), "term")
-           .withColumn("avgdl", avgdl)
-           .withColumn("contrib", contrib)
+    agg = (reader.term_contribs(terms, boosts)
            .groupBy("doc_id")
            .agg(*aggs))
     should_hits = (sum((F.col(f"__s{i}") for i in range(len(sgroups))),
@@ -762,9 +720,7 @@ def bool_query(spark, reader, must=None, should=None,
         ex = (reader.decoded_postings_for_terms(sorted(set(must_not)))
               .select("doc_id").distinct())
         out = out.join(ex, "doc_id", "left_anti")
-    tomb = reader.tombstones_df()
-    if tomb is not None:
-        out = out.join(tomb, "doc_id", "left_anti")
+    out = reader.live(out)
     score = F.round("score", round_to) if round_to is not None else F.col("score")
     return out.select("doc_id",
                       F.col("should_hits").cast("long").alias("should_hits"),
@@ -839,10 +795,7 @@ def phrase_prefix_search(spark, reader, phrase_prefix: str, slop: int = 0,
                    .filter(F.size("pairs") > 0)
                    .select("doc_id", F.expr(dedup).alias("acc")))
         out = acc.select("doc_id", F.size("acc").cast("long").alias("n_matches"))
-    tomb = reader.tombstones_df()
-    if tomb is not None:
-        out = out.join(tomb, "doc_id", "left_anti")
-    return out
+    return reader.live(out)
 
 
 def terms_set_query(spark, reader, terms: list[str],
@@ -863,25 +816,16 @@ def terms_set_query(spark, reader, terms: list[str],
     the queried terms (O(Σ df)), one groupBy(doc_id) counting distinct
     matched terms + summing BM25, then the requirement filter; the
     per-doc threshold join adds no second pass over postings."""
-    from ..operators.indexing import bm25_score_expr
-
     ts = sorted(set(terms))
     if not ts:
         raise ValueError("terms_set_query needs at least one term")
-    dec = reader.decoded_postings_for_terms(ts)
-    lex = reader.lexicon().filter(F.col("term").isin(ts)).select("term", "idf")
-    # avgdl as a literal (driver-known snapshot scalar): same double
-    # as the former 1-row crossJoin, minus a BroadcastExchange per query
-    avgdl = F.lit(reader.avgdl_value())
     # distinct-matched-term count as a SUM of per-term max-flags (the
     # bool_query idiom) — count_distinct would expand into a second
     # (doc_id, term) exchange of the whole decoded set; |terms| is small
     # for terms_set (it's a clause list), so the flag columns are cheap
     flags = [F.max(F.when(F.col("term") == t, 1).otherwise(0))
              .alias(f"__t{i}") for i, t in enumerate(ts)]
-    agg = (dec.join(F.broadcast(lex), "term")
-           .withColumn("avgdl", avgdl)
-           .withColumn("contrib", bm25_score_expr())
+    agg = (reader.term_contribs(ts)
            .groupBy("doc_id")
            .agg(*flags, F.sum("contrib").alias("score")))
     n_matched = sum((F.col(f"__t{i}") for i in range(len(ts))), F.lit(0))
@@ -905,10 +849,7 @@ def terms_set_query(spark, reader, terms: list[str],
             .cast("long"))
     else:
         agg = agg.withColumn("__req", F.lit(int(required)).cast("long"))
-    out = agg.filter(F.col("n_matched") >= F.col("__req"))
-    tomb = reader.tombstones_df()
-    if tomb is not None:
-        out = out.join(tomb, "doc_id", "left_anti")
+    out = reader.live(agg.filter(F.col("n_matched") >= F.col("__req")))
     score = F.round("score", round_to) if round_to is not None else F.col("score")
     return out.select("doc_id", F.col("n_matched").cast("long").alias("n_matched"),
                       score.alias("score"))

@@ -198,9 +198,6 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
     n_queries = len({r["query_id"] for r in qt_rows})
     post = reader.postings_for_terms(terms)
     q_lex = qterms.join(reader.lexicon().select("term", "idf"), "term")
-    # avgdl as a literal column (driver-known snapshot scalar feeding the
-    # scorer UDF): same double the former 1-row crossJoin carried, minus a
-    # BroadcastExchange + BroadcastNestedLoopJoin per query batch
     joined = post.join(F.broadcast(q_lex), "term").withColumn(
         "avgdl", F.lit(reader.avgdl_value()))
     schema = "query_id int, doc_id bigint, score double"

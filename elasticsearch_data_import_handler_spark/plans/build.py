@@ -61,7 +61,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.varbyte import (
     decode_posting_list,
-    encode_posting_list,
     varbyte_decode,
     _cumsum_with_block_resets,
     _block_starts,
@@ -118,25 +117,6 @@ def docs_versioned(pages: DataFrame, analyzer: dict | None = None) -> DataFrame:
         F.col("warc_ts"),
         jvm_tokens_col("text", analyzer).alias("tokens"),
     ).withColumn("doc_len", F.size("tokens"))
-
-
-def _postings_row(term, salt: int, bucket: int, doc_ids, tfs, dls) -> pd.DataFrame:
-    """One encoded postings row from per-doc (doc_id, tf, doc_len) arrays."""
-    enc = encode_posting_list(doc_ids, tfs, dls)
-    return pd.DataFrame(
-        [{
-            "term": term,
-            "salt": salt,
-            "n_docs": enc["n_docs"],
-            "block_max_doc": enc["block_max_doc"],
-            "block_max_tf": enc["block_max_tf"],
-            "block_min_dl": enc["block_min_dl"],
-            "off_d": enc["off_d"], "off_t": enc["off_t"], "off_l": enc["off_l"],
-            "doc_ids_vb": enc["doc_ids_vb"], "tfs_vb": enc["tfs_vb"],
-            "dls_vb": enc["dls_vb"],
-            "bucket": bucket,
-        }]
-    )
 
 
 def _encode_stream_factory(n_buckets: int, with_tf: bool = False):
@@ -983,11 +963,8 @@ def reindex(spark: SparkSession, src_index: str, pages: DataFrame,
     O(active) column-pruned scan, no postings decode) and built into
     ``dst_index`` through the standard full-build path."""
     reader = IndexReader(spark, src_index)
-    ds = reader.doc_stats().select("doc_id", "url")
-    tomb = reader.tombstones_df()
-    if tomb is not None:
-        ds = ds.join(tomb, "doc_id", "anti")
-    active = ds.select("url").distinct()
+    active = reader.live(reader.doc_stats().select("doc_id", "url")) \
+        .select("url").distinct()
     return build_index(spark, pages.join(active, "url", "semi"), dst_index,
                        tau=tau, n_buckets=n_buckets, dedup=dedup,
                        analyzer=analyzer, positions=positions)
@@ -1325,6 +1302,12 @@ class IndexReader:
                 self.spark, self.index_dir, self.state.committed_batches)
         return self._memo["tombstones"]
 
+    def live(self, df: DataFrame) -> DataFrame:
+        """``df`` minus this snapshot's tombstoned doc_ids (a left-anti
+        join on ``doc_id``; ``df`` unchanged when nothing is deleted)."""
+        tomb = self.tombstones_df()
+        return df if tomb is None else df.join(tomb, "doc_id", "left_anti")
+
     def stats(self) -> dict:
         """The ES ``_stats`` / ``_segments`` analog: corpus totals, segment
         (committed-batch) count, posting/position/tombstone row counts and
@@ -1441,3 +1424,29 @@ class IndexReader:
         return post.select("term", "doc_ids_vb", "tfs_vb", "dls_vb") \
             .mapInPandas(_scan, schema="term string, doc_id bigint, "
                                        "tf int, doc_len int")
+
+    def term_contribs(self, terms: list[str],
+                      boosts: dict | None = None) -> DataFrame:
+        """Per-posting BM25 contributions for ``terms``: (term, doc_id, tf,
+        doc_len, df, idf, avgdl, contrib) — the one place the TAAT scorers'
+        scoring expression is built.  Bucket-pruned decode joined to the
+        broadcast lexicon; ``contrib`` is the whole-stage-codegen
+        ``bm25_score_expr``.  avgdl is the snapshot's driver-side scalar as
+        a literal, so no 1-row crossJoin (and no BroadcastNestedLoopJoin)
+        reaches the plan.  ``boosts`` (ES ``term^w``) multiplies a term's
+        contribution through a |boosted terms|-sized literal map, never
+        data.  Tombstones are NOT applied — callers filter through
+        :meth:`live` at the point in their plan that suits them."""
+        from ..operators.indexing import bm25_score_expr
+
+        lex = self.lexicon().filter(F.col("term").isin(terms)) \
+            .select("term", "df", "idf")
+        contrib = bm25_score_expr()
+        if boosts:
+            bmap = F.create_map(*[x for t, w in sorted(boosts.items())
+                                  for x in (F.lit(t), F.lit(float(w)))])
+            contrib = contrib * F.coalesce(bmap[F.col("term")], F.lit(1.0))
+        return (self.decoded_postings_for_terms(terms)
+                .join(F.broadcast(lex), "term")
+                .withColumn("avgdl", F.lit(self.avgdl_value()))
+                .withColumn("contrib", contrib))

@@ -52,12 +52,6 @@ def query_terms(text: str, analyzer: dict | None = None) -> list[str]:
     return list(seen)
 
 
-def queries_pdf():
-    import pandas as pd
-
-    return pd.DataFrame(QUERIES, columns=["query_id", "text", "k"])
-
-
 def query_term_rows() -> list[tuple[int, str, int]]:
     """Flattened (query_id, term, k) rows — broadcast side of the score join."""
     out = []

@@ -7,7 +7,14 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from elasticsearch_data_import_handler_spark.operators.textsearch import bool_query
+from elasticsearch_data_import_handler_spark.operators.docapi import explain_score
+from elasticsearch_data_import_handler_spark.operators.search import multi_match
+from elasticsearch_data_import_handler_spark.operators.textsearch import (
+    bool_query,
+    boosting_query,
+    dis_max_query,
+    terms_set_query,
+)
 from elasticsearch_data_import_handler_spark.operators.wand import bm25_topk_wand
 from elasticsearch_data_import_handler_spark.plans.build import (
     IndexReader,
@@ -62,6 +69,53 @@ def test_delete_matches_clean_rebuild(spark, deleted_and_clean):
     want = _topk(spark, clean_dir)
     assert got == want  # ranks AND scores: df/n_docs/avgdl all corrected
     assert not any(doc in victims for doc, _ in got.values())
+
+
+def _explain_live_doc(spark, reader, clean_dir):
+    doc = min(r["doc_id"] for r in bool_query(
+        spark, IndexReader(spark, clean_dir), must=["spark"]).collect())
+    return explain_score(spark, reader, doc, ["spark", "sql", "query", "index"])
+
+
+SCORERS = {
+    "bool_must_not": lambda spark, r, _: bool_query(
+        spark, r, should=["spark", "index"], must_not=["sql"], min_should=1),
+    "dis_max": lambda spark, r, _: dis_max_query(
+        spark, r, [["spark", "sql"], ["merge"], "index"], tie_breaker=0.3),
+    "terms_set": lambda spark, r, _: terms_set_query(
+        spark, r, ["spark", "sql", "query", "data"], required=2),
+    "boosting": lambda spark, r, _: boosting_query(
+        spark, r, ["spark", "index"], ["sql"], negative_boost=0.5),
+    "cross_fields": lambda spark, r, _: multi_match(
+        spark, {"body": r}, ["spark", "query", "index"],
+        boosts={"body": 2.0}, match_type="cross_fields"),
+    "explain": _explain_live_doc,
+}
+
+
+def _rows(df):
+    """{non-float columns: float columns} — floats compared within 1e-6."""
+    out = {}
+    for r in df.collect():
+        d = r.asDict()
+        key = tuple((k, v) for k, v in d.items() if not isinstance(v, float))
+        out[key] = [v for v in d.values() if isinstance(v, float)]
+    return out
+
+
+@pytest.mark.parametrize("scorer", sorted(SCORERS))
+def test_scorer_matches_clean_rebuild(spark, deleted_and_clean, scorer):
+    """Every TAAT scorer over the deleted index returns the clean rebuild's
+    rows: tombstoned docs dropped, df/n_docs/avgdl corrected."""
+    del_dir, clean_dir, _ = deleted_and_clean
+    reader = IndexReader(spark, del_dir)
+    assert reader.tombstones_df() is not None
+    got = _rows(SCORERS[scorer](spark, reader, clean_dir))
+    want = _rows(SCORERS[scorer](spark, IndexReader(spark, clean_dir),
+                                 clean_dir))
+    assert want and got.keys() == want.keys()
+    for k, vals in want.items():
+        assert got[k] == pytest.approx(vals, abs=1e-6), k
 
 
 def test_delete_updates_stats_and_lineage(spark, deleted_and_clean):

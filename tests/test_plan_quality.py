@@ -1,6 +1,7 @@
 """Physical-plan assertions: the optimizations we designed for must actually
 appear in the executed plans (pushdown, pruning, broadcast, codegen)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -202,24 +203,40 @@ def test_facet_search_single_postings_decode(spark, tmp_path):
     assert plan.count("Generate explode") == 1, plan
 
 
-def test_dis_max_single_aggregation_exchange(spark, tmp_path):
-    """Every clause's conditional sum must compute in ONE groupBy(doc_id):
-    exactly one hash-partitioning exchange on doc_id downstream of the
-    postings decode, not one aggregation pass per clause."""
-    from elasticsearch_data_import_handler_spark.operators.textsearch import (
-        dis_max_query)
+@pytest.fixture(scope="module")
+def taat_reader(spark, tmp_path_factory):
     from elasticsearch_data_import_handler_spark.plans.build import (
         IndexReader, build_index)
     from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
 
-    d = str(tmp_path / "idx")
+    d = str(tmp_path_factory.mktemp("taat_idx"))
     build_index(spark, synth_pages(spark, 120, seed=42), d, tau=100,
                 n_buckets=4)
-    reader = IndexReader(spark, d)
-    plan = _plan(dis_max_query(spark, reader,
-                               [["spark", "sql"], ["merge"], "index"]))
+    return IndexReader(spark, d)
+
+
+@pytest.mark.parametrize("scorer", ["bool", "dis_max", "terms_set"])
+def test_dis_max_single_aggregation_exchange(spark, taat_reader, scorer):
+    """The TAAT scorers read IndexReader.term_contribs and compute every
+    clause flag / conditional sum in ONE groupBy(doc_id): one decode pass,
+    exactly one hash exchange in the whole plan (lexicon broadcast, avgdl
+    a literal), and no BroadcastNestedLoopJoin."""
+    from elasticsearch_data_import_handler_spark.operators.textsearch import (
+        bool_query, dis_max_query, terms_set_query)
+
+    reader = taat_reader
+    if scorer == "bool":
+        df = bool_query(spark, reader, must=[["spark", "sql"]],
+                        should=["merge", "index"])
+    elif scorer == "dis_max":
+        df = dis_max_query(spark, reader, [["spark", "sql"], ["merge"], "index"])
+    else:
+        df = terms_set_query(spark, reader, ["spark", "merge", "batch"],
+                             required=2)
+    plan = _plan(df)
     assert plan.count("MapInPandas") == 1, plan      # one decode pass
-    assert plan.count("Exchange hashpartitioning(doc_id") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_contamination_broadcasts_benchmark_side(spark):
@@ -421,27 +438,6 @@ def test_percolate_is_join_based_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
     # the requirements side is broadcast (bounded by |queries|)
     assert "BroadcastExchange" in plan, plan
-
-
-def test_terms_set_single_aggregation_exchange(spark, tmp_path):
-    """terms_set adds NO second postings pass: one groupBy(doc_id) shuffle
-    above the decode, threshold applied as a filter."""
-    from elasticsearch_data_import_handler_spark.operators.textsearch import (
-        terms_set_query)
-    from elasticsearch_data_import_handler_spark.plans.build import (
-        IndexReader, build_index)
-    from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
-
-    d = str(tmp_path / "idx")
-    build_index(spark, synth_pages(spark, 120, seed=42), d, tau=100,
-                n_buckets=4)
-    df = terms_set_query(spark, IndexReader(spark, d),
-                         ["spark", "merge", "batch"], required=2)
-    plan = _plan(df)
-    # exactly one hashpartitioning exchange on doc_id (the aggregation);
-    # lexicon/avgdl ride broadcasts
-    n_shuffles = plan.count("Exchange hashpartitioning")
-    assert n_shuffles == 1, plan
 
 
 def test_positions_scan_partition_pruning(spark, tmp_path):

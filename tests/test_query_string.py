@@ -6,7 +6,6 @@ import shutil
 import pytest
 
 from elasticsearch_data_import_handler_spark.operators.search import (
-    _levenshtein,
     parse_query_string,
     query_string_search,
 )
@@ -24,12 +23,6 @@ def test_parse_query_string():
     assert b["must"] == [("term", "spark", 2.0)]
     assert b["should"] == [("term", "merge", 0.5), ("prefix", "luce", 3.0)]
     assert parse_query_string('"exact phrase"')["phrases"] == [("exact phrase", 0)]
-
-
-def test_levenshtein_reference():
-    assert _levenshtein("kitten", "sitting") == 3
-    assert _levenshtein("", "ab") == 2
-    assert _levenshtein("same", "same") == 0
 
 
 @pytest.fixture(scope="module")

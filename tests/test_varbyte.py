@@ -14,8 +14,6 @@ from elasticsearch_data_import_handler_spark.functions.varbyte import (
     encode_posting_list,
     varbyte_decode,
     varbyte_encode,
-    zigzag_decode,
-    zigzag_encode,
 )
 
 
@@ -36,13 +34,6 @@ def test_varbyte_roundtrip_hypothesis(vals):
 def test_varbyte_edge_values():
     v = np.array([0, 1, 127, 128, 16383, 16384, 2**63 - 1, 2**64 - 1], dtype=np.uint64)
     assert np.array_equal(varbyte_decode(varbyte_encode(v)), v)
-
-
-@given(st.lists(st.integers(min_value=-2**63, max_value=2**63 - 1), max_size=200))
-@settings(max_examples=100, deadline=None)
-def test_zigzag_roundtrip(vals):
-    v = np.array(vals, dtype=np.int64)
-    assert np.array_equal(zigzag_decode(zigzag_encode(v)), v)
 
 
 def test_delta_roundtrip_monotone():
