@@ -334,19 +334,20 @@ def q_bm25_topk(spark, sf_dir):
 # One shared positional index per sf_dir for the index-backed gate queries
 # (WAND / phrase / bool) — built once per process, reused across gate rows.
 _GATE_INDEX: dict[str, str] = {}
-# The READER is cached too (keyed by session identity — a reader holds
-# DataFrames of its session): IndexReader memoizes its lexicon/doc_stats/
-# postings frames per committed snapshot, and a fresh reader per operator
-# call was rebuilding those scans every time.  The gate index is immutable
-# once built, so a process-lifetime reader is exactly the committed-snapshot
-# contract.
+# The READER is cached too, keyed by the Spark application id, not by
+# id(spark): a reader holds DataFrames of its session, and a session started
+# after another one stopped can reuse the stopped session's id().
+# IndexReader memoizes its lexicon/doc_stats/postings frames per committed
+# snapshot, and a fresh reader per operator call was rebuilding those scans
+# every time.  The gate index is immutable once built, so a process-lifetime
+# reader is exactly the committed-snapshot contract.
 _GATE_READERS: dict[tuple, object] = {}
 
 
 def _gate_reader(spark, d):
     from elasticsearch_data_import_handler_spark.plans.build import IndexReader
 
-    key = (d, id(spark))
+    key = (d, spark.sparkContext.applicationId)
     r = _GATE_READERS.get(key)
     if r is None:
         r = IndexReader(spark, d)

@@ -21,13 +21,22 @@ from .indexing import bm25_score_expr
 
 
 def query_terms_df(spark, rows=None) -> DataFrame:
-    """(query_id, term, k) — the broadcast side of the score join."""
+    """(query_id, term, k) — the broadcast side of the score join.
+
+    Built from a pyarrow Table, so the frame is a ``LocalRelation``: the
+    query stays on the driver, collecting it runs no Spark job, and no Python
+    RDD (with its Python worker tasks) backs any scan of it."""
+    import pyarrow as pa
+
     from ..queryset import query_term_rows
 
-    return spark.createDataFrame(
-        rows if rows is not None else query_term_rows(),
-        schema="query_id int, term string, k int",
-    )
+    rows = list(rows if rows is not None else query_term_rows())
+    qids, terms, ks = zip(*rows) if rows else ((), (), ())
+    return spark.createDataFrame(pa.table({
+        "query_id": pa.array(qids, pa.int32()),
+        "term": pa.array(terms, pa.string()),
+        "k": pa.array(ks, pa.int32()),
+    }))
 
 
 def score_bm25_join(qterms: DataFrame, tfreqs: DataFrame, lex: DataFrame,

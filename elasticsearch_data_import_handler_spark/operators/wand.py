@@ -2,12 +2,15 @@
 
 Query plan (SURVEY.md §3.4):
 
-  lexicon (pruned to query terms, broadcast)
-    → postings scan, partition-pruned by bucket(term) + term filter
-    → broadcast-join query terms onto posting rows
+  postings scan, partition-pruned by bucket(term) + term filter
+    → broadcast-join the lexicon, pruned to the query terms (idf)
+    → broadcast-join the query terms (query_id, k)
     → groupBy(query_id, salt) [cogrouped with the tombstone frame keyed the
-      same way] .applyInPandas(score_shard)          ← the only shuffle
-    → global top-k merge (≤ S·k rows per query, window row_number)
+      same way] .applyInPandas(score_shard)     ← the only hash shuffle
+    → repartition(1): the shard top-ks (~S·k rows per query plus ties),
+      each carrying its k, ranked by one window row_number and sorted by
+      (query_id, rank) in that single partition — one exchange, no
+      range-partition sample
 
 Because every term's postings are sharded by the same doc-hash (build.py),
 the (query_id, salt) group holds a *complete, disjoint document subspace*:
@@ -44,7 +47,8 @@ from ..functions.varbyte import bm25_partial, decode_blocks
 
 _EMPTY_TOPK = pd.DataFrame({"query_id": pd.Series(dtype="int32"),
                             "doc_id": pd.Series(dtype="int64"),
-                            "score": pd.Series(dtype="float64")})
+                            "score": pd.Series(dtype="float64"),
+                            "k": pd.Series(dtype="int32")})
 
 
 def _score_shard(pdf: pd.DataFrame, ts_arr: np.ndarray | None) -> pd.DataFrame:
@@ -159,6 +163,7 @@ def _score_shard(pdf: pd.DataFrame, ts_arr: np.ndarray | None) -> pd.DataFrame:
         "query_id": np.full(idx.size, query_id, dtype=np.int32),
         "doc_id": uniq[idx],
         "score": totals[idx],
+        "k": np.full(idx.size, k, dtype=np.int32),
     })
 
 
@@ -191,16 +196,18 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
 
     if qterms is None:
         qterms = query_terms_df(spark)
-    # one bounded collect (|queries|×|terms| rows) feeds both the pruned
-    # postings scan and the query-bucket count — no extra jobs
-    qt_rows = qterms.select("query_id", "term").distinct().collect()
+    # one bounded collect (|queries|×|terms| rows, deduplicated by the sets
+    # below) feeds both the pruned postings scan and the query-bucket count.
+    # On a query_terms_df frame (a LocalRelation) it runs no Spark job.
+    qt_rows = qterms.select("query_id", "term").collect()
     terms = sorted({r["term"] for r in qt_rows})
     n_queries = len({r["query_id"] for r in qt_rows})
     post = reader.postings_for_terms(terms)
-    q_lex = qterms.join(reader.lexicon().select("term", "idf"), "term")
-    joined = post.join(F.broadcast(q_lex), "term").withColumn(
-        "avgdl", F.lit(reader.avgdl_value()))
-    schema = "query_id int, doc_id bigint, score double"
+    lex = reader.lexicon().select("term", "idf").filter(F.col("term").isin(terms))
+    joined = (post.join(F.broadcast(lex), "term")
+              .join(F.broadcast(qterms), "term")
+              .withColumn("avgdl", F.lit(reader.avgdl_value())))
+    schema = "query_id int, doc_id bigint, score double, k int"
     tomb = reader.tombstones_df()
     if tomb is None:
         shard_topk = joined.groupBy("query_id", "salt").applyInPandas(
@@ -234,13 +241,14 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
             .cogroup(tomb_keyed.groupBy("__ts_qbucket", "__ts_salt"))
             .applyInPandas(_score_cogrouped, schema=schema)
         )
-    with_k = shard_topk.join(
-        F.broadcast(qterms.select("query_id", "k").distinct()), "query_id")
     if candidates:
-        return with_k
+        return shard_topk
+    # the shard top-ks are ~S·k rows per query (plus ties): one partition
+    # satisfies both the window's clustering and the final sort, so neither
+    # shuffles again
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     out = (
-        with_k
+        shard_topk.repartition(1)
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= F.col("k"))
         .select("query_id", "rank", "doc_id", "score")

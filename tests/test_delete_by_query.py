@@ -7,7 +7,12 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from elasticsearch_data_import_handler_spark.operators.dedup import dedup_latest
 from elasticsearch_data_import_handler_spark.operators.docapi import explain_score
+from elasticsearch_data_import_handler_spark.operators.scoring import (
+    bm25_topk,
+    query_terms_df,
+)
 from elasticsearch_data_import_handler_spark.operators.search import multi_match
 from elasticsearch_data_import_handler_spark.operators.textsearch import (
     bool_query,
@@ -21,6 +26,7 @@ from elasticsearch_data_import_handler_spark.plans.build import (
     build_index,
     compact_index,
     delete_by_query,
+    docs_versioned,
 )
 from elasticsearch_data_import_handler_spark.plans.state import read_lineage, read_state
 from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
@@ -43,11 +49,6 @@ def deleted_and_clean(spark, tmp_path_factory):
 
     # the reference index: never contained the victims at all.  Keep the
     # SAME shard/stats layout by building from the same pages minus victims
-    from elasticsearch_data_import_handler_spark.operators.dedup import (
-        dedup_latest)
-    from elasticsearch_data_import_handler_spark.plans.build import (
-        docs_versioned)
-
     keep_urls = (docs_versioned(dedup_latest(pages))
                  .filter(~F.col("doc_id").isin(list(victims)))
                  .select("url"))
@@ -116,6 +117,41 @@ def test_scorer_matches_clean_rebuild(spark, deleted_and_clean, scorer):
     assert want and got.keys() == want.keys()
     for k, vals in want.items():
         assert got[k] == pytest.approx(vals, abs=1e-6), k
+
+
+# one mixed batch: no query term in the lexicon; a k=1 query whose top score
+# is tied (t0126's two best live docs score equally, shown by the k=2 twin);
+# one term repeated in a query's rows
+EDGE_ROWS = [(0, "zzzunknown", 10), (0, "qqqmissing", 10),
+             (1, "t0126", 1), (3, "t0126", 2),
+             (2, "spark", 5), (2, "spark", 5), (2, "sql", 5)]
+
+
+@pytest.mark.parametrize("which", ["deleted", "clean"])
+def test_wand_k_edge_cases_match_join_scorer(spark, deleted_and_clean, which):
+    """The k that each shard scorer carries ranks a mixed batch exactly as
+    the join scorer does, through the tombstone cogroup and without it."""
+    del_dir, clean_dir, victims = deleted_and_clean
+    reader = IndexReader(spark, del_dir if which == "deleted" else clean_dir)
+    qt = query_terms_df(spark, EDGE_ROWS)
+    live = (docs_versioned(dedup_latest(synth_pages(spark, 300, seed=42)))
+            .filter(~F.col("doc_id").isin(list(victims))))
+    want = bm25_topk(spark, live, qterms=qt, round_to=None).collect()
+    got = bm25_topk_wand(spark, reader, qterms=qt).collect()
+    assert [r[:3] for r in got] == [r[:3] for r in want]
+    assert [r.score for r in got] == pytest.approx(
+        [r.score for r in want], abs=1e-6)
+    tied = [r for r in want if r.query_id == 3]
+    assert len(tied) == 2 and tied[0].score == tied[1].score
+    assert {r.query_id for r in want} == {1, 2, 3}
+
+    cands = bm25_topk_wand(spark, reader, qterms=qt, candidates=True)
+    assert cands.columns == ["query_id", "doc_id", "score", "k"]
+    rows = cands.collect()
+    assert {(r.query_id, r.k) for r in rows} == {(1, 1), (2, 5), (3, 2)}
+    # tie-inclusive: both tied docs stay candidates of the k=1 query
+    assert {r.doc_id for r in tied} <= {r.doc_id for r in rows
+                                        if r.query_id == 1}
 
 
 def test_delete_updates_stats_and_lineage(spark, deleted_and_clean):

@@ -188,3 +188,21 @@ def test_rescore_only_reorders_window(spark):
     # doc 12: 1.0 + 2.5 = 3.5 → promoted to rank 1; same 3 docs, no growth
     assert out[12] == (1, 3.5) and out[10] == (2, 3.0) and out[11] == (3, 2.0)
     assert len(out) == 3
+
+
+def test_gate_reader_cache_keyed_on_application(monkeypatch):
+    """A session started after another stopped can reuse its id(); the gate
+    reader cache must hand it a fresh reader, never one bound to the dead
+    session — and must reuse the reader within one application."""
+    from types import SimpleNamespace
+
+    import __spark_entry__ as m
+    import elasticsearch_data_import_handler_spark.plans.build as B
+
+    monkeypatch.setattr(B, "IndexReader", lambda spark, d: object())
+    monkeypatch.setattr(m, "_GATE_READERS", {})
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-1"))
+    first = m._gate_reader(spark, "idx")
+    assert m._gate_reader(spark, "idx") is first
+    spark.sparkContext.applicationId = "app-2"  # new session, same id()
+    assert m._gate_reader(spark, "idx") is not first

@@ -132,6 +132,54 @@ def test_wand_cogrouped_tombstones_no_driver_collect(spark, tmp_path):
     assert "FlatMapCoGroupsInPandas" in plan, plan
 
 
+def _jobs_in_group(spark, group, action):
+    """Run ``action`` under its own job group → (its Spark job count, result)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_wand_single_query_job_budget(spark, tmp_path):
+    """A warm single-query WAND request on a clean index runs at most 5
+    Spark jobs: the query terms are a driver-local LocalRelation (collecting
+    them runs none), the scorer groups take the one hash shuffle, and the
+    shard top-ks are ranked and sorted in a single partition — no
+    range-partition sample, no second hash shuffle."""
+    from elasticsearch_data_import_handler_spark.operators.scoring import (
+        query_terms_df)
+    from elasticsearch_data_import_handler_spark.operators.wand import (
+        bm25_topk_wand)
+    from elasticsearch_data_import_handler_spark.plans.build import (
+        IndexReader, build_index)
+    from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
+
+    d = str(tmp_path / "idx")
+    build_index(spark, synth_pages(spark, 150, seed=42), d, tau=100,
+                n_buckets=4)
+    reader = IndexReader(spark, d)
+    rows = [(0, "spark", 10), (0, "sql", 10)]
+    n, got = _jobs_in_group(spark, "wand-qterms",
+                            query_terms_df(spark, rows).collect)
+    assert n == 0 and len(got) == 2
+
+    def request():
+        df = bm25_topk_wand(spark, reader, qterms=query_terms_df(spark, rows))
+        return df, df.collect()
+
+    request()  # warm: the reader's lexicon and stats are read once
+    n, (df, hits) = _jobs_in_group(spark, "wand-single", request)
+    assert hits and n <= 5, n
+    plan = _plan(df).split("== Initial Plan ==")[0]  # AQE's final plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("Exchange SinglePartition") == 1, plan
+    assert "rangepartitioning" not in plan, plan
+
+
 def test_interval_join_is_equi_not_nested_loop(spark, sf_dir):
     """The bucketed range join must plan as a hash equi-join on the bucket
     key — a naive range predicate would be BroadcastNestedLoopJoin."""
