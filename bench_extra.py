@@ -13,6 +13,13 @@ Subcommands:
   build                 time build_index + bm25 query batch at c8 on the
                         cached .bench corpus (the index_build /
                         bm25_query_batch bench entries).
+  wand                  time the block-max WAND kernel in-process, with no
+                        Spark in the timed loop, over the (query-bucket,
+                        salt) groups of the seeded perfbench search index's
+                        first 300-query batch (--seed, default 7): ns per
+                        decoded posting and groups/s, median of --reps
+                        passes.  Spark only builds the index and writes the
+                        groups once, under .bench/.
 """
 
 from __future__ import annotations
@@ -139,20 +146,96 @@ def cmd_build(cpus=8, reps=1):
     print(json.dumps(out))
 
 
+def cmd_wand(seed=7, reps=5, cpus=4):
+    import shutil
+    from statistics import median
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    from elasticsearch_data_import_handler_spark.operators import wand
+    from elasticsearch_data_import_handler_spark.operators.scoring import (
+        query_terms_df)
+    from elasticsearch_data_import_handler_spark.plans.build import (
+        IndexReader, build_index)
+    from elasticsearch_data_import_handler_spark.queryset import query_terms
+    from elasticsearch_data_import_handler_spark.session import get_spark
+
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    from gen import Inputs
+
+    work = os.path.join(REPO, ".bench", f"wand_seed{seed}")
+    inp = Inputs(os.path.join(work, "perfbench"), seed)
+    corpus, reqs = inp.search_corpus(), inp.search_requests()
+    queries = reqs["batch"][0]["queries"]
+    groups_dir = os.path.join(work, "groups")
+    spark = get_spark("bench-extra-wand", cpus=cpus)
+    try:
+        idx = os.path.join(work, "idx")
+        shutil.rmtree(idx, ignore_errors=True)
+        build_index(spark, spark.read.parquet(corpus), idx)
+        reader = IndexReader(spark, idx)
+        avgdl = reader.avgdl_value()
+        rows = [(q, t, k) for q, text, k in queries for t in query_terms(text)]
+        scored, _ = wand._scorer_input(spark, reader, query_terms_df(spark, rows))
+        scored.write.mode("overwrite").parquet(groups_dir)
+    finally:
+        spark.stop()
+    table = pads.dataset(groups_dir).to_table()
+    qb, salt = table["__qbucket"].to_numpy(), table["salt"].to_numpy()
+    groups = [table.filter(pa.array((qb == b) & (salt == s)))
+              for b, s in sorted(set(zip(qb.tolist(), salt.tolist())))]
+
+    decoded = 0
+    run = wand.decode_posting_runs
+
+    def counting(*a):
+        nonlocal decoded
+        out = run(*a)
+        decoded += out[0].size
+        return out
+
+    wand.decode_posting_runs = counting
+    try:
+        for g in groups:
+            wand._score_group(g, None, avgdl)
+    finally:
+        wand.decode_posting_runs = run
+    secs = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        for g in groups:
+            wand._score_group(g, None, avgdl)
+        secs.append(time.perf_counter() - t0)
+    s = median(secs)
+    print(json.dumps({
+        "seed": seed, "queries": len(queries), "groups": len(groups),
+        "rows": table.num_rows,
+        "postings_in_groups": int(pc.sum(table["n_docs"]).as_py()),
+        "postings_decoded": decoded, "kernel_s": [round(x, 4) for x in secs],
+        "ns_per_decoded_posting": round(1e9 * s / max(1, decoded), 1),
+        "groups_per_s": round(len(groups) / s, 1)}))
+
+
 if __name__ == "__main__":
     import argparse
 
     ap = argparse.ArgumentParser()
-    ap.add_argument("cmd", choices=["suite", "plans", "build"])
+    ap.add_argument("cmd", choices=["suite", "plans", "build", "wand"])
     ap.add_argument("names", nargs="*")
     ap.add_argument("--tag", default="before")
-    ap.add_argument("--reps", type=int, default=1)
+    ap.add_argument("--reps", type=int, default=None)
     ap.add_argument("--cpus", type=int, default=8)
+    ap.add_argument("--seed", type=int, default=7)
     a = ap.parse_args()
     names = a.names or NAMES
     if a.cmd == "suite":
-        cmd_suite(names, reps=a.reps)
+        cmd_suite(names, reps=a.reps or 1)
     elif a.cmd == "plans":
         cmd_plans(names, a.tag)
+    elif a.cmd == "wand":
+        cmd_wand(seed=a.seed, reps=a.reps or 5,
+                 cpus=min(a.cpus, os.cpu_count() or 1))
     else:
-        cmd_build(cpus=a.cpus, reps=a.reps)
+        cmd_build(cpus=a.cpus, reps=a.reps or 1)

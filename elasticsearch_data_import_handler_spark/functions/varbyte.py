@@ -7,9 +7,10 @@ streams are varbyte'd without deltas.  Blocks of ``BLOCK_SIZE`` postings carry
 ``(max_doc, max_tf, max_score)`` so the query path can do block-max WAND
 pruning (Ding & Suel, SIGIR'11 — public literature) without decoding.
 
-Everything here is numpy-vectorized: these kernels run inside
-``applyInPandas`` groups on executors, so no per-row Python is allowed
-(BASELINE.json input_hint mandate).
+Everything here is numpy-vectorized: these kernels run inside Arrow UDFs on
+executors, so no per-row Python is allowed (BASELINE.json input_hint
+mandate).  The decoders take many posting lists (or many blocks of them) per
+call, read straight from the Arrow buffers of the binary columns.
 """
 
 from __future__ import annotations
@@ -235,60 +236,68 @@ def encode_posting_batch(d: np.ndarray, t: np.ndarray, dl: np.ndarray,
     return out
 
 
-def _cumsum_with_block_resets(vals: np.ndarray, starts_idx: np.ndarray) -> np.ndarray:
-    """Given a delta stream whose block-first values are absolute, return the
-    absolute values — vectorized cumsum with resets at block starts."""
-    c = np.cumsum(vals, dtype=np.uint64)
-    # value at position i in block starting at s: c[i] - c[s] + vals[s]
-    block_of = np.searchsorted(starts_idx, np.arange(vals.size), side="right") - 1
-    base = (c[starts_idx] - vals[starts_idx])[block_of]
-    return c - base
+def gather_ranges(buf: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """The byte ranges ``[starts[i], ends[i])`` of ``buf``, concatenated in
+    one fancy-index gather (no per-range Python)."""
+    lens = np.asarray(ends, dtype=np.int64) - starts
+    shift = np.repeat(starts - (np.cumsum(lens) - lens), lens)
+    return buf[np.arange(shift.size) + shift]
 
 
-def decode_posting_list(doc_ids_vb: bytes, tfs_vb: bytes, dls_vb: bytes,
-                        n_docs: int | None = None):
-    """Full decode → (doc_ids int64 asc, tfs, dls)."""
+def decode_doc_runs(doc_ids_vb, run_lens=None) -> np.ndarray:
+    """Doc ids of many *runs* decoded in one pass → int64.
+
+    ``doc_ids_vb`` holds the doc-id bytes of consecutive runs; a run is one or
+    more whole blocks of one posting list, starting at a block boundary, and
+    holds ``run_lens[i]`` postings (None: one run).  Inside a run the delta
+    chain restarts every ``BLOCK_SIZE`` values, at the block-first absolutes
+    the encoder wrote."""
     stream = varbyte_decode(doc_ids_vb)
     n = stream.size
-    starts = _block_starts(n)
-    u = _cumsum_with_block_resets(stream, starts)
-    d = (u ^ np.uint64(1 << 63)).astype(np.int64)
-    t = varbyte_decode(tfs_vb).astype(np.int64)
-    dl = varbyte_decode(dls_vb).astype(np.int64)
-    return d, t, dl
+    lens = np.asarray([n] if run_lens is None else run_lens, dtype=np.int64)
+    pos = np.arange(n) - np.repeat(np.cumsum(lens) - lens, lens)  # in its run
+    resets = np.flatnonzero(pos % BLOCK_SIZE == 0)
+    c = np.cumsum(stream, dtype=np.uint64)
+    # value i of the block starting at s: c[i] - c[s] + stream[s]
+    base = np.repeat(c[resets] - stream[resets], np.diff(resets, append=n))
+    return ((c - base) ^ np.uint64(1 << 63)).astype(np.int64)
 
 
-def decode_blocks(doc_ids_vb: bytes, tfs_vb: bytes, dls_vb: bytes,
-                  off_d: np.ndarray, off_t: np.ndarray, off_l: np.ndarray,
-                  n_docs: int, block_idx: np.ndarray):
-    """Selective decode of the given block indices (sorted) → (d, t, dl).
+def decode_posting_runs(doc_ids_vb, tfs_vb, dls_vb, run_lens=None):
+    """The three streams of many runs (see :func:`decode_doc_runs`) → (doc_ids
+    int64, tfs int64, dls int64), concatenated in run order.  A block-max
+    scorer gathers its kept blocks' byte ranges first (:func:`gather_ranges`);
+    whole posting lists already lie back to back in an Arrow binary
+    column."""
+    return (decode_doc_runs(doc_ids_vb, run_lens),
+            varbyte_decode(tfs_vb).astype(np.int64),
+            varbyte_decode(dls_vb).astype(np.int64))
 
-    Slices the chosen blocks' byte ranges out of each stream, decodes them in
-    one vectorized pass, and rebuilds absolutes per block — never touching
-    skipped blocks' bytes (the I/O/CPU saving block-max pruning buys).
-    """
-    block_idx = np.asarray(block_idx, dtype=np.int64)
-    if block_idx.size == 0:
-        return (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64))
-    n_blocks = off_d.size
-    ends_d = np.concatenate((off_d[1:], [len(doc_ids_vb)]))
-    ends_t = np.concatenate((off_t[1:], [len(tfs_vb)]))
-    ends_l = np.concatenate((off_l[1:], [len(dls_vb)]))
 
-    def _sel(buf, offs, ends):
-        return b"".join(bytes(buf[offs[b]:ends[b]]) for b in block_idx)
+def decode_posting_list(doc_ids_vb: bytes, tfs_vb: bytes, dls_vb: bytes):
+    """Full decode of one posting list → (doc_ids int64 asc, tfs, dls)."""
+    return decode_posting_runs(doc_ids_vb, tfs_vb, dls_vb)
 
-    stream = varbyte_decode(_sel(doc_ids_vb, off_d, ends_d))
-    # block lengths in values: BLOCK_SIZE except possibly the last block
-    lens = np.full(n_blocks, BLOCK_SIZE, dtype=np.int64)
-    lens[-1] = n_docs - BLOCK_SIZE * (n_blocks - 1)
-    sel_lens = lens[block_idx]
-    starts = np.concatenate(([0], np.cumsum(sel_lens)[:-1]))
-    u = _cumsum_with_block_resets(stream, starts)
-    d = (u ^ np.uint64(1 << 63)).astype(np.int64)
-    t = varbyte_decode(_sel(tfs_vb, off_t, ends_t)).astype(np.int64)
-    dl = varbyte_decode(_sel(dls_vb, off_l, ends_l)).astype(np.int64)
-    return d, t, dl
+
+def arrow_binary(arr) -> tuple[np.ndarray, np.ndarray]:
+    """Zero-copy (offsets int64, data uint8) of a binary Arrow array: value i
+    is ``data[offsets[i]:offsets[i + 1]]``."""
+    import pyarrow as pa
+
+    _, off_buf, data_buf = arr.buffers()
+    if off_buf is None or len(arr) == 0:
+        return np.zeros(1, np.int64), np.empty(0, np.uint8)
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(off_buf, width)[arr.offset:arr.offset + len(arr) + 1]
+    data = (np.frombuffer(data_buf, np.uint8) if data_buf is not None
+            else np.empty(0, np.uint8))
+    return offs.astype(np.int64), data
+
+
+def arrow_list(arr) -> tuple[np.ndarray, np.ndarray]:
+    """Zero-copy (offsets, values) of a list<int> Arrow array: list i is
+    ``values[offsets[i]:offsets[i + 1]]``."""
+    return arr.offsets.to_numpy(), arr.values.to_numpy()
 
 
 def bm25_partial(tfs: np.ndarray, doc_lens: np.ndarray, idf: float, avgdl: float,

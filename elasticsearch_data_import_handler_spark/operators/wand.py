@@ -5,180 +5,246 @@ Query plan (SURVEY.md §3.4):
   postings scan, partition-pruned by bucket(term) + term filter
     → broadcast-join the lexicon, pruned to the query terms (idf)
     → broadcast-join the query terms (query_id, k)
-    → groupBy(query_id, salt) [cogrouped with the tombstone frame keyed the
-      same way] .applyInPandas(score_shard)     ← the only hash shuffle
+    → project to the kernel's columns, add __qbucket = pmod(xxhash64(query_id),
+      round(√Q))
+    → groupBy(__qbucket, salt) [cogrouped with the tombstone frame keyed the
+      same way] .applyInArrow(_score_group)      ← the only hash shuffle
     → repartition(1): the shard top-ks (~S·k rows per query plus ties),
       each carrying its k, ranked by one window row_number and sorted by
       (query_id, rank) in that single partition — one exchange, no
       range-partition sample
 
 Because every term's postings are sharded by the same doc-hash (build.py),
-the (query_id, salt) group holds a *complete, disjoint document subspace*:
+the rows of one (query, salt) hold a *complete, disjoint document subspace*:
 all query terms' postings for exactly the docs with pmod(xxhash64(doc_id), S)
 == salt.  WAND therefore runs shard-locally with no posting replication, and
-the global top-k is an exact merge of shard top-ks.  Group size is bounded
-by |query terms| × τ postings — constant in corpus size.
+the global top-k is an exact merge of shard top-ks.  A (query-bucket, salt)
+group holds about √Q queries' rows, so there are √Q·S scorer calls per batch
+(one Python boundary crossing each, not one per query) and a group is bounded
+by √Q × |query terms| × τ postings — constant in corpus size.  A single query
+is one bucket.
 
 Tombstones reach the scorer *distributed*: the tombstone frame is keyed by
-(query_id, salt) — its salt is the same doc-hash shard, crossed with the
-(tiny) query-id set — and cogrouped with the postings groups, so each shard
-scorer receives exactly its shard's deleted ids as a numpy column.  Nothing
-is collected on the driver (the round-1 design shipped a driver-side set in
-the UDF closure; at web scale that set is unbounded).
+(query-bucket, salt) — its salt is the same doc-hash shard, crossed with the
+√Q bucket ids — and cogrouped with the postings groups, so each scorer call
+receives exactly its shard's deleted ids as an Arrow column.  Nothing is
+collected on the driver (the round-1 design shipped a driver-side set in the
+UDF closure; at web scale that set is unbounded).  Replicating each
+tombstone per *query* instead of per bucket would shuffle |tombstones| ×
+|queries| rows.
 
-The shard scorer is the vectorized-exact block-max variant (after Ding &
-Suel's BMW, SIGIR'11): seed a valid lower bound θ from the best block of the
-strongest term (decoded true partial scores are lower bounds of true totals;
-the k-th largest of any subset's true scores lower-bounds the k-th overall),
-then skip every block b of term t with
-    block_max(t, b) + Σ_{t'≠t} global_max(t') < θ
-— any doc in such a block provably scores < θ, and a doc scored *partially*
-because one of its blocks was skipped also provably scores < θ, so the final
-top-k is exact.  All block math is numpy; no per-posting Python anywhere.
+The scorer is the vectorized-exact block-max variant (after Ding & Suel's
+BMW, SIGIR'11); :func:`_score_group` states the bound and why it is safe.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..functions.varbyte import bm25_partial, decode_blocks
+from ..functions.varbyte import (
+    BLOCK_SIZE, arrow_binary, arrow_list, bm25_partial, decode_posting_runs,
+    gather_ranges)
 
-_EMPTY_TOPK = pd.DataFrame({"query_id": pd.Series(dtype="int32"),
-                            "doc_id": pd.Series(dtype="int64"),
-                            "score": pd.Series(dtype="float64"),
-                            "k": pd.Series(dtype="int32")})
-
-
-def _score_shard(pdf: pd.DataFrame, ts_arr: np.ndarray | None) -> pd.DataFrame:
-    """Exact block-max WAND over one (query_id, salt) group.  ``ts_arr`` is
-    the sorted tombstoned doc_ids *of this salt shard* (or None) — delivered
-    by the cogroup, never materialized on the driver."""
-    if len(pdf) == 0:
-        return _EMPTY_TOPK
-    if ts_arr is not None and ts_arr.size == 0:
-        ts_arr = None
-    query_id = int(pdf["query_id"].iloc[0])
-    k = int(pdf["k"].iloc[0])
-    avgdl = float(pdf["avgdl"].iloc[0])
-    # deterministic float-reduction order: sort segment rows by (term, n_docs)
-    pdf = pdf.sort_values(["term", "n_docs"], kind="stable")
-    n_rows = len(pdf)
-    # column arrays extracted ONCE — pdf.iloc[i] row access is ~100× the cost
-    # of an array index and was the per-query Python overhead in large
-    # batches (round-4 judge advice #8)
-    c_bmtf = pdf["block_max_tf"].to_numpy()
-    c_bmdl = pdf["block_min_dl"].to_numpy()
-    c_idf = pdf["idf"].to_numpy(np.float64)
-    c_nd = pdf["n_docs"].to_numpy(np.int64)
-    c_dvb, c_tvb, c_lvb = (pdf[c].to_numpy()
-                           for c in ("doc_ids_vb", "tfs_vb", "dls_vb"))
-    c_od, c_ot, c_ol = (pdf[c].to_numpy() for c in ("off_d", "off_t", "off_l"))
-    # Block upper bounds computed with *current* idf/avgdl from the
-    # stats-independent (max_tf, min_dl) metadata — stays correct as
-    # incremental batches shift corpus statistics.  ONE concatenated
-    # bm25_partial pass over every row's block arrays (idf repeated
-    # per-block broadcasts elementwise — bit-identical to the per-row
-    # scalar-idf evaluation), then reduceat maxima per row.
-    lens = np.fromiter((len(a) for a in c_bmtf), dtype=np.int64, count=n_rows)
-    starts = np.zeros(n_rows, dtype=np.int64)
-    if n_rows > 1:
-        np.cumsum(lens[:-1], out=starts[1:])
-    if lens.sum():
-        ub_cat = bm25_partial(
-            np.concatenate([np.asarray(a, dtype=np.float64) for a in c_bmtf]),
-            np.concatenate([np.asarray(a, dtype=np.float64) for a in c_bmdl]),
-            np.repeat(c_idf, lens), avgdl)
-    else:
-        ub_cat = np.empty(0, dtype=np.float64)
-    bounds = np.cumsum(lens)
-    row_ubs = np.split(ub_cat, bounds[:-1])
-    gmax_row = np.zeros(n_rows, dtype=np.float64)
-    nz = lens > 0
-    if ub_cat.size:
-        # consecutive nonzero-row starts bound exactly each nonzero row's
-        # slice (zero-length rows contribute no elements in between)
-        gmax_row[nz] = np.maximum.reduceat(ub_cat, starts[nz])
-    # per-term global max: a doc appears in ≤1 segment row per term
-    terms = pdf["term"].to_numpy()
-    _, inv = np.unique(terms, return_inverse=True)
-    term_max_arr = np.zeros(inv.max() + 1, dtype=np.float64)
-    np.maximum.at(term_max_arr, inv, gmax_row)
-    total_max = float(term_max_arr.sum())
-    other_sum_row = total_max - term_max_arr[inv]
-    # --- seed θ: decode the single best block of the strongest row and
-    # take the k-th largest *achieved* partial score (a valid lower bound)
-    theta = 0.0
-    if n_rows > 0:
-        i_star = int(np.argmax(gmax_row))
-        bms = row_ubs[i_star]
-        if bms.size:
-            b_star = int(np.argmax(bms))
-            d, t, dl = decode_blocks(
-                c_dvb[i_star], c_tvb[i_star], c_lvb[i_star],
-                np.asarray(c_od[i_star]), np.asarray(c_ot[i_star]),
-                np.asarray(c_ol[i_star]), int(c_nd[i_star]),
-                np.array([b_star]),
-            )
-            seed = bm25_partial(t, dl, float(c_idf[i_star]), avgdl)
-            if ts_arr is not None:
-                seed = seed[~np.isin(d, ts_arr)]
-            if seed.size >= k:
-                theta = float(np.partition(seed, -k)[-k])
-    # --- decode surviving blocks, score vectorized (decode_blocks stays
-    # per-row: each row carries its own variable-length byte blobs)
-    all_docs, all_scores = [], []
-    for i in range(n_rows):
-        keep = np.nonzero(row_ubs[i] + other_sum_row[i] >= theta)[0]
-        if keep.size == 0:
-            continue
-        d, t, dl = decode_blocks(
-            c_dvb[i], c_tvb[i], c_lvb[i],
-            np.asarray(c_od[i]), np.asarray(c_ot[i]),
-            np.asarray(c_ol[i]), int(c_nd[i]), keep,
-        )
-        all_docs.append(d)
-        all_scores.append(bm25_partial(t, dl, float(c_idf[i]), avgdl))
-    if not all_docs:
-        return _EMPTY_TOPK
-    docs = np.concatenate(all_docs)
-    scores = np.concatenate(all_scores)
-    order = np.argsort(docs, kind="stable")
-    docs, scores = docs[order], scores[order]
-    uniq, starts = np.unique(docs, return_index=True)
-    totals = np.add.reduceat(scores, starts)
-    if ts_arr is not None:
-        m = ~np.isin(uniq, ts_arr)
-        uniq, totals = uniq[m], totals[m]
-    idx = np.lexsort((uniq, -totals))
-    if uniq.size > k:
-        # tie-inclusive cut: keep everything scoring >= the k-th score so
-        # downstream re-ranking under a different doc-id order (e.g. the
-        # oracle gate's native ids) still sees every tied candidate
-        cutoff = totals[idx[k - 1]]
-        n_keep = int((totals >= cutoff).sum())
-        idx = idx[:max(k, n_keep)]
-    return pd.DataFrame({
-        "query_id": np.full(idx.size, query_id, dtype=np.int32),
-        "doc_id": uniq[idx],
-        "score": totals[idx],
-        "k": np.full(idx.size, k, dtype=np.int32),
-    })
+# what the scorer reads; nothing else crosses the shuffle
+_KERNEL_COLS = ("query_id", "k", "term", "n_docs", "idf", "block_max_tf",
+                "block_min_dl", "off_d", "off_t", "off_l", "doc_ids_vb",
+                "tfs_vb", "dls_vb")
+_STREAMS = (("doc_ids_vb", "off_d"), ("tfs_vb", "off_t"), ("dls_vb", "off_l"))
+_TOPK = pa.schema([("query_id", pa.int32()), ("doc_id", pa.int64()),
+                   ("score", pa.float64()), ("k", pa.int32())])
 
 
-def _score_plain(pdf: pd.DataFrame) -> pd.DataFrame:
-    return _score_shard(pdf, None)
+def _starts(keys: np.ndarray) -> np.ndarray:
+    """Start index of each run of equal values in ``keys``."""
+    new = np.ones(keys.size, dtype=bool)
+    new[1:] = keys[1:] != keys[:-1]
+    return np.flatnonzero(new)
 
 
-def _score_cogrouped(pdf: pd.DataFrame, tomb: pd.DataFrame) -> pd.DataFrame:
-    """One (query-bucket, salt) group holding MULTIPLE queries' posting rows
-    plus the shard's tombstones exactly once: WAND runs per query inside."""
-    if len(pdf) == 0:
-        return _EMPTY_TOPK
-    ts = np.sort(tomb["__ts_doc_id"].to_numpy(np.int64)) if len(tomb) else None
-    outs = [_score_shard(sub, ts) for _, sub in pdf.groupby("query_id", sort=True)]
-    return pd.concat(outs, ignore_index=True) if outs else _EMPTY_TOPK
+def _score_group(table: pa.Table, tombstones: pa.Table | None,
+                 avgdl: float) -> pa.Table:
+    """Exact block-max WAND for every query of one (query-bucket, salt)
+    group, in one numpy pass → (query_id, doc_id, score, k) tie-inclusive
+    shard top-ks.  ``table`` rows are (query, term, segment) posting rows;
+    ``tombstones`` holds the shard's deleted ids (``__ts_doc_id``) or None.
+
+    For each query:
+
+    * Rows are ordered by (term, n_docs), and each doc's partials are summed
+      in that order (stable lexsort on (query, doc), then reduceat), so
+      scores do not depend on how the shuffle ordered the group.
+    * Block upper bounds ub(t, b) come from the stats-independent (max_tf,
+      min_dl) metadata with current idf/avgdl, so they stay sound as
+      incremental batches shift corpus statistics.  A doc sits in at most
+      one segment row per term, so max(t) — the largest bound over t's
+      segment rows — bounds its t partial.
+    * θ is seeded from the best block of the strongest row: the k-th largest
+      live partial in it.  Partials are non-negative (idf ≥ 0), so each of
+      those k docs totals at least θ, and θ ≤ the k-th best total.
+    * Block b of a row of term t is skipped when
+          m_t·ub(t, b) + Σ_{t'≠t} m_t'·max(t') < θ,
+      where m_t counts the copies of the query's t rows (a query that lists
+      a term twice scores it twice).  Copies are identical rows, so all m_t
+      copies of b are skipped together, and any doc in b totals < θ.
+      Scored partially through its other rows, it still stays below the k
+      docs that reach θ, so the tie-inclusive cut never reaches it.
+    * Only the seed term t* can lose blocks: for any other t the sum holds
+      m_t*·max(t*) ≥ θ.  So every doc that reaches θ is scored in full.  A
+      repeated seed term alone would be safe even unweighted, since it
+      scales θ's docs and the skipped docs by the same m; a repeated
+      non-seed term would not — unweighted, its m-fold share of a skipped
+      seed block's docs goes uncounted.  With every m_t = 1 the rule is the
+      plain BMW bound.
+
+    Every row, block and posting of the group goes through single numpy
+    calls: one bm25_partial over all block bounds, one varbyte pass over the
+    seed blocks and one over every kept block of every query."""
+    n = table.num_rows
+    if n == 0:
+        return _TOPK.empty_table()
+    col = {}
+    for c in _KERNEL_COLS:  # one Arrow array each, zero-copy for one chunk
+        a = table.column(c)
+        col[c] = a.chunk(0) if a.num_chunks == 1 else a.combine_chunks()
+    # rows in (query, term, n_docs) order
+    qids, q_of = np.unique(col["query_id"].to_numpy(), return_inverse=True)
+    term_of = pc.rank(col["term"], tiebreaker="dense").to_numpy()
+    order = np.lexsort((col["n_docs"].to_numpy(), term_of, q_of))
+    q_of, term_of = q_of[order], term_of[order]
+    n_docs = col["n_docs"].to_numpy().astype(np.int64)[order]
+    idf = col["idf"].to_numpy()[order]
+    n_q = qids.size
+    q_start = _starts(q_of)
+    k = col["k"].to_numpy().astype(np.int64)[order][q_start]
+    qt_new = np.ones(n, dtype=bool)
+    qt_new[1:] = (q_of[1:] != q_of[:-1]) | (term_of[1:] != term_of[:-1])
+    qt_start = np.flatnonzero(qt_new)
+    qt_of = np.cumsum(qt_new) - 1
+    # m: a (query, term)'s rows over its distinct segment rows; the copies
+    # of a row carry byte-identical doc streams, so they share one code
+    seg = pc.dictionary_encode(col["doc_ids_vb"]).indices.to_numpy()[order]
+    distinct = np.unique(qt_of * n + seg) // n
+    m = (np.diff(qt_start, append=n) / np.bincount(distinct))[qt_of]
+
+    # every block of every row, in row order (a posting row holds >= 1 block)
+    tf_off, max_tf = arrow_list(col["block_max_tf"])
+    dl_off, min_dl = arrow_list(col["block_min_dl"])
+    nblk = np.diff(tf_off)[order]
+    blk_row = np.repeat(np.arange(n), nblk)
+    first = np.cumsum(nblk) - nblk
+    last = first + nblk - 1
+    j = np.arange(blk_row.size) - first[blk_row]
+
+    def per_block(off, vals):
+        return vals[off[:-1][order][blk_row] + j]
+
+    ub = bm25_partial(per_block(tf_off, max_tf), per_block(dl_off, min_dl),
+                      idf[blk_row], avgdl)
+    row_max = np.maximum.reduceat(ub, first)
+    w_max = m[qt_start] * np.maximum.reduceat(row_max, qt_start)
+    total = np.add.reduceat(w_max, _starts(q_of[qt_start]))
+    other = total[q_of] - w_max[qt_of]
+    bound = m[blk_row] * ub + other[blk_row]
+
+    # byte range of every block in each stream; the values per block
+    def ranges(vb, off_col):
+        boff, data = arrow_binary(col[vb])
+        lo = boff[:-1][order][blk_row] + per_block(*arrow_list(col[off_col]))
+        hi = np.append(lo[1:], 0)
+        hi[last] = boff[1:][order]
+        return data, lo, hi
+
+    streams = [ranges(vb, off_col) for vb, off_col in _STREAMS]
+    lens = np.full(blk_row.size, BLOCK_SIZE, dtype=np.int64)
+    lens[last] = n_docs - BLOCK_SIZE * (nblk - 1)
+    ts = (tombstones.column("__ts_doc_id").to_numpy()
+          if tombstones is not None and tombstones.num_rows else None)
+
+    def score_blocks(sel):
+        """(query, doc, partial) of every live posting of blocks ``sel``."""
+        d, tf, dl = decode_posting_runs(
+            *(gather_ranges(data, lo[sel], hi[sel]) for data, lo, hi in streams),
+            lens[sel])
+        rows = np.repeat(blk_row[sel], lens[sel])
+        p = bm25_partial(tf, dl, idf[rows], avgdl)
+        return q_of[rows], d, p
+
+    def live(q, d, s):
+        if ts is None:
+            return q, d, s
+        keep = ~np.isin(d, ts)
+        return q[keep], d[keep], s[keep]
+
+    def kth(q):
+        """Over entries sorted by query, then score descending: (index of
+        each query's k-th entry, -1 when it has fewer; its entry count)."""
+        lo = np.searchsorted(q, np.arange(n_q))
+        hi = np.searchsorted(q, np.arange(n_q), side="right")
+        at = lo + k - 1
+        return np.where((k >= 1) & (at < hi), at, -1), hi - lo
+
+    # θ per query: the k-th best live partial of its strongest row's best block
+    q_max = np.maximum.reduceat(row_max, q_start)
+    cand = np.flatnonzero(row_max == q_max[q_of])
+    seed_row = np.zeros(n, dtype=bool)
+    seed_row[cand[_starts(q_of[cand])]] = True
+    cand = np.flatnonzero(seed_row[blk_row] & (ub == row_max[blk_row]))
+    sq, _, sp = live(*score_blocks(cand[_starts(blk_row[cand])]))
+    o = np.lexsort((-sp, sq))
+    at, _ = kth(sq[o])
+    theta = np.zeros(n_q)
+    theta[at >= 0] = sp[o][at[at >= 0]]
+
+    # every kept block of every query, summed per (query, doc)
+    q, d, p = score_blocks(np.flatnonzero(bound >= theta[q_of][blk_row]))
+    o = np.lexsort((d, q))
+    q, d, p = q[o], d[o], p[o]
+    new = np.ones(q.size, dtype=bool)
+    new[1:] = (q[1:] != q[:-1]) | (d[1:] != d[:-1])
+    st = np.flatnonzero(new)
+    q, d, score = live(q[st], d[st], np.add.reduceat(p, st))
+    # tie-inclusive cut: keep everything scoring >= the k-th score so
+    # downstream re-ranking under a different doc-id order (e.g. the oracle
+    # gate's native ids) still sees every tied candidate
+    o = np.lexsort((-score, q))
+    q, d, score = q[o], d[o], score[o]
+    at, size = kth(q)
+    cut = (at >= 0) & (size > k)
+    cutoff = np.full(n_q, -np.inf)
+    cutoff[cut] = score[at[cut]]
+    keep = score >= cutoff[q]
+    return pa.table([qids[q[keep]].astype(np.int32), d[keep], score[keep],
+                     k[q[keep]].astype(np.int32)], schema=_TOPK)
+
+
+def _scorer_input(spark: SparkSession, reader, qterms: DataFrame | None
+                  ) -> tuple[DataFrame, int]:
+    """(the scorer's input rows keyed by (__qbucket, salt) and projected to
+    the kernel's columns, the query-bucket count round(√Q))."""
+    from .scoring import query_terms_df
+
+    if qterms is None:
+        qterms = query_terms_df(spark)
+    # one bounded collect (|queries|×|terms| rows, deduplicated by the sets
+    # below) feeds both the pruned postings scan and the query-bucket count.
+    # On a query_terms_df frame (a LocalRelation) it runs no Spark job.
+    qt_rows = qterms.select("query_id", "term").collect()
+    terms = sorted({r["term"] for r in qt_rows})
+    n_queries = len({r["query_id"] for r in qt_rows})
+    post = reader.postings_for_terms(terms)
+    lex = reader.lexicon().select("term", "idf").filter(F.col("term").isin(terms))
+    n_qb = max(1, int(round(n_queries ** 0.5)))
+    # one SQL-text projection: the same select built from Column objects
+    # costs ~100 more driver→JVM round trips, a visible share of the
+    # single-query latency
+    scored = (post.join(F.broadcast(lex), "term")
+              .join(F.broadcast(qterms), "term")
+              .selectExpr("cast(pmod(xxhash64(cast(query_id as bigint)), "
+                          f"{n_qb}) as int) AS __qbucket", "salt", *_KERNEL_COLS))
+    return scored, n_qb
 
 
 def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
@@ -192,41 +258,17 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
     (query_id, doc_id, score, k) so callers can rank under their own doc-id
     order (used by the oracle gate, which ranks by native table ids).
     """
-    from .scoring import query_terms_df
-
-    if qterms is None:
-        qterms = query_terms_df(spark)
-    # one bounded collect (|queries|×|terms| rows, deduplicated by the sets
-    # below) feeds both the pruned postings scan and the query-bucket count.
-    # On a query_terms_df frame (a LocalRelation) it runs no Spark job.
-    qt_rows = qterms.select("query_id", "term").collect()
-    terms = sorted({r["term"] for r in qt_rows})
-    n_queries = len({r["query_id"] for r in qt_rows})
-    post = reader.postings_for_terms(terms)
-    lex = reader.lexicon().select("term", "idf").filter(F.col("term").isin(terms))
-    joined = (post.join(F.broadcast(lex), "term")
-              .join(F.broadcast(qterms), "term")
-              .withColumn("avgdl", F.lit(reader.avgdl_value())))
+    scored, n_qb = _scorer_input(spark, reader, qterms)
+    avgdl = reader.avgdl_value()
     schema = "query_id int, doc_id bigint, score double, k int"
     tomb = reader.tombstones_df()
     if tomb is None:
-        shard_topk = joined.groupBy("query_id", "salt").applyInPandas(
-            _score_plain, schema=schema)
+        shard_topk = scored.groupBy("__qbucket", "salt").applyInArrow(
+            lambda t: _score_group(t, None, avgdl), schema=schema)
     else:
-        # Tombstones cogrouped with the postings groups on (query-BUCKET,
-        # salt), not (query_id, salt): replicating each tombstone row per
-        # query would shuffle |tombstones| × |queries| rows — multiplicative
-        # blow-up for batched querying over an unbounded delete set.  With
-        # B ≈ √|queries| buckets each tombstone travels B times while each
-        # group holds ~√|queries| queries' postings (still bounded by
-        # |terms|·τ per query) — the balanced replication/group-size point.
-        # The scorer iterates queries inside the group.  Fresh aliases guard
-        # against the Spark 4.1 shared-lineage cogroup pruning bug (see
-        # operators/asof.py).
-        n_qb = max(1, int(round(n_queries ** 0.5)))
-        qb = F.pmod(F.xxhash64(F.col("query_id").cast("bigint")),
-                    F.lit(n_qb)).cast("int")
-        joined_b = joined.withColumn("__qbucket", qb)
+        # each tombstone travels once per query bucket (√Q times), keyed by
+        # its doc-hash salt.  Fresh aliases guard against the Spark 4.1
+        # shared-lineage cogroup pruning bug (see operators/asof.py).
         buckets = spark.range(n_qb).select(
             F.col("id").cast("int").alias("__ts_qbucket"))
         tomb_keyed = (
@@ -237,9 +279,10 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
             .crossJoin(F.broadcast(buckets))
         )
         shard_topk = (
-            joined_b.groupBy("__qbucket", "salt")
+            scored.groupBy("__qbucket", "salt")
             .cogroup(tomb_keyed.groupBy("__ts_qbucket", "__ts_salt"))
-            .applyInPandas(_score_cogrouped, schema=schema)
+            .applyInArrow(lambda t, ts: _score_group(t, ts, avgdl),
+                          schema=schema)
         )
     if candidates:
         return shard_topk

@@ -59,12 +59,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.varbyte import (
-    decode_posting_list,
-    varbyte_decode,
-    _cumsum_with_block_resets,
-    _block_starts,
-)
+from ..functions.varbyte import arrow_binary, decode_doc_runs, varbyte_decode
 from ..operators.dedup import dedup_latest
 from ..functions.textanalysis import jvm_tokens_col
 from .state import (
@@ -85,6 +80,7 @@ POSTINGS_SCHEMA = (
     "off_d array<bigint>, off_t array<bigint>, off_l array<bigint>, "
     "doc_ids_vb binary, tfs_vb binary, dls_vb binary, bucket int"
 )
+_STREAMS = ("doc_ids_vb", "tfs_vb", "dls_vb")
 
 
 def _batch_dirs(index_dir: str, sub: str, committed: list[int]) -> list[str]:
@@ -291,25 +287,38 @@ def _resolve_upserts(new_docs: DataFrame, existing: DataFrame | None):
     return kept, tombs
 
 
+def _explode_postings(keep: tuple[str, ...], doc_ids_only: bool = False):
+    """mapInArrow kernel: posting rows → one row per posting, ``keep``
+    columns repeated beside the decoded ``doc_id`` and, unless
+    ``doc_ids_only``, ``tf`` and ``doc_len``.  Each Arrow batch decodes in
+    one pass: a batch's posting lists lie back to back in the binary
+    columns' value buffers, so each stream is one call of the multi-run
+    decoder, with ``n_docs`` marking where each list restarts."""
+    import pyarrow as pa
+
+    def _stream(rb, c):
+        offs, data = arrow_binary(rb.column(c))
+        return data[offs[0]:offs[-1]]
+
+    def _dec(batches):
+        for rb in batches:
+            n_docs = rb.column("n_docs").to_numpy().astype(np.int64)
+            rows = pa.array(np.repeat(np.arange(rb.num_rows), n_docs))
+            cols = {c: rb.column(c).take(rows) for c in keep}
+            cols["doc_id"] = decode_doc_runs(_stream(rb, "doc_ids_vb"), n_docs)
+            if not doc_ids_only:
+                cols["tf"] = varbyte_decode(_stream(rb, "tfs_vb")).astype(np.int32)
+                cols["doc_len"] = varbyte_decode(_stream(rb, "dls_vb")).astype(np.int32)
+            yield pa.RecordBatch.from_pydict(cols)
+
+    return _dec
+
+
 def _decoded_doc_ids(post: DataFrame) -> DataFrame:
-    """postings rows → exploded (term, doc_id) frame via a streaming
-    mapInPandas decode (vectorized varbyte; np.repeat for the term column)."""
-
-    def _scan(it):
-        for pdf in it:
-            terms, ids = [], []
-            for term, vb in zip(pdf["term"], pdf["doc_ids_vb"]):
-                stream = varbyte_decode(vb)
-                u = _cumsum_with_block_resets(stream, _block_starts(stream.size))
-                d = (u ^ np.uint64(1 << 63)).astype(np.int64)
-                terms.append(np.repeat(term, d.size))
-                ids.append(d)
-            if ids:
-                yield pd.DataFrame({"term": np.concatenate(terms),
-                                    "doc_id": np.concatenate(ids)})
-
-    return post.select("term", "doc_ids_vb").mapInPandas(
-        _scan, schema="term string, doc_id long")
+    """postings rows → exploded (term, doc_id) frame (doc-id stream only)."""
+    return post.select("term", "n_docs", "doc_ids_vb").mapInArrow(
+        _explode_postings(("term",), doc_ids_only=True),
+        schema="term string, doc_id long")
 
 
 def _df_corrections_df(spark: SparkSession, index_dir: str, committed: list[int],
@@ -1134,26 +1143,12 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     post = spark.read.option("basePath", f"{index_dir}/postings").parquet(
         *_batch_dirs(index_dir, "postings", committed))
 
-    def _decode_full(it):
-        for pdf in it:
-            outs = []
-            for term, salt, dvb, tvb, lvb in zip(
-                    pdf["term"], pdf["salt"], pdf["doc_ids_vb"],
-                    pdf["tfs_vb"], pdf["dls_vb"]):
-                d, t, l = decode_posting_list(dvb, tvb, lvb)
-                outs.append(pd.DataFrame({
-                    "term_id": np.full(d.size, 0, np.int64),  # filled below
-                    "term": np.repeat(term, d.size),
-                    "salt": np.full(d.size, salt, np.int32),
-                    "doc_id": d, "tf": t, "doc_len": l}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    decoded = post.select("term", "salt", "doc_ids_vb", "tfs_vb", "dls_vb") \
-        .mapInPandas(_decode_full,
-                     schema="term_id bigint, term string, salt int, "
-                            "doc_id bigint, tf int, doc_len int") \
-        .withColumn("term_id", F.xxhash64("term")).drop("term")
+    decoded = post.select("term", "salt", "n_docs", *_STREAMS) \
+        .mapInArrow(_explode_postings(("term", "salt")),
+                    schema="term string, salt int, doc_id bigint, tf int, "
+                           "doc_len int") \
+        .select(F.xxhash64("term").alias("term_id"), "salt", "doc_id", "tf",
+                "doc_len")
     if tomb is not None:
         decoded = decoded.join(tomb, "doc_id", "left_anti")
     # Size the re-encode shuffle from the DATA, not the core count — the
@@ -1403,27 +1398,12 @@ class IndexReader:
     def decoded_postings_for_terms(self, terms: list[str]) -> DataFrame:
         """Bucket-pruned scan decoded to one row per posting:
         (term, doc_id, tf, doc_len) — the TAAT-scorer input used by the
-        boolean-query combinator.  Streaming mapInPandas over the varbyte
-        blocks (vectorized decode, np.repeat for the term column); cost is
-        O(Σ df(terms)) rows, never the whole index."""
-
-        def _scan(it):
-            for pdf in it:
-                outs = []
-                for term, dvb, tvb, lvb in zip(
-                        pdf["term"], pdf["doc_ids_vb"], pdf["tfs_vb"],
-                        pdf["dls_vb"]):
-                    d, t, l = decode_posting_list(dvb, tvb, lvb)
-                    outs.append(pd.DataFrame({
-                        "term": np.repeat(term, d.size),
-                        "doc_id": d, "tf": t, "doc_len": l}))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
+        boolean-query combinator.  Streaming mapInArrow, one decode pass per
+        Arrow batch; cost is O(Σ df(terms)) rows, never the whole index."""
         post = self.postings_for_terms(terms)
-        return post.select("term", "doc_ids_vb", "tfs_vb", "dls_vb") \
-            .mapInPandas(_scan, schema="term string, doc_id bigint, "
-                                       "tf int, doc_len int")
+        return post.select("term", "n_docs", *_STREAMS).mapInArrow(
+            _explode_postings(("term",)),
+            schema="term string, doc_id bigint, tf int, doc_len int")
 
     def term_contribs(self, terms: list[str],
                       boosts: dict | None = None) -> DataFrame:

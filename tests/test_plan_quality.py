@@ -114,7 +114,8 @@ def test_upsert_merge_scans_only_affected_partitions(spark, tmp_path):
 
 def test_wand_cogrouped_tombstones_no_driver_collect(spark, tmp_path):
     """Tombstone delivery to the WAND scorer is a cogroup (FlatMapCoGroups
-    in the plan), not a driver-side set in the UDF closure."""
+    in the plan), not a driver-side set in the UDF closure; the scorer is
+    the Arrow kernel on both paths."""
     from elasticsearch_data_import_handler_spark.operators.wand import (
         bm25_topk_wand)
     from elasticsearch_data_import_handler_spark.plans.build import (
@@ -129,7 +130,7 @@ def test_wand_cogrouped_tombstones_no_driver_collect(spark, tmp_path):
     assert reader.tombstones_df() is not None  # upserts created tombstones
     df = bm25_topk_wand(spark, reader)
     plan = _plan(df)
-    assert "FlatMapCoGroupsInPandas" in plan, plan
+    assert "FlatMapCoGroupsInArrow" in plan, plan
 
 
 def _jobs_in_group(spark, group, action):
@@ -180,6 +181,38 @@ def test_wand_single_query_job_budget(spark, tmp_path):
     assert "rangepartitioning" not in plan, plan
 
 
+def test_wand_batch_groups_on_query_bucket_and_salt(spark, tmp_path):
+    """A 40-query batch scores in round(√40) = 6 query buckets per salt:
+    one Arrow scorer call per (__qbucket, salt) group, no pandas grouped
+    map, and only the columns the kernel reads cross the shuffle."""
+    from elasticsearch_data_import_handler_spark.operators.scoring import (
+        query_terms_df)
+    from elasticsearch_data_import_handler_spark.operators.wand import (
+        bm25_topk_wand)
+    from elasticsearch_data_import_handler_spark.plans.build import (
+        IndexReader, build_index)
+    from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
+
+    d = str(tmp_path / "idx")
+    build_index(spark, synth_pages(spark, 150, seed=42), d, tau=100,
+                n_buckets=4)
+    reader = IndexReader(spark, d)
+    terms = ["spark", "sql", "join", "merge", "batch"]
+    rows = [(q, terms[q % 5], 3) for q in range(40)] + \
+           [(q, terms[(q + 2) % 5], 3) for q in range(0, 40, 3)]
+    df = bm25_topk_wand(spark, reader, qterms=query_terms_df(spark, rows),
+                        candidates=True)
+    got = df.collect()
+    assert {r.query_id for r in got} == set(range(40))
+    plan = _plan(df).split("== Initial Plan ==")[0]
+    assert "FlatMapGroupsInArrow" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert plan.count("Exchange hashpartitioning(__qbucket") == 1, plan
+    assert "pmod(xxhash64(cast(query_id" in plan and ", 6)" in plan, plan
+    scan = next(ln for ln in plan.splitlines() if "FileScan parquet" in ln)
+    assert "block_max_doc" not in scan and "doc_ids_vb" in scan, scan
+
+
 def test_interval_join_is_equi_not_nested_loop(spark, sf_dir):
     """The bucketed range join must plan as a hash equi-join on the bucket
     key — a naive range predicate would be BroadcastNestedLoopJoin."""
@@ -228,8 +261,8 @@ def test_pack_sequences_no_global_window(spark):
 
 def test_facet_search_single_postings_decode(spark, tmp_path):
     """All facets stack through one explode over ONE scored-candidate plan:
-    the varbyte postings decode kernel (FlatMapGroupsInPandas/MapInPandas)
-    appears exactly once — a per-facet UNION would re-run the scorer."""
+    the varbyte postings decode kernel (MapInArrow) appears exactly once —
+    a per-facet UNION would re-run the scorer."""
     from elasticsearch_data_import_handler_spark.operators.search import (
         facet_search)
     from elasticsearch_data_import_handler_spark.plans.build import (
@@ -247,7 +280,7 @@ def test_facet_search_single_postings_decode(spark, tmp_path):
     out = facet_search(spark, reader, meta, ["site", "len_band"],
                        must=["spark"])
     plan = _plan(out)
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert plan.count("Generate explode") == 1, plan
 
 
@@ -282,7 +315,7 @@ def test_dis_max_single_aggregation_exchange(spark, taat_reader, scorer):
         df = terms_set_query(spark, reader, ["spark", "merge", "batch"],
                              required=2)
     plan = _plan(df)
-    assert plan.count("MapInPandas") == 1, plan      # one decode pass
+    assert plan.count("MapInArrow") == 1, plan       # one decode pass
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 

@@ -7,11 +7,12 @@ from hypothesis import strategies as st
 
 from elasticsearch_data_import_handler_spark.functions.varbyte import (
     bm25_partial,
-    decode_blocks,
     decode_posting_list,
+    decode_posting_runs,
     delta_decode,
     delta_encode,
     encode_posting_list,
+    gather_ranges,
     varbyte_decode,
     varbyte_encode,
 )
@@ -74,26 +75,46 @@ def test_posting_list_roundtrip_and_block_max():
 
 
 def test_selective_block_decode():
-    """decode_blocks on a subset must equal the matching slices of full decode."""
+    """The multi-run decoder over a subset of blocks of SEVERAL posting lists
+    (their byte ranges gathered from concatenated buffers, as the WAND
+    kernel reads them from Arrow) equals the matching slices of each list's
+    full decode."""
     rng = np.random.default_rng(7)
+    encs, want, ranges, lens = [], [], [], []
+    base = {"d": 0, "t": 0, "l": 0}
     for n in [1, 100, 128, 129, 1000, 5000]:
         doc_ids = np.sort(rng.choice(2**62, size=n, replace=False).astype(np.int64))
-        tfs = rng.integers(1, 100, n)
-        dls = rng.integers(5, 2000, n)
-        enc = encode_posting_list(doc_ids, tfs, dls)
-        d_all, t_all, l_all = decode_posting_list(
-            enc["doc_ids_vb"], enc["tfs_vb"], enc["dls_vb"])
+        enc = encode_posting_list(doc_ids, rng.integers(1, 100, n),
+                                  rng.integers(5, 2000, n))
+        full = decode_posting_list(enc["doc_ids_vb"], enc["tfs_vb"], enc["dls_vb"])
         n_blocks = len(enc["off_d"])
         pick = np.unique(rng.choice(n_blocks, size=max(1, n_blocks // 2), replace=False))
-        d, t, l = decode_blocks(
-            enc["doc_ids_vb"], enc["tfs_vb"], enc["dls_vb"],
-            np.asarray(enc["off_d"]), np.asarray(enc["off_t"]),
-            np.asarray(enc["off_l"]), n, pick,
-        )
-        exp = np.concatenate([np.arange(b * 128, min((b + 1) * 128, n)) for b in pick])
-        assert np.array_equal(d, d_all[exp])
-        assert np.array_equal(t, t_all[exp])
-        assert np.array_equal(l, l_all[exp])
+        for b in pick:
+            rows = np.arange(b * 128, min((b + 1) * 128, n))
+            want.append([a[rows] for a in full])
+            lens.append(rows.size)
+            rng_b = {}
+            for s_, vb, off in (("d", "doc_ids_vb", "off_d"), ("t", "tfs_vb", "off_t"),
+                                ("l", "dls_vb", "off_l")):
+                ends = np.r_[enc[off][1:], len(enc[vb])]
+                rng_b[s_] = (base[s_] + enc[off][b], base[s_] + ends[b])
+            ranges.append(rng_b)
+        for s_, vb in (("d", "doc_ids_vb"), ("t", "tfs_vb"), ("l", "dls_vb")):
+            base[s_] += len(enc[vb])
+        encs.append(enc)
+    bufs = [np.frombuffer(b"".join(e[vb] for e in encs), np.uint8)
+            for vb in ("doc_ids_vb", "tfs_vb", "dls_vb")]
+    got = decode_posting_runs(*(
+        gather_ranges(buf, np.array([r[s_][0] for r in ranges]),
+                      np.array([r[s_][1] for r in ranges]))
+        for buf, s_ in zip(bufs, "dtl")), lens)
+    for g, w in zip(got, zip(*want)):
+        assert np.array_equal(g, np.concatenate(w))
+    # whole lists back to back are runs too: one call decodes them all
+    whole = decode_posting_runs(*bufs, [e["n_docs"] for e in encs])
+    each = [decode_posting_list(e["doc_ids_vb"], e["tfs_vb"], e["dls_vb"]) for e in encs]
+    for g, w in zip(whole, zip(*each)):
+        assert np.array_equal(g, np.concatenate(w))
 
 
 def test_salted_split_union_equals_original():
