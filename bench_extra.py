@@ -20,6 +20,14 @@ Subcommands:
                         decoded posting and groups/s, median of --reps
                         passes.  Spark only builds the index and writes the
                         groups once, under .bench/.
+  task_overhead         the fixed cost of one Python task: runs --reps
+                        (default 30) trivial 1-partition mapInArrow jobs
+                        and prints the median ms from submit to UDF entry
+                        and the worker's zipimporter count, first for a UDF
+                        that never imports the engine, then for one that
+                        does (the package makes zipimport invalidation lazy
+                        in the worker; see zipcache.py).  --cpus defaults
+                        to 1 here, so one worker runs every task.
 """
 
 from __future__ import annotations
@@ -218,15 +226,63 @@ def cmd_wand(seed=7, reps=5, cpus=4):
         "groups_per_s": round(len(groups) / s, 1)}))
 
 
+def cmd_task_overhead(tasks=30, cpus=1):
+    from statistics import median
+
+    import pyarrow as pa
+
+    from elasticsearch_data_import_handler_spark.session import get_spark
+
+    # the workers import the engine from this checkout
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
+    spark = get_spark("bench-extra-task-overhead", cpus=cpus)
+
+    def probe(with_engine):
+        def udf(batches):
+            entered = time.time()
+            if with_engine:
+                import elasticsearch_data_import_handler_spark  # noqa: F401
+            import zipimport
+            n_zip = sum(isinstance(f, zipimport.zipimporter)
+                        for f in sys.path_importer_cache.values())
+            for _ in batches:
+                pass
+            yield pa.RecordBatch.from_pydict(
+                {"entered": [entered], "zipimporters": [n_zip]})
+        return udf
+
+    out = {"tasks": tasks, "cpus": cpus}
+    try:
+        # without first: a worker keeps the engine's wrapper once imported
+        for name, with_engine in (("without_engine", False),
+                                  ("with_engine", True)):
+            df = spark.range(100, numPartitions=1).mapInArrow(
+                probe(with_engine), "entered double, zipimporters long")
+            ms, n_zip = [], []
+            for i in range(tasks + 2):
+                t0 = time.time()
+                r = df.collect()[0]
+                if i >= 2:  # the first two start the worker / import the engine
+                    ms.append(1000 * (r.entered - t0))
+                    n_zip.append(r.zipimporters)
+            out[name] = {"submit_to_udf_ms_p50": round(median(ms), 1),
+                         "zipimporters": int(median(n_zip))}
+    finally:
+        spark.stop()
+    print(json.dumps(out))
+
+
 if __name__ == "__main__":
     import argparse
 
     ap = argparse.ArgumentParser()
-    ap.add_argument("cmd", choices=["suite", "plans", "build", "wand"])
+    ap.add_argument("cmd", choices=["suite", "plans", "build", "wand",
+                                    "task_overhead"])
     ap.add_argument("names", nargs="*")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--reps", type=int, default=None)
-    ap.add_argument("--cpus", type=int, default=8)
+    ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--seed", type=int, default=7)
     a = ap.parse_args()
     names = a.names or NAMES
@@ -234,8 +290,10 @@ if __name__ == "__main__":
         cmd_suite(names, reps=a.reps or 1)
     elif a.cmd == "plans":
         cmd_plans(names, a.tag)
+    elif a.cmd == "task_overhead":
+        cmd_task_overhead(tasks=a.reps or 30, cpus=a.cpus or 1)
     elif a.cmd == "wand":
         cmd_wand(seed=a.seed, reps=a.reps or 5,
-                 cpus=min(a.cpus, os.cpu_count() or 1))
+                 cpus=min(a.cpus or 8, os.cpu_count() or 1))
     else:
-        cmd_build(cpus=a.cpus, reps=a.reps or 1)
+        cmd_build(cpus=a.cpus or 8, reps=a.reps or 1)

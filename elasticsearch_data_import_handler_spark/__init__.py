@@ -27,3 +27,8 @@ __version__ = "0.1.0"
 BM25_K1 = 1.2
 BM25_B = 0.75
 BLOCK_SIZE = 128  # postings per block for block-max metadata
+
+# without this, every Python task re-reads pyspark.zip; see zipcache
+from . import zipcache  # noqa: E402
+
+zipcache.install()

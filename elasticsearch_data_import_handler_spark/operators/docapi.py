@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.sqltext import col_isin
+
 
 def term_vectors(reader, documents: DataFrame, doc_ids: list[int],
                  id_col: str = "doc_id", text_col: str = "text",
@@ -37,7 +39,7 @@ def term_vectors(reader, documents: DataFrame, doc_ids: list[int],
 
     if not doc_ids:
         raise ValueError("term_vectors needs at least one doc id")
-    picked = (documents.filter(F.col(id_col).isin([int(i) for i in doc_ids]))
+    picked = (documents.filter(col_isin(id_col, [int(i) for i in doc_ids]))
               .select(F.col(id_col).cast("long").alias("doc_id"),
                       F.col(text_col).alias("__tv_text"))
               .select("doc_id",
@@ -65,7 +67,7 @@ def mget(reader, doc_ids: list[int]) -> DataFrame:
     if not doc_ids:
         raise ValueError("mget needs at least one doc id")
     return reader.live(reader.doc_stats().filter(
-        F.col("doc_id").isin([int(i) for i in doc_ids])))
+        col_isin("doc_id", [int(i) for i in doc_ids])))
 
 
 def explain_score(spark: SparkSession, reader, doc_id: int,

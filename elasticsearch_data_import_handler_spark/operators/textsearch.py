@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.sqltext import col_isin
 from .dedup import shingles_exploded
 
 
@@ -763,7 +764,7 @@ def phrase_prefix_search(spark, reader, phrase_prefix: str, slop: int = 0,
     exp_ids = [xxhash64_str(t) for t in exp]
     # union of the expansions' position lists per doc (a position hosts one
     # term, so flatten never double-counts)
-    pe = (pos.filter(F.col("term_id").isin(exp_ids))
+    pe = (pos.filter(col_isin("term_id", exp_ids))
           .groupBy("doc_id")
           .agg(F.array_sort(F.flatten(F.collect_list("positions")))
                .alias("nx")))
@@ -944,7 +945,7 @@ def phrase_suggest(documents: DataFrame, text: str, max_dist: int = 1,
         documents, id_col, text_col, analyzer)
     w1s = sorted({a for a, _ in want_pairs})
     w2s = sorted({b for _, b in want_pairs})
-    bg_rows = (bg.filter(F.col("w1").isin(w1s) & F.col("w2").isin(w2s))
+    bg_rows = (bg.filter(col_isin("w1", w1s) & col_isin("w2", w2s))
                .collect())
     bg_n = {(r["w1"], r["w2"]): r["n"] for r in bg_rows
             if (r["w1"], r["w2"]) in want_pairs}

@@ -35,6 +35,10 @@ tombstone per *query* instead of per bucket would shuffle |tombstones| ×
 
 The scorer is the vectorized-exact block-max variant (after Ding & Suel's
 BMW, SIGIR'11); :func:`_score_group` states the bound and why it is safe.
+
+The request is built in O(1) driver→JVM round trips whatever the number of
+terms or queries: the IN lists are SQL text (``functions.sqltext.col_isin``),
+and so are the projection and the ranking tail.
 """
 
 from __future__ import annotations
@@ -42,8 +46,9 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.sqltext import col_isin
 from ..functions.varbyte import (
     BLOCK_SIZE, arrow_binary, arrow_list, bm25_partial, decode_posting_runs,
     gather_ranges)
@@ -235,7 +240,7 @@ def _scorer_input(spark: SparkSession, reader, qterms: DataFrame | None
     terms = sorted({r["term"] for r in qt_rows})
     n_queries = len({r["query_id"] for r in qt_rows})
     post = reader.postings_for_terms(terms)
-    lex = reader.lexicon().select("term", "idf").filter(F.col("term").isin(terms))
+    lex = reader.lexicon().select("term", "idf").filter(col_isin("term", terms))
     n_qb = max(1, int(round(n_queries ** 0.5)))
     # one SQL-text projection: the same select built from Column objects
     # costs ~100 more driver→JVM round trips, a visible share of the
@@ -269,13 +274,12 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
         # each tombstone travels once per query bucket (√Q times), keyed by
         # its doc-hash salt.  Fresh aliases guard against the Spark 4.1
         # shared-lineage cogroup pruning bug (see operators/asof.py).
-        buckets = spark.range(n_qb).select(
-            F.col("id").cast("int").alias("__ts_qbucket"))
+        buckets = spark.range(n_qb).selectExpr("cast(id as int) AS __ts_qbucket")
         tomb_keyed = (
-            tomb.select(
-                F.col("doc_id").alias("__ts_doc_id"),
-                F.pmod(F.xxhash64("doc_id"), F.lit(reader.state.s_shards))
-                .cast("int").alias("__ts_salt"))
+            tomb.selectExpr(
+                "doc_id AS __ts_doc_id",
+                f"cast(pmod(xxhash64(doc_id), {reader.state.s_shards}) as int)"
+                " AS __ts_salt")
             .crossJoin(F.broadcast(buckets))
         )
         shard_topk = (
@@ -288,14 +292,14 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
         return shard_topk
     # the shard top-ks are ~S·k rows per query (plus ties): one partition
     # satisfies both the window's clustering and the final sort, so neither
-    # shuffles again
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    out = (
+    # shuffles again.  SQL text, like the projection above: the same tail
+    # built from Column objects and column names costs ~30 more round trips.
+    score = "score" if round_to is None else f"round(score, {int(round_to)}) AS score"
+    return (
         shard_topk.repartition(1)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "doc_id", "score")
+        .selectExpr("*", "cast(row_number() OVER (PARTITION BY query_id "
+                    "ORDER BY score DESC, doc_id ASC) AS bigint) AS rank")
+        .where("rank <= k")
+        .selectExpr("query_id", "rank", "doc_id", score)
+        .orderBy(F.expr("query_id"), F.expr("rank"))
     )
-    if round_to is not None:
-        out = out.withColumn("score", F.round("score", round_to))
-    return out.orderBy("query_id", "rank")

@@ -59,6 +59,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.sqltext import col_isin
 from ..functions.varbyte import arrow_binary, decode_doc_runs, varbyte_decode
 from ..operators.dedup import dedup_latest
 from ..functions.textanalysis import jvm_tokens_col
@@ -336,7 +337,7 @@ def _df_corrections_df(spark: SparkSession, index_dir: str, committed: list[int]
     if not salts:
         return None
     post = spark.read.option("basePath", f"{index_dir}/postings").parquet(*dirs) \
-        .filter(F.col("salt").isin(salts))
+        .filter(col_isin("salt", salts))
     decoded = _decoded_doc_ids(post)
     return (
         decoded.join(tombs.select("doc_id"), "doc_id")
@@ -1365,8 +1366,8 @@ class IndexReader:
                 *_batch_dirs(self.index_dir, "positions",
                              self.state.committed_batches))
         df = self._memo["positions_base"]
-        pruned = df.filter(F.col("bucket").isin(buckets)
-                           & F.col("term_id").isin(tids))
+        pruned = df.filter(col_isin("bucket", buckets)
+                           & col_isin("term_id", tids))
 
         def _dec(it):
             from ..functions.varbyte import delta_decode, varbyte_decode
@@ -1393,7 +1394,7 @@ class IndexReader:
                 *_batch_dirs(self.index_dir, "postings",
                              self.state.committed_batches))
         df = self._memo["postings_base"]
-        return df.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+        return df.filter(col_isin("bucket", buckets) & col_isin("term", terms))
 
     def decoded_postings_for_terms(self, terms: list[str]) -> DataFrame:
         """Bucket-pruned scan decoded to one row per posting:
@@ -1419,7 +1420,7 @@ class IndexReader:
         :meth:`live` at the point in their plan that suits them."""
         from ..operators.indexing import bm25_score_expr
 
-        lex = self.lexicon().filter(F.col("term").isin(terms)) \
+        lex = self.lexicon().filter(col_isin("term", terms)) \
             .select("term", "df", "idf")
         contrib = bm25_score_expr()
         if boosts:

@@ -640,3 +640,132 @@ def test_search_after_broadcasts_cursor(spark):
     out.collect()
     plan = _plan(out)
     assert "BroadcastExchange" in plan
+
+
+# values whose SQL text needs care: quotes and backslashes, a ${...} that
+# Spark's variable substitution would rewrite (the test session runs 8
+# shuffle partitions, so a substituted literal would match the "8" row),
+# non-ASCII and control characters, signed 64-bit ends (term ids are signed
+# xxhash64), more than ten values (In → InSet), and an empty list
+_ISIN_CASES = {
+    "quotes": ("s", ["a'b", "x\\y", "it''s", "\\'"]),
+    "substitution": ("s", ["${spark.sql.shuffle.partitions}"]),
+    "unicode": ("s", ["é漢😀", "tab\there", "line\nbreak"]),
+    "inset": ("s", [f"v{i}" for i in range(30)] + ["a'b", "8"]),
+    "bigints": ("l", [1, -2 ** 63, 2 ** 63 - 1, 2 ** 40, -5, -2 ** 31 - 1]),
+    "ints": ("i", [-2 ** 31, 2 ** 31 - 1, 3]),
+    "empty": ("s", []),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_ISIN_CASES))
+def test_col_isin_matches_column_isin(spark, case):
+    """``col_isin`` (SQL text, O(1) round trips) builds the same analyzed and
+    optimized predicate as ``Column.isin`` and keeps the same rows."""
+    from elasticsearch_data_import_handler_spark.functions.sqltext import (
+        col_isin)
+
+    df = spark.createDataFrame(
+        [("a'b", 1, -2 ** 31), ("x\\y", -2 ** 63, 2 ** 31 - 1),
+         ("${spark.sql.shuffle.partitions}", 2 ** 63 - 1, 3), ("8", 7, 8),
+         ("é漢😀", 2 ** 40, 0), ("tab\there", -5, 1), ("line\nbreak", 0, 2),
+         ("\\'", -2 ** 31 - 1, 4), ("v3", 5, 5)],
+        "s string, l bigint, i int")
+    column, values = _ISIN_CASES[case]
+    want = df.filter(F.col(column).isin(values))
+    got = df.filter(col_isin(column, values))
+    wq, gq = want._jdf.queryExecution(), got._jdf.queryExecution()
+    assert gq.analyzed().equals(wq.analyzed()), (
+        gq.analyzed().toString(), wq.analyzed().toString())
+    assert gq.optimizedPlan().equals(wq.optimizedPlan())
+    rows = sorted(got.collect())
+    assert rows == sorted(want.collect())
+    assert bool(rows) == bool(values)
+
+
+def test_postings_scan_pushed_filters_unchanged(spark, taat_reader):
+    """The postings scan's IN predicates, built from SQL text, push to
+    parquet exactly as the ``Column.isin`` ones did: same PartitionFilters,
+    PushedFilters and physical plan."""
+    import re
+
+    from elasticsearch_data_import_handler_spark.functions.hashing import (
+        xxhash64_str)
+
+    terms = sorted(r.term for r in
+                   taat_reader.lexicon().select("term").limit(15).collect())
+    assert len(terms) == 15
+    buckets = sorted({xxhash64_str(t) % taat_reader.state.n_buckets
+                      for t in terms})
+    got = taat_reader.postings_for_terms(terms)
+    want = taat_reader._memo["postings_base"].filter(
+        F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+
+    def norm(df):
+        return re.sub(r"#\d+L?", "#", _plan(df))
+
+    def scan_attr(plan, key):
+        return plan.split(f"{key}:")[1].split("]")[0]
+
+    g, w = norm(got), norm(want)
+    for key in ("PartitionFilters", "PushedFilters"):
+        assert scan_attr(g, key) == scan_attr(w, key), (g, w)
+    assert "In(term" in scan_attr(g, "PushedFilters"), g
+    assert g == w
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def _round_trips(action):
+    """(py4j driver→JVM commands sent while ``action`` runs, its result).
+    Deletes of garbage-collected JVM proxies are not counted: they go out
+    whenever Python's collector frees earlier objects."""
+    import gc
+
+    import py4j.clientserver as cs
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+    delete = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    send = cs.ClientServerConnection.send_command
+    sent = []
+
+    def counting(self, command):
+        if not command.startswith(delete):
+            sent.append(command)
+        return send(self, command)
+
+    gc.collect()
+    cs.ClientServerConnection.send_command = counting
+    try:
+        out = action()
+    finally:
+        cs.ClientServerConnection.send_command = send
+    return len(sent), out
+
+
+def test_wand_request_round_trip_budget(spark, taat_reader):
+    """Building a WAND request (query frame + plan, no job) costs a constant
+    number of driver→JVM round trips, whatever the number of terms: a
+    40-query batch over 40 distinct terms costs at most a few more than a
+    two-term single query, and the single query at most 250.  Built with
+    ``Column.isin`` the IN lists cost about four round trips per term."""
+    from elasticsearch_data_import_handler_spark.operators.scoring import (
+        query_terms_df)
+    from elasticsearch_data_import_handler_spark.operators.wand import (
+        bm25_topk_wand)
+
+    terms = sorted(r.term for r in
+                   taat_reader.lexicon().select("term").limit(40).collect())
+    single = [(0, terms[0], 10), (0, terms[1], 10)]
+    batch = [(q, terms[q], 10) for q in range(40)] + \
+            [(q, terms[(q + 11) % 40], 10) for q in range(0, 40, 2)]
+
+    def build(rows):
+        return bm25_topk_wand(spark, taat_reader,
+                              qterms=query_terms_df(spark, rows))
+
+    build(single).collect()  # warm: the reader's lexicon and stats
+    n_single, _ = _round_trips(lambda: build(single))
+    n_batch, df = _round_trips(lambda: build(batch))
+    assert n_single <= 250, n_single
+    assert n_batch <= n_single + 10, (n_single, n_batch)
+    assert {r.query_id for r in df.collect()} <= set(range(40))
