@@ -20,14 +20,23 @@ Subcommands:
                         decoded posting and groups/s, median of --reps
                         passes.  Spark only builds the index and writes the
                         groups once, under .bench/.
-  task_overhead         the fixed cost of one Python task: runs --reps
-                        (default 30) trivial 1-partition mapInArrow jobs
-                        and prints the median ms from submit to UDF entry
-                        and the worker's zipimporter count, first for a UDF
-                        that never imports the engine, then for one that
-                        does (the package makes zipimport invalidation lazy
-                        in the worker; see zipcache.py).  --cpus defaults
-                        to 1 here, so one worker runs every task.
+  task_overhead         the fixed cost of one Python task, under the stock
+                        pyspark.daemon and under the engine's preloading
+                        daemon (daemon.py).  Runs --reps (default 30)
+                        trivial 1-partition mapInArrow jobs and prints the
+                        median ms from submit to UDF entry and the worker's
+                        zipimporter count, first for a UDF that never
+                        imports the engine, then for one that does (the
+                        package makes zipimport invalidation lazy in the
+                        worker; see zipcache.py).  Then, with worker reuse
+                        off so every task runs on a freshly forked worker,
+                        a task whose UDF unpickles into the engine's kernel
+                        module: the median ms from the fork to UDF entry
+                        (/proc start time, 10 ms resolution) and from UDF
+                        entry to the return of its first kernel call (a
+                        pa.array, whose first call imports pandas unless the
+                        daemon did).  --cpus defaults to 1 here, so one
+                        worker runs every task.
 """
 
 from __future__ import annotations
@@ -226,17 +235,22 @@ def cmd_wand(seed=7, reps=5, cpus=4):
         "groups_per_s": round(len(groups) / s, 1)}))
 
 
+def _fork_to_now_ms() -> float:
+    """ms since this process was forked (/proc start time, 10 ms ticks)."""
+    with open("/proc/self/stat") as f:
+        ticks = int(f.read().rsplit(")", 1)[1].split()[19])
+    return 1000 * (time.clock_gettime(time.CLOCK_BOOTTIME)
+                   - ticks / os.sysconf("SC_CLK_TCK"))
+
+
 def cmd_task_overhead(tasks=30, cpus=1):
     from statistics import median
 
+    import numpy as np
     import pyarrow as pa
 
+    from elasticsearch_data_import_handler_spark.functions import varbyte
     from elasticsearch_data_import_handler_spark.session import get_spark
-
-    # the workers import the engine from this checkout
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
-    spark = get_spark("bench-extra-task-overhead", cpus=cpus)
 
     def probe(with_engine):
         def udf(batches):
@@ -252,24 +266,59 @@ def cmd_task_overhead(tasks=30, cpus=1):
                 {"entered": [entered], "zipimporters": [n_zip]})
         return udf
 
+    def first_task(batches):
+        # unpickling this closure imports the engine's kernel module, as an
+        # engine task's does; pa.array is the first call of every kernel
+        forked = _fork_to_now_ms()
+        t0 = time.perf_counter()
+        varbyte.bm25_partial(pa.array(np.arange(1, 4)).to_numpy(), 10, 1.0, 10.0)
+        first = 1000 * (time.perf_counter() - t0)
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"fork_to_udf_ms": [forked], "udf_to_first_kernel_ms": [first]})
+
     out = {"tasks": tasks, "cpus": cpus}
-    try:
-        # without first: a worker keeps the engine's wrapper once imported
-        for name, with_engine in (("without_engine", False),
-                                  ("with_engine", True)):
+    for daemon in ("pyspark.daemon",
+                   "elasticsearch_data_import_handler_spark.daemon"):
+        res = out[daemon] = {}
+        spark = get_spark("bench-extra-task-overhead", cpus=cpus,
+                          extra={"spark.python.daemon.module": daemon})
+        try:
+            # without first: a worker keeps the engine's wrapper once imported
+            for name, with_engine in (("without_engine", False),
+                                      ("with_engine", True)):
+                df = spark.range(100, numPartitions=1).mapInArrow(
+                    probe(with_engine), "entered double, zipimporters long")
+                ms, n_zip = [], []
+                for i in range(tasks + 2):
+                    t0 = time.time()
+                    r = df.collect()[0]
+                    if i >= 2:  # the first two start the worker / import the engine
+                        ms.append(1000 * (r.entered - t0))
+                        n_zip.append(r.zipimporters)
+                res[name] = {"submit_to_udf_ms_p50": round(median(ms), 1),
+                             "zipimporters": int(median(n_zip))}
+        finally:
+            spark.stop()
+        # every task on a freshly forked worker: the cost a batch pays for
+        # each worker it adds to the pool
+        spark = get_spark("bench-extra-fresh-worker", cpus=cpus,
+                          extra={"spark.python.daemon.module": daemon,
+                                 "spark.python.worker.reuse": "false"})
+        try:
             df = spark.range(100, numPartitions=1).mapInArrow(
-                probe(with_engine), "entered double, zipimporters long")
-            ms, n_zip = [], []
-            for i in range(tasks + 2):
-                t0 = time.time()
-                r = df.collect()[0]
-                if i >= 2:  # the first two start the worker / import the engine
-                    ms.append(1000 * (r.entered - t0))
-                    n_zip.append(r.zipimporters)
-            out[name] = {"submit_to_udf_ms_p50": round(median(ms), 1),
-                         "zipimporters": int(median(n_zip))}
-    finally:
-        spark.stop()
+                first_task, "fork_to_udf_ms double, udf_to_first_kernel_ms double")
+            rows = [df.collect()[0] for _ in range(tasks + 1)][1:]  # 0: daemon start
+            fork = median(r.fork_to_udf_ms for r in rows)
+            kernel = median(r.udf_to_first_kernel_ms for r in rows)
+            res["fresh_worker"] = {"fork_to_udf_ms_p50": round(fork, 1),
+                                   "udf_to_first_kernel_ms_p50": round(kernel, 1),
+                                   "fork_to_first_kernel_ms_p50": round(median(
+                                       r.fork_to_udf_ms + r.udf_to_first_kernel_ms
+                                       for r in rows), 1)}
+        finally:
+            spark.stop()
     print(json.dumps(out))
 
 

@@ -9,10 +9,14 @@ Query plan (SURVEY.md §3.4):
       round(√Q))
     → groupBy(__qbucket, salt) [cogrouped with the tombstone frame keyed the
       same way] .applyInArrow(_score_group)      ← the only hash shuffle
-    → repartition(1): the shard top-ks (~S·k rows per query plus ties),
-      each carrying its k, ranked by one window row_number and sorted by
-      (query_id, rank) in that single partition — one exchange, no
-      range-partition sample
+    → toArrow() to the driver: the shard top-ks (≤ S·k rows per query plus
+      ties, S·k·Q for a batch of Q queries — the rows one single-partition
+      ranking task would hold), each carrying its k
+    → coordinator merge in numpy (_merge_shard_topks): rank by score desc,
+      doc_id asc within each query, keep rank ≤ k, and return the hits as
+      a local relation in (query_id, rank) order — no second exchange and
+      no ranking stage, like a search engine's coordinating node reducing
+      its shards' top-k (query-then-fetch)
 
 Because every term's postings are sharded by the same doc-hash (build.py),
 the rows of one (query, salt) hold a *complete, disjoint document subspace*:
@@ -38,7 +42,7 @@ BMW, SIGIR'11); :func:`_score_group` states the bound and why it is safe.
 
 The request is built in O(1) driver→JVM round trips whatever the number of
 terms or queries: the IN lists are SQL text (``functions.sqltext.col_isin``),
-and so are the projection and the ranking tail.
+and so is the projection.
 """
 
 from __future__ import annotations
@@ -46,7 +50,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..functions.sqltext import col_isin
 from ..functions.varbyte import (
@@ -60,6 +64,11 @@ _KERNEL_COLS = ("query_id", "k", "term", "n_docs", "idf", "block_max_tf",
 _STREAMS = (("doc_ids_vb", "off_d"), ("tfs_vb", "off_t"), ("dls_vb", "off_l"))
 _TOPK = pa.schema([("query_id", pa.int32()), ("doc_id", pa.int64()),
                    ("score", pa.float64()), ("k", pa.int32())])
+# a StructType, not DDL text: parsing DDL costs driver→JVM round trips
+_RANKED = T.StructType([T.StructField("query_id", T.IntegerType()),
+                        T.StructField("rank", T.LongType(), nullable=False),
+                        T.StructField("doc_id", T.LongType()),
+                        T.StructField("score", T.DoubleType())])
 
 
 def _starts(keys: np.ndarray) -> np.ndarray:
@@ -225,6 +234,29 @@ def _score_group(table: pa.Table, tombstones: pa.Table | None,
                      k[q[keep]].astype(np.int32)], schema=_TOPK)
 
 
+def _merge_shard_topks(spark: SparkSession, shard_topk: pa.Table,
+                       round_to: int | None) -> DataFrame:
+    """The coordinator merge: shard top-ks (query_id, doc_id, score, k) →
+    (query_id, rank, doc_id, score) as a local relation, ranked by score
+    descending, then doc_id ascending, within each query, cut at rank <= k,
+    in (query_id, rank) order — ``row_number() OVER (PARTITION BY query_id
+    ORDER BY score DESC, doc_id)`` with ``rank <= k``, as one numpy pass."""
+    q, d, score, k = (shard_topk.column(c).to_numpy() for c in _TOPK.names)
+    o = np.lexsort((d, -score, q))
+    q, d, score, k = q[o], d[o], score[o], k[o]
+    start = _starts(q)
+    rank = np.arange(1, q.size + 1) - np.repeat(start, np.diff(start, append=q.size))
+    keep = rank <= k
+    ranked = spark.createDataFrame(
+        pa.table({"query_id": q[keep], "rank": rank[keep], "doc_id": d[keep],
+                  "score": score[keep]}), schema=_RANKED)
+    if round_to is None:
+        return ranked
+    # Spark's own HALF_UP round, folded into the local relation: no job
+    return ranked.selectExpr("query_id", "rank", "doc_id",
+                             f"round(score, {int(round_to)}) AS score")
+
+
 def _scorer_input(spark: SparkSession, reader, qterms: DataFrame | None
                   ) -> tuple[DataFrame, int]:
     """(the scorer's input rows keyed by (__qbucket, salt) and projected to
@@ -258,10 +290,14 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
     """Top-k via the persisted index.  ``reader`` is a plans.build.IndexReader.
 
     Returns (query_id, rank, doc_id, score) ordered by (query_id, rank) —
-    identical to operators.scoring.bm25_topk (test-enforced).  With
+    identical to operators.scoring.bm25_topk (test-enforced).  The ranked
+    result runs its Spark jobs when this function is called: the shard
+    top-ks are collected and merged on the driver, and the returned frame is
+    a local relation over the hits, so collecting it runs no job.  With
     ``candidates=True`` returns the unranked tie-inclusive candidate pool
-    (query_id, doc_id, score, k) so callers can rank under their own doc-id
-    order (used by the oracle gate, which ranks by native table ids).
+    (query_id, doc_id, score, k), lazily, so callers can rank under their
+    own doc-id order (used by the oracle gate, which ranks by native table
+    ids).
     """
     scored, n_qb = _scorer_input(spark, reader, qterms)
     avgdl = reader.avgdl_value()
@@ -290,16 +326,4 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
         )
     if candidates:
         return shard_topk
-    # the shard top-ks are ~S·k rows per query (plus ties): one partition
-    # satisfies both the window's clustering and the final sort, so neither
-    # shuffles again.  SQL text, like the projection above: the same tail
-    # built from Column objects and column names costs ~30 more round trips.
-    score = "score" if round_to is None else f"round(score, {int(round_to)}) AS score"
-    return (
-        shard_topk.repartition(1)
-        .selectExpr("*", "cast(row_number() OVER (PARTITION BY query_id "
-                    "ORDER BY score DESC, doc_id ASC) AS bigint) AS rank")
-        .where("rank <= k")
-        .selectExpr("query_id", "rank", "doc_id", score)
-        .orderBy(F.expr("query_id"), F.expr("rank"))
-    )
+    return _merge_shard_topks(spark, shard_topk.toArrow(), round_to)

@@ -128,7 +128,9 @@ def test_wand_cogrouped_tombstones_no_driver_collect(spark, tmp_path):
     build_incremental(spark, [b0, b1], d, tau=100, n_buckets=4)
     reader = IndexReader(spark, d)
     assert reader.tombstones_df() is not None  # upserts created tombstones
-    df = bm25_topk_wand(spark, reader)
+    # the ranked result is a local relation; the scorer plan is the
+    # candidates frame's
+    df = bm25_topk_wand(spark, reader, candidates=True)
     plan = _plan(df)
     assert "FlatMapCoGroupsInArrow" in plan, plan
 
@@ -146,11 +148,12 @@ def _jobs_in_group(spark, group, action):
 
 
 def test_wand_single_query_job_budget(spark, tmp_path):
-    """A warm single-query WAND request on a clean index runs at most 5
+    """A warm single-query WAND request on a clean index runs at most 4
     Spark jobs: the query terms are a driver-local LocalRelation (collecting
     them runs none), the scorer groups take the one hash shuffle, and the
-    shard top-ks are ranked and sorted in a single partition — no
-    range-partition sample, no second hash shuffle."""
+    shard top-ks are merged on the driver — the ranked result is a local
+    relation, with no ranking stage, range-partition sample or second
+    shuffle."""
     from elasticsearch_data_import_handler_spark.operators.scoring import (
         query_terms_df)
     from elasticsearch_data_import_handler_spark.operators.wand import (
@@ -168,16 +171,19 @@ def test_wand_single_query_job_budget(spark, tmp_path):
                             query_terms_df(spark, rows).collect)
     assert n == 0 and len(got) == 2
 
-    def request():
-        df = bm25_topk_wand(spark, reader, qterms=query_terms_df(spark, rows))
+    def request(**kw):
+        df = bm25_topk_wand(spark, reader, qterms=query_terms_df(spark, rows),
+                            **kw)
         return df, df.collect()
 
     request()  # warm: the reader's lexicon and stats are read once
     n, (df, hits) = _jobs_in_group(spark, "wand-single", request)
-    assert hits and n <= 5, n
-    plan = _plan(df).split("== Initial Plan ==")[0]  # AQE's final plan
+    assert hits and n <= 4, n
+    assert _plan(df).startswith("LocalTableScan"), _plan(df)
+    cands, _ = request(candidates=True)
+    plan = _plan(cands).split("== Initial Plan ==")[0]  # AQE's final plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert plan.count("Exchange SinglePartition") == 1, plan
+    assert "SinglePartition" not in plan, plan
     assert "rangepartitioning" not in plan, plan
 
 
@@ -743,11 +749,12 @@ def _round_trips(action):
 
 
 def test_wand_request_round_trip_budget(spark, taat_reader):
-    """Building a WAND request (query frame + plan, no job) costs a constant
-    number of driver→JVM round trips, whatever the number of terms: a
-    40-query batch over 40 distinct terms costs at most a few more than a
-    two-term single query, and the single query at most 250.  Built with
-    ``Column.isin`` the IN lists cost about four round trips per term."""
+    """Building a ranked WAND request (query frame, plan, and the scorer
+    jobs and driver merge it runs) costs a constant number of driver→JVM
+    round trips, whatever the number of terms: a 40-query batch over 40
+    distinct terms costs at most a few more than a two-term single query,
+    and the single query at most 250.  Built with ``Column.isin`` the IN
+    lists cost about four round trips per term."""
     from elasticsearch_data_import_handler_spark.operators.scoring import (
         query_terms_df)
     from elasticsearch_data_import_handler_spark.operators.wand import (
