@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from elasticsearch_data_import_handler_spark.operators import (
     dedup as D,
     indexing as I,
-    scoring as S,
     similarity as SIM,
     sketches as SK,
     textquality as TQ,
@@ -324,13 +323,6 @@ def q_salt_plan(spark, sf_dir):
         "term", F.col("n_salts").cast("long").alias("n_salts"))
 
 
-def q_bm25_topk(spark, sf_dir):
-    # persist the tokenized docs: term_freqs, doc_stats and corpus_stats
-    # are three scan-rooted subtrees over the same tokenize (no exchange
-    # below them, so ReuseExchange can't dedupe the regexp tokenization)
-    return S.bm25_topk(spark, _docs(spark, sf_dir).persist(), round_to=4)
-
-
 # One shared positional index per sf_dir for the index-backed gate queries
 # (WAND / phrase / bool) — built once per process, reused across gate rows.
 _GATE_INDEX: dict[str, str] = {}
@@ -465,6 +457,13 @@ def _rank_native(native, k, round_to=4):
     score = (F.round("score", round_to) if round_to is not None
              else F.col("score"))
     return out.select("doc_id", score.alias("score"), "rank")
+
+
+def q_bm25_topk(spark, sf_dir):
+    """BM25 top-k of the reference query set, served from the gate index by
+    block-max WAND: ``bm25_topk_wand``'s page 1, native doc ids,
+    (query_id, rank, doc_id, score) in (query_id, rank) order."""
+    return _bm25_page1(spark, sf_dir).drop("k").orderBy("query_id", "rank")
 
 
 def q_bm25_topk_wand(spark, sf_dir):
@@ -923,7 +922,7 @@ def q_query_string_tagged(spark, sf_dir):
     # one vocabulary aggregation feeds both the expansion and the suggester
     # branch (mirrors the oracle's single shared v CTE)
     docs = _read(spark, sf_dir, "documents")
-    vocab = corpus_vocab(docs).persist()
+    vocab = corpus_vocab(docs)
     ex = expand_terms(docs, fuzzy="sort", max_dist=2, prefix="sor",
                       wildcard="s?rt*", vocab=vocab).select(
         F.lit("expand").alias("op"), nulll.alias("doc_id"),
@@ -1029,13 +1028,13 @@ def q_multi_match(spark, sf_dir):
         multi_match_fields_agg)
 
     # best_fields and most_fields are scalar combines over the SAME
-    # per-field aggregate — compute the field legs once, persist, derive
-    # both modes (round-6: two identical TAAT passes collapsed to one)
+    # per-field aggregate — compute the field legs once, derive both modes
+    # (round-6: two identical TAAT passes collapsed to one)
     body = _gate_index(spark, sf_dir)
     title = _gate_title_index(spark, sf_dir)
     agg = multi_match_fields_agg(
         spark, {"title": title, "body": body}, ["spark", "merge"],
-        boosts={"title": 2.0, "body": 1.0}).persist()
+        boosts={"title": 2.0, "body": 1.0})
     b = _mm_leg(spark, sf_dir, "best_fields", fields_agg=agg).select(
         F.lit("best").alias("op"), "doc_id", "score")
     m = _mm_leg(spark, sf_dir, "most_fields", fields_agg=agg).select(
@@ -1206,10 +1205,10 @@ def q_search_facets(spark, sf_dir):
     subn = [nulld.alias(c) for c in _FACET_SUB_COLS]
     # ONE bool-query pass feeds all four aggregation kinds — exactly how
     # an ES request with a query + an aggs dict runs the query once
-    # persist: the agg branches UNION over this subtree, and an
-    # unpersisted plan would re-execute the postings scan per branch;
-    # the doc-values side (meta) is persisted for the same reason — a
-    # dozen agg branches each re-joined documents to the native-id map
+    # persist both: besides the request's own collect, the composite
+    # after-key collect() in _facet_aggs_only reads them (page 2's cursor
+    # is page 1's last key), a second Spark action over the postings scan
+    # and the documents-to-native-id join
     scored = _facet_scored(spark, reader).persist()
     meta = _facet_meta_full(spark, sf_dir, reader).persist()
     terms = _facet_terms_only(spark, sf_dir, scored=scored, meta=meta)
@@ -1577,10 +1576,10 @@ def q_minhash_verified(spark, sf_dir):
     set."""
     nulld = F.lit(None).cast("double")
     nulll = F.lit(None).cast("long")
-    # persist: the verified pair set feeds BOTH the op='pairs' branch and
-    # the connected-components branch — without it the whole LSH+verify
-    # pipeline executes twice (guide §5: reuse > recompute when the reused
-    # frame is output-scale, as the verified pairs are)
+    # persist: besides the request's own collect, the per-round
+    # convergence collect()s in neardup_clusters read these pairs (the
+    # first round builds its edge set from them); without the cache the
+    # LSH+verify pipeline runs once per action
     pairs = _minhash_pairs_only(spark, sf_dir).persist()
     pr = pairs.select(F.lit("pairs").alias("op"), "id_a", "id_b", "jaccard",
                       nulll.alias("cluster_id"), nulll.alias("cluster_size"),
@@ -2014,7 +2013,7 @@ def q_function_score(spark, sf_dir):
     'linear' (two-sided ES decay shapes on warc_ts), op='fvf'
     (field_value_factor 0.1·sqrt(doc_len)), op='rand' (seeded
     deterministic random_score) — boost_mode=multiply throughout.
-    The bool query is scored ONCE and persisted; each op is a multiplier
+    The bool query is scored ONCE; each op is a multiplier
     over the shared candidate frame (exactly how ES evaluates one query
     with N functions — and the round-6 fix for 5 identical TAAT passes)."""
     from elasticsearch_data_import_handler_spark.operators.textsearch import (
@@ -2022,7 +2021,7 @@ def q_function_score(spark, sf_dir):
 
     reader = _gate_index(spark, sf_dir)
     scored = bool_query(spark, reader, must=["spark"], should=["merge"],
-                        min_should=0).persist()
+                        min_should=0)
     legs = [_fs_leg(spark, sf_dir, op, scored=scored).select(
         F.lit(op).alias("op"), "doc_id", "score")
         for op in ("exp", "gauss", "linear", "fvf", "rand")]
@@ -2287,8 +2286,8 @@ def q_query_combinators(spark, sf_dir):
     )
 
     nullr = F.lit(None).cast("long")
-    # persist: dm feeds its own branch, the page-1 cursor fetch, and the
-    # page-2 filter — three evaluations of the dis_max pipeline otherwise
+    # persist: besides the request's own collect, the page-1 cursor
+    # first() below is a second Spark action over the dis_max pipeline
     dm = q_dis_max(spark, sf_dir).persist()
     dm_b = dm.select(F.lit("dis_max").alias("op"), "doc_id", "score",
                      nullr.alias("rank"))

@@ -3,11 +3,14 @@ file exists for guide §1.4-style isolation work and is NOT part of the
 driver's timing).
 
 Subcommands:
-  suite [names...]      time the bench suite queries exactly like
-                        bench._bench_sf_queries (first-pass count() at
-                        $SPARK_GRAFT_CPUS over $SPARK_GRAFT_SF_DIR);
+  suite [names...]      time the bench suite queries the way perfbench's
+                        operator_suite does (each collected with toPandas()
+                        at $SPARK_GRAFT_CPUS over $SPARK_GRAFT_SF_DIR, and
+                        everything it persisted released before the next
+                        run, so no rep reads an earlier one's cache);
                         default = all 30 suite names.  --reps N repeats
-                        each query N times in-process and prints all.
+                        each query N times in-process and prints all, with
+                        the Spark jobs and stages of each run.
   plans [names...]      write .explain("formatted") for each query to
                         plans/r06/<name>_<tag>.txt (--tag before|after).
   build                 time build_index + bm25 query batch at c8 on the
@@ -77,19 +80,27 @@ def _spark():
 
 
 def cmd_suite(names, reps=1):
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    from tracing import Tracer
+    from workloads import release_persisted
+
     spark, entrymod = _spark()
+    tracer = Tracer(spark, enabled=True)
     out = {}
     try:
         for name in names:
             fn = getattr(entrymod, f"q_{name}")
-            ts = []
+            ts, jobs, stages = [], [], []
             for _ in range(reps):
-                spark.sparkContext.setJobDescription(f"suite:{name}")
-                t0 = time.time()
-                n = fn(spark, SF_DIR).count()
-                ts.append(round(time.time() - t0, 3))
+                with tracer.span(f"suite:{name}") as sp:
+                    n = len(fn(spark, SF_DIR).toPandas())
+                release_persisted(spark)
+                ts.append(round(sp.wall_s, 3))
+                jobs.append(sp.jobs)
+                stages.append(sp.stages)
             out[name] = ts if reps > 1 else ts[0]
-            print(f"{name}: {ts} (rows={n})", file=sys.stderr, flush=True)
+            print(f"{name}: {ts} (rows={n}, jobs={jobs}, stages={stages})",
+                  file=sys.stderr, flush=True)
     finally:
         spark.stop()
     print(json.dumps(out))

@@ -526,18 +526,6 @@ def extract_text_udf():
     return _extract
 
 
-def tokenize_udf():
-    """Arrow-vectorized pandas UDF: text → array<string> (oracle-parity path)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _tok(text: pd.Series) -> pd.Series:
-        return text.map(tokenize)
-
-    return _tok
-
-
 def analyze(text: str, analyzer: dict | None = None) -> list[dict]:
     """The ES ``_analyze`` API: explain how ``text`` tokenizes under the
     (possibly index-persisted) analyzer settings — one dict per emitted

@@ -363,9 +363,10 @@ def neardup_clusters(pairs: DataFrame, id_a: str = "id_a",
     (round 6: the separate labels-side left join was one of three shuffle
     joins per round; the fixpoint — component-min labels — is unchanged).
     ``labels`` is localCheckpoint()ed every round to truncate the
-    iterative lineage (the classic iterative-Spark plan-explosion fix).
-    Edges are persisted for reuse across rounds and released before
-    returning.
+    iterative lineage (the classic iterative-Spark plan-explosion fix); each
+    round's checkpoint is released once the next one has materialized, so
+    only the returned frame's stays.  Edges are persisted for reuse across
+    rounds and released before returning.
 
     Returns (doc_id, cluster_id, cluster_size, is_canonical) for every node
     that appears in ≥1 pair; singleton documents never enter the graph and
@@ -381,7 +382,7 @@ def neardup_clusters(pairs: DataFrame, id_a: str = "id_a",
                                    F.col("node").alias("dst"))).persist()
     labels = (nodes.select("node", F.col("node").alias("label"))
               .localCheckpoint(eager=False))
-    prev_sum = None
+    prev_labels, prev_sum = labels, None
     for _ in range(max_iter):
         new = (edges
                .join(labels.select(F.col("node").alias("dst"),
@@ -403,6 +404,11 @@ def neardup_clusters(pairs: DataFrame, id_a: str = "id_a",
                   .select("node", F.coalesce("v", "label").alias("label"))
                   .localCheckpoint(eager=False))
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
+        # this round's checkpoint has materialized and cut its lineage, so
+        # nothing reads the previous round's; its blocks belong to the RDD
+        # under its LogicalRDD plan, which DataFrame.unpersist() misses
+        prev_labels._jdf.queryExecution().logical().rdd().unpersist(False)
+        prev_labels = labels
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum

@@ -1,16 +1,15 @@
-"""BM25 scoring + top-k (C11/C12) — the join-based scorer.
+"""BM25 scoring + top-k (C11/C12): the join-based reference scorer, plus
+the query-term frame, search_after and rescore helpers the request paths
+use.
 
-This is the fully-declarative scoring path: broadcast the (tiny) query-term
-table, join it to term_freqs on term, bring in doc_len and corpus stats, sum
-BM25 contributions per (query_id, doc_id), rank with a fixed total order
-(score DESC, doc_id ASC — C12's rank-determinism contract).
-
-At scale: the query-term side is O(queries × terms) rows → always broadcast;
-term_freqs→lexicon join is also broadcast (lexicon pruned to query terms
-first).  The only real shuffle is the per-(query_id, doc_id) aggregation,
-whose cardinality is bounded by Σ df(query terms).  The block-max WAND path
-(operators/wand.py) replaces even that with partition-local heaps over the
-compressed index.
+``bm25_topk`` (with ``score_bm25_join`` and ``topk``) is not a request
+path.  It re-tokenizes a raw docs frame and scores it fully declaratively:
+broadcast the (tiny) query-term table, join it to term_freqs on term, bring
+in doc_len and corpus stats, sum BM25 contributions per (query_id, doc_id),
+rank with a fixed total order (score DESC, doc_id ASC — C12's
+rank-determinism contract).  The tests compare the block-max WAND path
+(operators/wand.py), which serves every BM25 top-k request from the
+compressed index, against it.
 """
 
 from __future__ import annotations
@@ -70,7 +69,8 @@ def topk(scored: DataFrame, k: int | None = None) -> DataFrame:
 
 def bm25_topk(spark, docs: DataFrame, qterms: DataFrame | None = None,
               round_to: int | None = 4) -> DataFrame:
-    """End-to-end join-based BM25 top-k over a docs frame (M1 flagship).
+    """Join-based BM25 top-k over a raw docs frame: the reference the tests
+    compare the WAND path against; no request path calls it.
 
     Returns (query_id, rank, doc_id, score) ordered by (query_id, rank).
     """

@@ -66,3 +66,23 @@ def test_k_edge_cases(spark, documents):
     out = bm25_topk(spark, docs_from_documents(documents), round_to=None)
     assert out.filter("query_id = 10").count() == 1  # k=1
     assert out.filter("query_id = 11").count() == 100  # k=100 (corpus has ≥100 hits)
+
+
+def test_entry_bm25_topk_matches_join_scorer(spark, sf_dir, documents):
+    """The suite's bm25_topk entry, served from the gate index by WAND,
+    returns the join scorer's rows in (query_id, rank) order with the same
+    dtypes.  Documents whose scores agree within 1e-6 may trade ranks: the
+    two engines sum a document's term scores in different orders."""
+    import __spark_entry__ as m
+
+    got = m.q_bm25_topk(spark, sf_dir)
+    exp = bm25_topk(spark, docs_from_documents(documents), round_to=4)
+    assert got.dtypes == exp.dtypes
+    g, e = got.toPandas(), exp.toPandas()
+    assert g[["query_id", "rank"]].equals(e[["query_id", "rank"]])
+    assert not g.duplicated(["query_id", "doc_id"]).any()
+    score = {(q, d): s for q, d, s in zip(e["query_id"], e["doc_id"], e["score"])}
+    for q, d, s_got, s_exp in zip(g["query_id"], g["doc_id"], g["score"],
+                                  e["score"]):
+        assert abs(s_got - s_exp) <= 1e-6, (q, d)
+        assert (q, d) in score and abs(score[(q, d)] - s_got) <= 1e-6, (q, d)

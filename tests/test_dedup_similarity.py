@@ -292,6 +292,23 @@ def test_neardup_clusters_transitive_components(spark):
     assert sum(1 for r in out.values() if r["is_canonical"]) == 3
 
 
+def test_neardup_clusters_releases_superseded_rounds(spark):
+    """Each round's labels checkpoint is released once the next round has
+    materialized: only the checkpoint the returned frame reads stays."""
+    from elasticsearch_data_import_handler_spark.operators.dedup import (
+        neardup_clusters)
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    # a 200-node path needs several pointer-jumping rounds to converge
+    df = spark.createDataFrame([(i, i + 1) for i in range(199)],
+                               ["id_a", "id_b"])
+    out = neardup_clusters(df)  # holds the one checkpoint it reads
+    rows = out.collect()
+    assert len(rows) == 200 and {r["cluster_id"] for r in rows} == {0}
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 1
+
+
 def test_dup_span_fraction_coverage_union(spark):
     from elasticsearch_data_import_handler_spark.operators.textquality import (
         dup_span_fraction)

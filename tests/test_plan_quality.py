@@ -19,14 +19,32 @@ def test_filter_and_projection_pushdown(spark, sf_dir):
     assert "l_extendedprice" not in plan.split("ReadSchema")[1][:400]
 
 
-def test_bm25_join_scorer_broadcasts_query_side(spark, sf_dir):
-    import __spark_entry__ as m
+def test_bm25_join_scorer_broadcasts_query_side(spark, documents):
+    from elasticsearch_data_import_handler_spark.operators.indexing import (
+        docs_from_documents)
+    from elasticsearch_data_import_handler_spark.operators.scoring import (
+        bm25_topk)
 
-    df = m.q_bm25_topk(spark, sf_dir)
+    df = bm25_topk(spark, docs_from_documents(documents))
     df.collect()  # AQE finalizes the physical plan only after execution
     plan = _plan(df)
     assert "BroadcastExchange" in plan  # query terms + lexicon side
     assert "*(" in plan  # WholeStageCodegen spans render as *(n) markers
+
+
+@pytest.mark.parametrize("name", ["bm25_topk", "multi_match",
+                                  "function_score", "query_string_tagged"])
+def test_entry_persists_nothing_read_once(spark, sf_dir, name):
+    """An entry whose intermediates are each read by a single Spark action
+    persists none of them: the collect adds no persisted RDD."""
+    import __spark_entry__ as m
+
+    # an earlier test's cached frame with the same plan would hide a leak
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    getattr(m, f"q_{name}")(spark, sf_dir).toPandas()
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
 
 
 def test_postings_scan_partition_pruning(spark, tmp_path):

@@ -7,7 +7,6 @@ from elasticsearch_data_import_handler_spark.functions.textanalysis import (
     extract_text_udf,
     jvm_tokens_col,
     tokenize,
-    tokenize_udf,
 )
 from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
 
@@ -34,13 +33,6 @@ def test_jvm_python_tokenizer_parity(spark, documents):
     rows = df.collect()
     for r in rows:
         assert list(r["jvm_tokens"]) == tokenize(r["text"]), f"doc {r['doc_id']}"
-
-
-def test_pandas_udf_tokenizer_parity(spark, documents):
-    df = documents.limit(100).select("doc_id", "text",
-                                     tokenize_udf()(F.col("text")).alias("toks"))
-    for r in df.collect():
-        assert list(r["toks"]) == tokenize(r["text"])
 
 
 def test_extraction_byte_identity_through_arrow(spark):
