@@ -23,6 +23,13 @@ Subcommands:
                         decoded posting and groups/s, median of --reps
                         passes.  Spark only builds the index and writes the
                         groups once, under .bench/.
+  format                the posting format on the same seeded search index
+                        (--seed, default 7): encoded bytes per posting of
+                        each stream, ns per posting to decode the doc
+                        stream and map its ordinals to doc_ids (through the
+                        segment doc maps) and to encode every posting list
+                        (encode_posting_batch), median of --reps passes,
+                        and the index's on-disk bytes per subdirectory.
   task_overhead         the fixed cost of one Python task, under the stock
                         pyspark.daemon and under the engine's preloading
                         daemon (daemon.py).  Runs --reps (default 30)
@@ -174,8 +181,25 @@ def cmd_build(cpus=8, reps=1):
     print(json.dumps(out))
 
 
-def cmd_wand(seed=7, reps=5, cpus=4):
+def _seed_index(spark, seed):
+    """Build the perfbench ``search`` index of ``seed`` under .bench/;
+    returns (its work dir, the index dir, the seeded inputs)."""
     import shutil
+
+    from elasticsearch_data_import_handler_spark.plans.build import build_index
+
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    from gen import Inputs
+
+    work = os.path.join(REPO, ".bench", f"wand_seed{seed}")
+    inp = Inputs(os.path.join(work, "perfbench"), seed)
+    idx = os.path.join(work, "idx")
+    shutil.rmtree(idx, ignore_errors=True)
+    build_index(spark, spark.read.parquet(inp.search_corpus()), idx)
+    return work, idx, inp
+
+
+def cmd_wand(seed=7, reps=5, cpus=4):
     from statistics import median
 
     import pyarrow as pa
@@ -185,24 +209,16 @@ def cmd_wand(seed=7, reps=5, cpus=4):
     from elasticsearch_data_import_handler_spark.operators import wand
     from elasticsearch_data_import_handler_spark.operators.scoring import (
         query_terms_df)
-    from elasticsearch_data_import_handler_spark.plans.build import (
-        IndexReader, build_index)
+    from elasticsearch_data_import_handler_spark.plans.build import IndexReader
+    from elasticsearch_data_import_handler_spark.plans.docmap import DocMaps
     from elasticsearch_data_import_handler_spark.queryset import query_terms
     from elasticsearch_data_import_handler_spark.session import get_spark
 
-    sys.path.insert(0, os.path.join(REPO, "perfbench"))
-    from gen import Inputs
-
-    work = os.path.join(REPO, ".bench", f"wand_seed{seed}")
-    inp = Inputs(os.path.join(work, "perfbench"), seed)
-    corpus, reqs = inp.search_corpus(), inp.search_requests()
-    queries = reqs["batch"][0]["queries"]
-    groups_dir = os.path.join(work, "groups")
     spark = get_spark("bench-extra-wand", cpus=cpus)
     try:
-        idx = os.path.join(work, "idx")
-        shutil.rmtree(idx, ignore_errors=True)
-        build_index(spark, spark.read.parquet(corpus), idx)
+        work, idx, inp = _seed_index(spark, seed)
+        queries = inp.search_requests()["batch"][0]["queries"]
+        groups_dir = os.path.join(work, "groups")
         reader = IndexReader(spark, idx)
         avgdl = reader.avgdl_value()
         rows = [(q, t, k) for q, text, k in queries for t in query_terms(text)]
@@ -214,6 +230,7 @@ def cmd_wand(seed=7, reps=5, cpus=4):
     qb, salt = table["__qbucket"].to_numpy(), table["salt"].to_numpy()
     groups = [table.filter(pa.array((qb == b) & (salt == s)))
               for b, s in sorted(set(zip(qb.tolist(), salt.tolist())))]
+    doc_maps = DocMaps(idx)
 
     decoded = 0
     run = wand.decode_posting_runs
@@ -227,14 +244,14 @@ def cmd_wand(seed=7, reps=5, cpus=4):
     wand.decode_posting_runs = counting
     try:
         for g in groups:
-            wand._score_group(g, None, avgdl)
+            wand._score_group(g, None, avgdl, doc_maps)
     finally:
         wand.decode_posting_runs = run
     secs = []
     for _ in range(reps):
         t0 = time.perf_counter()
         for g in groups:
-            wand._score_group(g, None, avgdl)
+            wand._score_group(g, None, avgdl, doc_maps)
         secs.append(time.perf_counter() - t0)
     s = median(secs)
     print(json.dumps({
@@ -244,6 +261,66 @@ def cmd_wand(seed=7, reps=5, cpus=4):
         "postings_decoded": decoded, "kernel_s": [round(x, 4) for x in secs],
         "ns_per_decoded_posting": round(1e9 * s / max(1, decoded), 1),
         "groups_per_s": round(len(groups) / s, 1)}))
+
+
+def cmd_format(seed=7, reps=5, cpus=4):
+    from statistics import median
+
+    import numpy as np
+    import pyarrow.dataset as pads
+
+    from elasticsearch_data_import_handler_spark.functions.varbyte import (
+        arrow_binary, decode_doc_runs, decode_posting_runs, encode_posting_batch)
+    from elasticsearch_data_import_handler_spark.plans.docmap import (
+        DocMaps, segment_maps)
+    from elasticsearch_data_import_handler_spark.session import get_spark
+
+    spark = get_spark("bench-extra-format", cpus=cpus)
+    try:
+        _, idx, _ = _seed_index(spark, seed)
+    finally:
+        spark.stop()
+    t = pads.dataset(f"{idx}/postings", format="parquet", partitioning="hive") \
+        .to_table(columns=["batch", "salt", "n_docs", "doc_ids_vb", "tfs_vb",
+                           "dls_vb"]).combine_chunks()
+    n_docs = t["n_docs"].to_numpy().astype(np.int64)
+    n = int(n_docs.sum())
+    streams = {}
+    for c in ("doc_ids_vb", "tfs_vb", "dls_vb"):
+        offs, data = arrow_binary(t[c].chunk(0))
+        streams[c] = data[offs[0]:offs[-1]]
+    batch, salt = t["batch"].to_numpy(), t["salt"].to_numpy()
+    doc_maps = DocMaps(idx)
+
+    def timed(fn):
+        secs = []
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            fn()
+            secs.append(time.perf_counter() - t0)
+        return round(1e9 * median(secs) / n, 1)
+
+    def decode_doc_ids():
+        flat, base = segment_maps(doc_maps, batch, salt)
+        return flat[np.repeat(base, n_docs)
+                    + decode_doc_runs(streams["doc_ids_vb"], n_docs)]
+
+    decode_ns = timed(decode_doc_ids)
+    d, tf, dl = decode_posting_runs(*streams.values(), n_docs)
+    gstarts = np.cumsum(n_docs) - n_docs
+    encode_ns = timed(lambda: encode_posting_batch(d, tf, dl, gstarts))
+    sizes = {}
+    for root, _, files in os.walk(idx):
+        top = os.path.relpath(root, idx).split(os.sep)[0]
+        sizes[top] = sizes.get(top, 0) + sum(
+            os.path.getsize(os.path.join(root, f)) for f in files)
+    print(json.dumps({
+        "seed": seed, "postings": n, "posting_rows": t.num_rows,
+        "bytes_per_posting": {c: round(v.size / n, 3) for c, v in streams.items()},
+        "doc_id_decode_ns_per_posting": decode_ns,
+        "encode_ns_per_posting": encode_ns,
+        "index_bytes": dict(sorted(sizes.items())),
+        "index_bytes_total": sum(sizes.values())}))
 
 
 def _fork_to_now_ms() -> float:
@@ -338,7 +415,7 @@ if __name__ == "__main__":
 
     ap = argparse.ArgumentParser()
     ap.add_argument("cmd", choices=["suite", "plans", "build", "wand",
-                                    "task_overhead"])
+                                    "format", "task_overhead"])
     ap.add_argument("names", nargs="*")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--reps", type=int, default=None)
@@ -355,5 +432,8 @@ if __name__ == "__main__":
     elif a.cmd == "wand":
         cmd_wand(seed=a.seed, reps=a.reps or 5,
                  cpus=min(a.cpus or 8, os.cpu_count() or 1))
+    elif a.cmd == "format":
+        cmd_format(seed=a.seed, reps=a.reps or 5,
+                   cpus=min(a.cpus or 8, os.cpu_count() or 1))
     else:
         cmd_build(cpus=a.cpus or 8, reps=a.reps or 1)

@@ -13,6 +13,7 @@ import numpy  # noqa: F401
 import pandas  # noqa: F401  (pyarrow imports it lazily, at the first pa.array)
 import pyarrow  # noqa: F401
 import pyarrow.compute  # noqa: F401
+import pyarrow.parquet  # noqa: F401  (segment doc maps, plans/docmap.py)
 from pyspark import daemon
 
 # the kernel modules Python UDFs unpickle into; the package installs zipcache

@@ -458,17 +458,29 @@ def _light_p2_col(t):
             .otherwise(t))
 
 
+def porter_stem_lists(toks: pd.Series) -> pd.Series:
+    """Porter-stem a batch of token lists, calling :func:`porter_stem` once
+    per *distinct* token of the batch: the batch's tokens are flattened,
+    dictionary-encoded, the dictionary is stemmed, and the lists are rebuilt
+    from the original offsets (null lists stay null)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    lists = pa.array(toks, type=pa.list_(pa.string()))
+    enc = pc.dictionary_encode(lists.values)
+    stems = pa.array([porter_stem(w) for w in enc.dictionary.to_pylist()],
+                     pa.string())
+    out = pa.ListArray.from_arrays(lists.offsets, stems.take(enc.indices),
+                                   mask=lists.is_null())
+    return out.to_pandas().set_axis(toks.index)
+
+
 def porter_udf():
     """Arrow-vectorized Porter filter: array<string> → array<string>."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _stem(toks: pd.Series) -> pd.Series:
-        return toks.map(lambda xs: xs if xs is None
-                        else [porter_stem(t) for t in xs])
-
-    return _stem
+    return F.pandas_udf(porter_stem_lists, T.ArrayType(T.StringType()))
 
 
 def jvm_tokens_col(col_name: str = "text", analyzer: dict | None = None):

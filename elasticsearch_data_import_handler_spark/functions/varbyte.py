@@ -1,11 +1,16 @@
 """Delta + varbyte posting-list codec with block-max metadata (numpy-vectorized).
 
-The index format (SURVEY.md §1.2 / §2C C8): per ``(term, salt)`` group the
-doc_ids are sorted ascending, delta-encoded, then varbyte (LEB128-style,
-7 data bits per byte, high bit = continuation) compressed.  tf and doc_len
-streams are varbyte'd without deltas.  Blocks of ``BLOCK_SIZE`` postings carry
-``(max_doc, max_tf, max_score)`` so the query path can do block-max WAND
-pruning (Ding & Suel, SIGIR'11 — public literature) without decoding.
+The index format (SURVEY.md §1.2 / §2C C8): a posting names its document by
+a dense **per-segment ordinal** — the doc's rank, from 0, among the doc_ids
+of its ``(batch, salt)`` segment (``doc_stats/batch=K`` holds the segment's
+``ord → doc_id`` map; plans/docmap.py reads it back).  Per ``(term, salt)``
+group the ordinals are sorted ascending, delta-encoded, then varbyte
+(LEB128-style, 7 data bits per byte, high bit = continuation) compressed;
+dense ids make most gaps one byte, where 64-bit hash gaps took eight or
+nine.  tf and doc_len streams are varbyte'd without deltas.  Blocks of
+``BLOCK_SIZE`` postings carry ``(max_doc, max_tf, min_dl)`` so the query
+path can do block-max WAND pruning (Ding & Suel, SIGIR'11 — public
+literature) without decoding.
 
 Everything here is numpy-vectorized: these kernels run inside Arrow UDFs on
 executors, so no per-row Python is allowed (BASELINE.json input_hint
@@ -101,11 +106,6 @@ def delta_encode(sorted_vals: np.ndarray) -> np.ndarray:
     return out
 
 
-def delta_decode(deltas: np.ndarray) -> np.ndarray:
-    d = np.asarray(deltas, dtype=np.uint64)
-    return np.cumsum(d, dtype=np.uint64)
-
-
 def _block_starts(n: int) -> np.ndarray:
     return np.arange(0, n, BLOCK_SIZE, dtype=np.int64)
 
@@ -114,11 +114,12 @@ def encode_posting_list(doc_ids: np.ndarray, tfs: np.ndarray, doc_lens: np.ndarr
                         assume_sorted: bool = False):
     """Encode one (term, salt) posting list with block-independent blocks.
 
-    doc_ids: int64 (signed, xxhash64-derived), sorted ascending here.
-    The doc_id stream is delta-encoded **within** each 128-posting block,
-    with the block's first value stored absolute (order-preserving
-    signed→unsigned map), so any block can be decoded without its
-    predecessors — the classic restart-point layout block-max WAND needs.
+    doc_ids: the postings' per-segment doc ordinals (non-negative int64,
+    distinct), sorted ascending here.  The doc stream is delta-encoded
+    **within** each 128-posting block, with the block's first ordinal
+    stored absolute, so any block can be decoded without its predecessors —
+    the classic restart-point layout block-max WAND needs.  ``block_max_doc``
+    is the block's last ordinal.
 
     Block metadata is **stats-independent**: (max_doc, max_tf, min_dl) per
     block.  The BM25 contribution is increasing in tf and decreasing in dl,
@@ -133,7 +134,7 @@ def encode_posting_list(doc_ids: np.ndarray, tfs: np.ndarray, doc_lens: np.ndarr
     """
     if assume_sorted:
         # the hot path: the build shuffle already sortWithinPartitions'd by
-        # doc_id — a redundant argsort here is pure memory-bandwidth waste
+        # ordinal — a redundant argsort here is pure memory-bandwidth waste
         # (the contended resource on many-core hosts)
         d = np.ascontiguousarray(doc_ids, dtype=np.int64)
         t = np.ascontiguousarray(tfs, dtype=np.int64)
@@ -144,7 +145,7 @@ def encode_posting_list(doc_ids: np.ndarray, tfs: np.ndarray, doc_lens: np.ndarr
         t = np.asarray(tfs, dtype=np.int64)[order]
         dl = np.asarray(doc_lens, dtype=np.int64)[order]
     n = d.size
-    u = d.astype(np.uint64) ^ np.uint64(1 << 63)  # order-preserving signed→unsigned
+    u = d.astype(np.uint64)
     stream = delta_encode(u)
     starts = _block_starts(n)
     stream[starts] = u[starts]  # block-first values absolute → independent blocks
@@ -179,7 +180,7 @@ def encode_posting_batch(d: np.ndarray, t: np.ndarray, dl: np.ndarray,
     ``encode_posting_list`` loop was the encode stage's dominant cost —
     ~10^5 small-python-call groups per task at web-scale vocabularies).
 
-    ``d``/``t``/``dl`` are the concatenated sorted doc_id/tf/doc_len
+    ``d``/``t``/``dl`` are the concatenated sorted ordinal/tf/doc_len
     streams; ``gstarts`` holds each group's start index (first element 0).
     Returns one dict per group shaped exactly like
     :func:`encode_posting_list`'s output and **byte-identical** to it:
@@ -193,7 +194,7 @@ def encode_posting_batch(d: np.ndarray, t: np.ndarray, dl: np.ndarray,
     g_of = np.searchsorted(gs, np.arange(n), side="right") - 1
     off_in_g = np.arange(n) - gs[g_of]
     bs_idx = np.nonzero(off_in_g % BLOCK_SIZE == 0)[0]   # all block starts
-    u = d.astype(np.uint64) ^ np.uint64(1 << 63)
+    u = d.astype(np.uint64)
     stream = u.copy()
     if n > 1:
         np.subtract(u[1:], u[:-1], out=stream[1:])
@@ -214,24 +215,26 @@ def encode_posting_batch(d: np.ndarray, t: np.ndarray, dl: np.ndarray,
     min_dl = np.minimum.reduceat(dl, bs_idx).astype(np.int32)
     gb = np.searchsorted(bs_idx, gs)          # first block per group
     gb_end = np.concatenate((gb[1:], [bs_idx.size]))
-    cd, ct, cl = cums["d"], cums["t"], cums["l"]
+    # every block's byte offset inside its group's stream, in one pass
+    offs = {name: (c[bs_idx] - c[gs[g_of_bs]]).astype(np.int64)
+            for name, c in cums.items()}
+    # Python ints for the per-group slicing: numpy scalars cost more per use
+    (d0, d1), (t0, t1), (l0, l1) = ((c[gs].tolist(), c[ge].tolist())
+                                    for c in (cums["d"], cums["t"], cums["l"]))
     bd, bt, bl = bufs["d"], bufs["t"], bufs["l"]
     out = []
-    for gi in range(gs.size):
-        s, e = gs[gi], ge[gi]
-        b0, b1 = gb[gi], gb_end[gi]
-        blocks = bs_idx[b0:b1]
+    for gi, (s, e, b0, b1) in enumerate(zip(gs.tolist(), ge.tolist(),
+                                            gb.tolist(), gb_end.tolist())):
         out.append({
-            "n_docs": int(e - s),
+            "n_docs": e - s,
             "block_max_doc": max_doc[b0:b1],
             "block_max_tf": max_tf[b0:b1],
             "block_min_dl": min_dl[b0:b1],
-            "off_d": (cd[blocks] - cd[s]).astype(np.int64),
-            "off_t": (ct[blocks] - ct[s]).astype(np.int64),
-            "off_l": (cl[blocks] - cl[s]).astype(np.int64),
-            "doc_ids_vb": bd[cd[s]:cd[e]],
-            "tfs_vb": bt[ct[s]:ct[e]],
-            "dls_vb": bl[cl[s]:cl[e]],
+            "off_d": offs["d"][b0:b1], "off_t": offs["t"][b0:b1],
+            "off_l": offs["l"][b0:b1],
+            "doc_ids_vb": bd[d0[gi]:d1[gi]],
+            "tfs_vb": bt[t0[gi]:t1[gi]],
+            "dls_vb": bl[l0[gi]:l1[gi]],
         })
     return out
 
@@ -244,28 +247,43 @@ def gather_ranges(buf: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.n
     return buf[np.arange(shift.size) + shift]
 
 
-def decode_doc_runs(doc_ids_vb, run_lens=None) -> np.ndarray:
-    """Doc ids of many *runs* decoded in one pass → int64.
+def _undelta(stream: np.ndarray, resets: np.ndarray) -> np.ndarray:
+    """Prefix sums of a gap stream, restarted at each index in ``resets``
+    (ascending, from 0), where the stream holds an absolute value."""
+    c = np.cumsum(stream, dtype=np.uint64)
+    # value i of the chain starting at s: c[i] - c[s] + stream[s]
+    return c - np.repeat(c[resets] - stream[resets],
+                         np.diff(resets, append=stream.size))
 
-    ``doc_ids_vb`` holds the doc-id bytes of consecutive runs; a run is one or
-    more whole blocks of one posting list, starting at a block boundary, and
-    holds ``run_lens[i]`` postings (None: one run).  Inside a run the delta
-    chain restarts every ``BLOCK_SIZE`` values, at the block-first absolutes
-    the encoder wrote."""
+
+def decode_doc_runs(doc_ids_vb, run_lens=None) -> np.ndarray:
+    """Doc ordinals of many *runs* decoded in one pass → int64.
+
+    ``doc_ids_vb`` holds the doc-stream bytes of consecutive runs; a run is
+    one or more whole blocks of one posting list, starting at a block
+    boundary, and holds ``run_lens[i]`` postings (None: one run).  Inside a
+    run the delta chain restarts every ``BLOCK_SIZE`` values, at the
+    block-first absolutes the encoder wrote.  Map the ordinals to doc_ids
+    with the segments' maps (plans/docmap.py)."""
     stream = varbyte_decode(doc_ids_vb)
     n = stream.size
     lens = np.asarray([n] if run_lens is None else run_lens, dtype=np.int64)
     pos = np.arange(n) - np.repeat(np.cumsum(lens) - lens, lens)  # in its run
-    resets = np.flatnonzero(pos % BLOCK_SIZE == 0)
-    c = np.cumsum(stream, dtype=np.uint64)
-    # value i of the block starting at s: c[i] - c[s] + stream[s]
-    base = np.repeat(c[resets] - stream[resets], np.diff(resets, append=n))
-    return ((c - base) ^ np.uint64(1 << 63)).astype(np.int64)
+    return _undelta(stream, np.flatnonzero(pos % BLOCK_SIZE == 0)).astype(np.int64)
+
+
+def decode_delta_runs(buf, run_lens) -> np.ndarray:
+    """Many back-to-back delta-coded lists (first value absolute, e.g. the
+    positions of one (term, doc) row each) decoded in one pass → int64."""
+    stream = varbyte_decode(buf)
+    lens = np.asarray(run_lens, dtype=np.int64)
+    starts = np.cumsum(lens) - lens
+    return _undelta(stream, starts[lens > 0]).astype(np.int64)
 
 
 def decode_posting_runs(doc_ids_vb, tfs_vb, dls_vb, run_lens=None):
-    """The three streams of many runs (see :func:`decode_doc_runs`) → (doc_ids
-    int64, tfs int64, dls int64), concatenated in run order.  A block-max
+    """The three streams of many runs (see :func:`decode_doc_runs`) → (doc
+    ordinals int64, tfs int64, dls int64), concatenated in run order.  A block-max
     scorer gathers its kept blocks' byte ranges first (:func:`gather_ranges`);
     whole posting lists already lie back to back in an Arrow binary
     column."""
@@ -275,7 +293,7 @@ def decode_posting_runs(doc_ids_vb, tfs_vb, dls_vb, run_lens=None):
 
 
 def decode_posting_list(doc_ids_vb: bytes, tfs_vb: bytes, dls_vb: bytes):
-    """Full decode of one posting list → (doc_ids int64 asc, tfs, dls)."""
+    """Full decode of one posting list → (doc ordinals int64 asc, tfs, dls)."""
     return decode_posting_runs(doc_ids_vb, tfs_vb, dls_vb)
 
 

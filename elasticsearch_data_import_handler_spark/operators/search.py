@@ -768,7 +768,7 @@ def significant_terms(spark, reader, must=None, should=None, must_not=None,
                        reader.state.committed_batches)
     post = spark.read.option(
         "basePath", f"{reader.index_dir}/postings").parquet(*dirs)
-    fg = (_decoded_doc_ids(post)
+    fg = (_decoded_doc_ids(post, reader.index_dir)
           .join(matched, "doc_id", "left_semi")
           .groupBy("term").agg(F.count(F.lit(1)).alias("fg_count")))
     bg = reader.lexicon().select("term", F.col("df").alias("bg_count"))

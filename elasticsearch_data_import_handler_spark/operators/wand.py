@@ -39,6 +39,9 @@ tombstone per *query* instead of per bucket would shuffle |tombstones| ×
 
 The scorer is the vectorized-exact block-max variant (after Ding & Suel's
 BMW, SIGIR'11); :func:`_score_group` states the bound and why it is safe.
+Postings name docs by per-segment ordinals; the kernel maps them to doc_ids
+(plans/docmap.py) right after each decode, so tombstones, the tie-inclusive
+cut and the merge all see doc_ids.
 
 The request is built in O(1) driver→JVM round trips whatever the number of
 terms or queries: the IN lists are SQL text (``functions.sqltext.col_isin``),
@@ -56,9 +59,11 @@ from ..functions.sqltext import col_isin
 from ..functions.varbyte import (
     BLOCK_SIZE, arrow_binary, arrow_list, bm25_partial, decode_posting_runs,
     gather_ranges)
+from ..plans.docmap import DocMaps, segment_maps
 
-# what the scorer reads; nothing else crosses the shuffle
-_KERNEL_COLS = ("query_id", "k", "term", "n_docs", "idf", "block_max_tf",
+# what the scorer reads beside the group's salt; nothing else crosses the
+# shuffle
+_KERNEL_COLS = ("query_id", "k", "term", "batch", "n_docs", "idf", "block_max_tf",
                 "block_min_dl", "off_d", "off_t", "off_l", "doc_ids_vb",
                 "tfs_vb", "dls_vb")
 _STREAMS = (("doc_ids_vb", "off_d"), ("tfs_vb", "off_t"), ("dls_vb", "off_l"))
@@ -78,12 +83,39 @@ def _starts(keys: np.ndarray) -> np.ndarray:
     return np.flatnonzero(new)
 
 
+def _copies(table: pa.Table) -> np.ndarray:
+    """m per row, in table order: how many rows its (query, term) has per
+    distinct segment row — a query that lists a term twice holds each of
+    the term's segment rows twice.  The copies of a row carry byte-identical
+    doc streams of the same (batch, salt) segment; two segments' ordinal
+    streams can be byte-identical too, so the segment is part of the key."""
+    def codes(*cols):  # dense ids of the distinct tuples of cols
+        key = np.zeros(n, dtype=np.int64)
+        for c in cols:
+            _, c = np.unique(c, return_inverse=True)
+            _, key = np.unique(key * (c.max() + 1) + c, return_inverse=True)
+        return key
+
+    def col(c):
+        return table.column(c).combine_chunks()
+
+    n = table.num_rows
+    qt = codes(col("query_id").to_numpy(),
+               pc.rank(col("term"), tiebreaker="dense").to_numpy())
+    seg = codes(col("batch").to_numpy(), col("salt").to_numpy(),
+                pc.dictionary_encode(col("doc_ids_vb")).indices.to_numpy())
+    distinct = np.unique(qt * n + seg) // n
+    return (np.bincount(qt) / np.bincount(distinct))[qt]
+
+
 def _score_group(table: pa.Table, tombstones: pa.Table | None,
-                 avgdl: float) -> pa.Table:
+                 avgdl: float, doc_maps) -> pa.Table:
     """Exact block-max WAND for every query of one (query-bucket, salt)
     group, in one numpy pass → (query_id, doc_id, score, k) tie-inclusive
     shard top-ks.  ``table`` rows are (query, term, segment) posting rows;
-    ``tombstones`` holds the shard's deleted ids (``__ts_doc_id``) or None.
+    ``tombstones`` holds the shard's deleted ids (``__ts_doc_id``) or None;
+    ``doc_maps[(batch, salt)]`` is a segment's ord → doc_id array
+    (plans/docmap.py), through which every decoded ordinal becomes a doc_id.
 
     For each query:
 
@@ -101,8 +133,9 @@ def _score_group(table: pa.Table, tombstones: pa.Table | None,
     * Block b of a row of term t is skipped when
           m_t·ub(t, b) + Σ_{t'≠t} m_t'·max(t') < θ,
       where m_t counts the copies of the query's t rows (a query that lists
-      a term twice scores it twice).  Copies are identical rows, so all m_t
-      copies of b are skipped together, and any doc in b totals < θ.
+      a term twice scores it twice; :func:`_copies`).  Copies are identical
+      rows, so all m_t copies of b are skipped together, and any doc in b
+      totals < θ.
       Scored partially through its other rows, it still stays below the k
       docs that reach θ, so the tie-inclusive cut never reaches it.
     * Only the seed term t* can lose blocks: for any other t the sum holds
@@ -120,7 +153,7 @@ def _score_group(table: pa.Table, tombstones: pa.Table | None,
     if n == 0:
         return _TOPK.empty_table()
     col = {}
-    for c in _KERNEL_COLS:  # one Arrow array each, zero-copy for one chunk
+    for c in _KERNEL_COLS + ("salt",):  # one Arrow array each, zero-copy for one chunk
         a = table.column(c)
         col[c] = a.chunk(0) if a.num_chunks == 1 else a.combine_chunks()
     # rows in (query, term, n_docs) order
@@ -130,6 +163,9 @@ def _score_group(table: pa.Table, tombstones: pa.Table | None,
     q_of, term_of = q_of[order], term_of[order]
     n_docs = col["n_docs"].to_numpy().astype(np.int64)[order]
     idf = col["idf"].to_numpy()[order]
+    # ordinal o of row r's segment is doc_id flat[row_base[r] + o]
+    flat, row_base = segment_maps(doc_maps, col["batch"].to_numpy()[order],
+                                  col["salt"].to_numpy()[order])
     n_q = qids.size
     q_start = _starts(q_of)
     k = col["k"].to_numpy().astype(np.int64)[order][q_start]
@@ -137,11 +173,7 @@ def _score_group(table: pa.Table, tombstones: pa.Table | None,
     qt_new[1:] = (q_of[1:] != q_of[:-1]) | (term_of[1:] != term_of[:-1])
     qt_start = np.flatnonzero(qt_new)
     qt_of = np.cumsum(qt_new) - 1
-    # m: a (query, term)'s rows over its distinct segment rows; the copies
-    # of a row carry byte-identical doc streams, so they share one code
-    seg = pc.dictionary_encode(col["doc_ids_vb"]).indices.to_numpy()[order]
-    distinct = np.unique(qt_of * n + seg) // n
-    m = (np.diff(qt_start, append=n) / np.bincount(distinct))[qt_of]
+    m = _copies(table)[order]
 
     # every block of every row, in row order (a posting row holds >= 1 block)
     tf_off, max_tf = arrow_list(col["block_max_tf"])
@@ -182,6 +214,7 @@ def _score_group(table: pa.Table, tombstones: pa.Table | None,
         d, tf, dl = decode_posting_runs(
             *(gather_ranges(data, lo[sel], hi[sel]) for data, lo, hi in streams),
             lens[sel])
+        d = flat[np.repeat(row_base[blk_row[sel]], lens[sel]) + d]
         rows = np.repeat(blk_row[sel], lens[sel])
         p = bm25_partial(tf, dl, idf[rows], avgdl)
         return q_of[rows], d, p
@@ -301,11 +334,12 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
     """
     scored, n_qb = _scorer_input(spark, reader, qterms)
     avgdl = reader.avgdl_value()
+    doc_maps = DocMaps(reader.index_dir)
     schema = "query_id int, doc_id bigint, score double, k int"
     tomb = reader.tombstones_df()
     if tomb is None:
         shard_topk = scored.groupBy("__qbucket", "salt").applyInArrow(
-            lambda t: _score_group(t, None, avgdl), schema=schema)
+            lambda t: _score_group(t, None, avgdl, doc_maps), schema=schema)
     else:
         # each tombstone travels once per query bucket (√Q times), keyed by
         # its doc-hash salt.  Fresh aliases guard against the Spark 4.1
@@ -321,7 +355,7 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
         shard_topk = (
             scored.groupBy("__qbucket", "salt")
             .cogroup(tomb_keyed.groupBy("__ts_qbucket", "__ts_salt"))
-            .applyInArrow(lambda t, ts: _score_group(t, ts, avgdl),
+            .applyInArrow(lambda t, ts: _score_group(t, ts, avgdl, doc_maps),
                           schema=schema)
         )
     if candidates:

@@ -7,8 +7,10 @@ Dataflow per batch (SURVEY.md §3.4):
     version per url; latest warc_ts wins; losers → tombstones — the
     reference's ES ``_id`` upsert semantics, A9)──►
   docs ──tokenize/xxhash64 (JVM, codegen)──►
-  term_freqs ──explode + partial/final agg (shuffle by (term, doc_id))──►
-  repartition(term, salt) ──applyInPandas encode──►
+  doc ordinals: dense_rank(doc_id) - 1 per salt (window, shuffle by salt)──►
+  doc_stats/batch=K/__t=d/salt=S/  (doc rows + the ord → doc_id map)
+  explode tokens ──repartition(term_id, salt), sort (term_id, salt, ord)──►
+  mapInPandas encode──►
   postings/batch=K/bucket=J/  (one segment per batch, Lucene-style)
 
 then: exact df corrections for tombstoned docs (distributed decode-explode
@@ -38,6 +40,18 @@ Layout decisions, stated for the 100 TB case:
   segment (the Lucene merge analog) when segment count grows.
 * **doc_id = xxhash64(url || '|' || warc_ts)** — unique per crawl *version*
   so an upsert is append-new + tombstone-old, never in-place posting edits.
+* **Dense per-segment doc ordinals** (Lucene's segment-local doc ids): a
+  posting stores its doc as ``ord``, the doc_id's rank in its ``(batch,
+  salt)`` segment, so the delta-coded doc stream is mostly 1-byte gaps
+  instead of 8–9-byte hash gaps.  ``doc_stats/batch=K/__t=d/salt=S`` holds
+  the segment's doc rows with their ``ord``; the decoders map ordinals
+  back to doc_id through plans/docmap.py, so tombstones, positions and
+  every scorer above the decoder keep working on doc_id.  ``_state``
+  records the format version (plans/state.py); an index in another format
+  is refused.
+* **doc_stats** rows are ``(doc_id, url, warc_ts, doc_len, ord)`` under
+  ``__t=d/salt=S``; tombstones are ``(doc_id, doc_len)`` under
+  ``__t=t/salt=S`` of the batch that deleted them.
 * **Crash-idempotent stats**: corpus stats live as per-batch delta files
   (``corpus_stats/delta_b{K}.parquet``); totals are the sum over *committed*
   batches only, so a retried batch can never double-apply.  The lexicon is
@@ -60,9 +74,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.sqltext import col_isin
-from ..functions.varbyte import arrow_binary, decode_doc_runs, varbyte_decode
+from ..functions.varbyte import (arrow_binary, decode_delta_runs,
+                                 decode_doc_runs, varbyte_decode)
 from ..operators.dedup import dedup_latest
 from ..functions.textanalysis import jvm_tokens_col
+from .docmap import DocMaps, ordinals_of, segment_maps
 from .state import (
     BuildLock,
     IndexState,
@@ -103,6 +119,23 @@ def _next_pow2(n: int) -> int:
     return p
 
 
+def _salt_col(s_shards: int):
+    """The doc-hash shard of ``doc_id``: pmod(xxhash64(doc_id), S)."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(s_shards)).cast("int")
+
+
+def with_ordinals(docs: DataFrame, s_shards: int) -> DataFrame:
+    """``docs`` plus ``salt`` and ``ord``, the doc's dense ordinal in its
+    salt: ``dense_rank(doc_id) - 1``.  One window exchange on salt, with no
+    driver collect; a salt holds ~τ docs by construction, so each window
+    partition stays bounded."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("salt").orderBy("doc_id")
+    return (docs.withColumn("salt", _salt_col(s_shards))
+            .withColumn("ord", (F.dense_rank().over(w) - 1).cast("int")))
+
+
 def docs_versioned(pages: DataFrame, analyzer: dict | None = None) -> DataFrame:
     """pages → docs with version-unique doc_id = xxhash64(url || '|' || warc_ts).
     ``analyzer`` is the per-index analysis config (A8): token pattern,
@@ -116,8 +149,9 @@ def docs_versioned(pages: DataFrame, analyzer: dict | None = None) -> DataFrame:
     ).withColumn("doc_len", F.size("tokens"))
 
 
-def _encode_stream_factory(n_buckets: int, with_tf: bool = False):
-    """mapInPandas kernel over a partition sorted by (term_id, salt, doc_id).
+def _encode_stream_factory(n_buckets: int, with_tf: bool = False,
+                           ord_of=None):
+    """mapInPandas kernel over a partition sorted by (term_id, salt, ord).
 
     Streams Arrow batches, slicing complete (term_id, salt) groups with
     numpy boundary detection and carrying the trailing partial group into
@@ -127,9 +161,10 @@ def _encode_stream_factory(n_buckets: int, with_tf: bool = False):
     what makes the encode stage memory-bandwidth-light and scalable.
 
     ``with_tf=False``: input rows are token *occurrences* (term_id, salt,
-    doc_id, doc_len); tf is derived by counting duplicate doc_ids (build).
+    ord, doc_len); tf is derived by counting duplicate ordinals (build).
     ``with_tf=True``: input rows are *postings* (term_id, salt, doc_id, tf,
-    doc_len) — already one row per doc (compaction re-encode).
+    doc_len) — already one row per doc (compaction re-encode); ``ord_of(salt,
+    doc_id)`` gives their ordinals, which sort as the doc_ids do.
     """
 
     from ..functions.varbyte import encode_posting_batch
@@ -150,7 +185,7 @@ def _encode_stream_factory(n_buckets: int, with_tf: bool = False):
             if with_tf:
                 d_p, tf_p, dl_p, gs_p = d, tf, dl, starts
             else:
-                # run-length per (group, doc_id): d is sorted within each
+                # run-length per (group, ord): d is sorted within each
                 # group (shuffle sortWithinPartitions)
                 g_occ = np.searchsorted(starts, np.arange(d.size),
                                         side="right") - 1
@@ -183,7 +218,8 @@ def _encode_stream_factory(n_buckets: int, with_tf: bool = False):
         for pdf in batches:
             tid = pdf["term_id"].to_numpy(np.int64)
             salt = pdf["salt"].to_numpy(np.int64)
-            d = pdf["doc_id"].to_numpy(np.int64)
+            d = (ord_of(salt, pdf["doc_id"].to_numpy(np.int64)) if with_tf
+                 else pdf["ord"].to_numpy(np.int64))
             dl = pdf["doc_len"].to_numpy(np.int64)
             tf = pdf["tf"].to_numpy(np.int64) if with_tf else None
             if carry is not None:
@@ -222,28 +258,30 @@ POSTINGS_ENC_SCHEMA = POSTINGS_SCHEMA.replace("term string", "term_id bigint")
 
 def build_postings(docs: DataFrame, s_shards: int, n_buckets: int,
                    shuffle_partitions: int | None = None) -> DataFrame:
-    """docs(doc_id, tokens, doc_len) → postings frame (one row per term×salt).
+    """docs(doc_id, tokens, doc_len[, salt, ord]) → postings frame (one row
+    per term×salt).  Docs without ``ord`` get ordinals here
+    (:func:`with_ordinals`); a commit assigns them once, before its doc_stats
+    write, and passes them in.
 
     Single-shuffle plan: explode token occurrences keyed by numeric
     ``term_id = xxhash64(term)`` (strings never cross the Python boundary
     per occurrence — only per *distinct term* in the final tiny join),
-    shuffle ONCE on (term_id, salt), sort within partitions, and stream
-    through the encode kernel.  bucket = pmod(term_id, n_buckets) matches
-    the reader's pmod(xxhash64(term), n_buckets) partition pruning.
+    shuffle ONCE on (term_id, salt), sort within partitions by ordinal, and
+    stream through the encode kernel.  bucket = pmod(term_id, n_buckets)
+    matches the reader's pmod(xxhash64(term), n_buckets) partition pruning.
 
     64-bit term_id collision caveat: negligible at sandbox vocab sizes;
     at ~10^9 distinct terms pair it with a term-length tiebreak (documented,
     not needed here — a collision would merge two terms' postings).
     """
+    if "ord" not in docs.columns:
+        docs = with_ordinals(docs, s_shards)
     ex = docs.select(
-        "doc_id", "doc_len", F.explode("tokens").alias("term")
-    ).select(
-        F.xxhash64("term").alias("term_id"), "doc_id", "doc_len",
-        F.pmod(F.xxhash64("doc_id"), F.lit(s_shards)).cast("int").alias("salt"),
-    )
+        "salt", "ord", "doc_len", F.explode("tokens").alias("term")
+    ).select(F.xxhash64("term").alias("term_id"), "salt", "ord", "doc_len")
     p = shuffle_partitions or ex.sparkSession.sparkContext.defaultParallelism
     part = (ex.repartition(p, "term_id", "salt")
-            .sortWithinPartitions("term_id", "salt", "doc_id"))
+            .sortWithinPartitions("term_id", "salt", "ord"))
     enc = part.mapInPandas(_encode_stream_factory(n_buckets),
                            schema=POSTINGS_ENC_SCHEMA)
     # term_id → term string restored on the ~|vocab|×S output rows only;
@@ -288,13 +326,16 @@ def _resolve_upserts(new_docs: DataFrame, existing: DataFrame | None):
     return kept, tombs
 
 
-def _explode_postings(keep: tuple[str, ...], doc_ids_only: bool = False):
-    """mapInArrow kernel: posting rows → one row per posting, ``keep``
-    columns repeated beside the decoded ``doc_id`` and, unless
-    ``doc_ids_only``, ``tf`` and ``doc_len``.  Each Arrow batch decodes in
-    one pass: a batch's posting lists lie back to back in the binary
-    columns' value buffers, so each stream is one call of the multi-run
-    decoder, with ``n_docs`` marking where each list restarts."""
+def _explode_postings(keep: tuple[str, ...], doc_maps,
+                      doc_ids_only: bool = False):
+    """mapInArrow kernel: posting rows (with ``batch``, ``salt``, ``n_docs``
+    and the streams) → one row per posting, ``keep`` columns repeated beside
+    the decoded ``doc_id`` and, unless ``doc_ids_only``, ``tf`` and
+    ``doc_len``.  Each Arrow batch decodes in one pass: a batch's posting
+    lists lie back to back in the binary columns' value buffers, so each
+    stream is one call of the multi-run decoder, with ``n_docs`` marking
+    where each list restarts, and the ordinals become doc_ids in one gather
+    through the rows' segment maps (``doc_maps``, a plans.docmap.DocMaps)."""
     import pyarrow as pa
 
     def _stream(rb, c):
@@ -306,7 +347,10 @@ def _explode_postings(keep: tuple[str, ...], doc_ids_only: bool = False):
             n_docs = rb.column("n_docs").to_numpy().astype(np.int64)
             rows = pa.array(np.repeat(np.arange(rb.num_rows), n_docs))
             cols = {c: rb.column(c).take(rows) for c in keep}
-            cols["doc_id"] = decode_doc_runs(_stream(rb, "doc_ids_vb"), n_docs)
+            flat, base = segment_maps(doc_maps, rb.column("batch").to_numpy(),
+                                      rb.column("salt").to_numpy())
+            cols["doc_id"] = flat[np.repeat(base, n_docs) + decode_doc_runs(
+                _stream(rb, "doc_ids_vb"), n_docs)]
             if not doc_ids_only:
                 cols["tf"] = varbyte_decode(_stream(rb, "tfs_vb")).astype(np.int32)
                 cols["doc_len"] = varbyte_decode(_stream(rb, "dls_vb")).astype(np.int32)
@@ -315,30 +359,31 @@ def _explode_postings(keep: tuple[str, ...], doc_ids_only: bool = False):
     return _dec
 
 
-def _decoded_doc_ids(post: DataFrame) -> DataFrame:
-    """postings rows → exploded (term, doc_id) frame (doc-id stream only)."""
-    return post.select("term", "n_docs", "doc_ids_vb").mapInArrow(
-        _explode_postings(("term",), doc_ids_only=True),
+def _decoded_doc_ids(post: DataFrame, index_dir: str) -> DataFrame:
+    """postings rows of ``index_dir`` → exploded (term, doc_id) frame (doc
+    stream only)."""
+    return post.select("term", "batch", "salt", "n_docs", "doc_ids_vb").mapInArrow(
+        _explode_postings(("term",), DocMaps(index_dir), doc_ids_only=True),
         schema="term string, doc_id long")
 
 
 def _df_corrections_df(spark: SparkSession, index_dir: str, committed: list[int],
                        tombs: DataFrame, s_shards: int) -> DataFrame | None:
     """Exact per-term df decrements for tombstoned docs, fully distributed:
-    decode-explode prior segments' doc_id streams (pruned to the tombstones'
+    decode-explode prior segments' doc streams (pruned to the tombstones'
     salt shards — a bounded ≤ s_shards driver list), join the tombstone
     frame, count hits per term.  No unbounded driver materialization."""
     dirs = _batch_dirs(index_dir, "postings", committed)
     if not dirs:
         return None
     salts = sorted(r["salt"] for r in tombs.select(
-        F.pmod(F.xxhash64("doc_id"), F.lit(s_shards)).cast("int").alias("salt")
+        _salt_col(s_shards).alias("salt")
     ).distinct().collect())  # bounded by s_shards
     if not salts:
         return None
     post = spark.read.option("basePath", f"{index_dir}/postings").parquet(*dirs) \
         .filter(col_isin("salt", salts))
-    decoded = _decoded_doc_ids(post)
+    decoded = _decoded_doc_ids(post, index_dir)
     return (
         decoded.join(tombs.select("doc_id"), "doc_id")
         .groupBy("term").agg((-F.count(F.lit(1))).cast("long").alias("delta"))
@@ -602,46 +647,36 @@ def _idf_expr(n_docs: int):
                  / (F.col("df") + F.lit(0.5)))
 
 
-def _read_tombstones(spark: SparkSession, index_dir: str, committed: list[int]):
-    """Tombstoned doc_ids across committed batches.  Tombstones live as the
-    ``__t=t`` partition of each batch's doc_stats dataset (written in the
-    same job as the doc rows — one action per commit); the standalone
-    ``tombstones/batch=K`` layout from older indexes is still honored."""
-    dirs = []
-    for b in committed:
-        d = f"{index_dir}/doc_stats/batch={b}/__t=t"
-        if glob.glob(f"{d}/*.parquet"):
-            dirs.append(d)
-        legacy = f"{index_dir}/tombstones/batch={b}"
-        if os.path.isdir(legacy) and glob.glob(f"{legacy}/*.parquet"):
-            dirs.append(legacy)
+def _doc_stats_dirs(index_dir: str, committed: list[int], kind: str) -> list[str]:
+    """The committed batches' ``doc_stats/batch=K/__t=<kind>`` dirs that hold
+    rows: ``d`` doc rows, ``t`` tombstones (written in the same job as the
+    doc rows — one action per commit).  Leaf dirs keep tombstone rows out of
+    every doc_stats scan by partition pruning on path alone."""
+    return [d for b in committed
+            for d in [f"{index_dir}/doc_stats/batch={b}/__t={kind}"]
+            if glob.glob(f"{d}/salt=*/*.parquet")]
+
+
+def _read_doc_rows(spark: SparkSession, index_dir: str, committed: list[int],
+                   kind: str) -> DataFrame | None:
+    dirs = _doc_stats_dirs(index_dir, committed, kind)
     if not dirs:
         return None
-    return spark.read.parquet(*dirs).select("doc_id").distinct()
+    return spark.read.option("basePath", f"{index_dir}/doc_stats") \
+        .parquet(*dirs)
 
 
-def _docstats_dirs(index_dir: str, committed: list[int]) -> list[str]:
-    """Per-batch doc-row dirs: the ``__t=d`` partition when the batch was
-    written by the folded single-job path, else the flat legacy/compacted
-    layout.  Returning leaf dirs keeps tombstone rows out of every doc_stats
-    scan by partition pruning on path alone."""
-    out = []
-    for b in committed:
-        d = f"{index_dir}/doc_stats/batch={b}"
-        if glob.glob(f"{d}/__t=d/*.parquet"):
-            out.append(f"{d}/__t=d")
-        elif os.path.isdir(d) and glob.glob(f"{d}/*.parquet"):
-            out.append(d)
-    return out
+def _read_tombstones(spark: SparkSession, index_dir: str, committed: list[int]):
+    """Tombstoned doc_ids across committed batches."""
+    t = _read_doc_rows(spark, index_dir, committed, "t")
+    return None if t is None else t.select("doc_id").distinct()
 
 
 def _read_doc_stats(spark: SparkSession, index_dir: str,
                     committed: list[int]) -> DataFrame | None:
-    dirs = _docstats_dirs(index_dir, committed)
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs).select("doc_id", "url", "warc_ts",
-                                            "doc_len")
+    d = _read_doc_rows(spark, index_dir, committed, "d")
+    return None if d is None else d.select("doc_id", "url", "warc_ts",
+                                           "doc_len")
 
 
 def build_positions(docs: DataFrame, n_buckets: int,
@@ -726,6 +761,15 @@ def build_positions(docs: DataFrame, n_buckets: int,
                     F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int")))
 
 
+def _tombstone_rows(tombs: DataFrame, s_shards: int) -> DataFrame:
+    """Tombstone rows (doc_id, doc_len) in doc_stats' row shape, ``__t=t``."""
+    return tombs.select(
+        "doc_id", F.lit(None).cast("string").alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"), "doc_len",
+        F.lit(None).cast("int").alias("ord"), _salt_col(s_shards).alias("salt"),
+        F.lit("t").alias("__t"))
+
+
 def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
                  batch_id: int, tau: int = 100_000, n_buckets: int = 8,
                  s_shards: int | None = None, attempt: int = 1,
@@ -784,7 +828,13 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
     if committed:
         existing = _read_doc_stats(spark, index_dir, committed)
     kept, tombs = _resolve_upserts(docs, existing)
-    kept = kept.persist()
+    if s_shards is None:
+        # the first batch sizes the doc-hash shards from its doc count; the
+        # ordinals need S before anything is written (a column-pruned count:
+        # the dedup shuffle without the tokenizer)
+        s_shards = st.s_shards if committed else \
+            _next_pow2(max(1, -(-kept.count() // tau)))
+    kept = with_ordinals(kept, s_shards).persist()
 
     # ONE job writes BOTH doc rows and tombstones (partitions __t=d / __t=t
     # of the same dataset) while observing all four scalars in-flight — the
@@ -794,13 +844,10 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
     timings: dict[str, float] = {}
     t_phase = time.time()
     obs = Observation(f"docstats_b{batch_id}")
-    out_rows = kept.select("doc_id", "url", "warc_ts", "doc_len",
-                           F.lit("d").alias("__t"))
+    out_rows = kept.select("doc_id", "url", "warc_ts", "doc_len", "ord",
+                           "salt", F.lit("d").alias("__t"))
     if tombs is not None:
-        out_rows = out_rows.unionByName(tombs.select(
-            "doc_id", F.lit(None).cast("string").alias("url"),
-            F.lit(None).cast("timestamp").alias("warc_ts"), "doc_len",
-            F.lit("t").alias("__t")))
+        out_rows = out_rows.unionByName(_tombstone_rows(tombs, s_shards))
     (out_rows
      .observe(obs,
               F.coalesce(F.sum(F.when(F.col("__t") == "d", 1)),
@@ -811,7 +858,7 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
                          F.lit(0)).alias("n_tombs"),
               F.coalesce(F.sum(F.when(F.col("__t") == "t", F.col("doc_len"))),
                          F.lit(0)).alias("tomb_dl"))
-     .write.mode("overwrite").partitionBy("__t")
+     .write.mode("overwrite").partitionBy("__t", "salt")
      .parquet(f"{index_dir}/doc_stats/batch={batch_id}"))
     observed = obs.get
     timings["doc_stats"] = round(time.time() - t_phase, 2)
@@ -830,11 +877,6 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
         write_state(index_dir, st)
         return {"n_docs": 0, "n_posting_rows": 0, "wall_ms": wall_ms,
                 "s_shards": st.s_shards, "batch_id": batch_id, "n_tombstones": 0}
-    if s_shards is None:
-        if st.committed_batches:
-            s_shards = st.s_shards
-        else:
-            s_shards = _next_pow2(max(1, (n_docs + tau - 1) // tau))
 
     # tombstone counts came out of the same Observation — no second action
     n_tombs = int(observed["n_tombs"])
@@ -1070,14 +1112,11 @@ def delete_by_query(spark: SparkSession, index_dir: str, must=None,
         tombs = victims.join(ds, "doc_id")
 
         obs = Observation(f"delete_b{batch_id}")
-        (tombs.select("doc_id",
-                      F.lit(None).cast("string").alias("url"),
-                      F.lit(None).cast("timestamp").alias("warc_ts"),
-                      "doc_len", F.lit("t").alias("__t"))
+        (_tombstone_rows(tombs, st.s_shards)
          .observe(obs,
                   F.coalesce(F.count(F.lit(1)), F.lit(0)).alias("n_tombs"),
                   F.coalesce(F.sum("doc_len"), F.lit(0)).alias("tomb_dl"))
-         .write.mode("overwrite").partitionBy("__t")
+         .write.mode("overwrite").partitionBy("__t", "salt")
          .parquet(f"{index_dir}/doc_stats/batch={batch_id}"))
         n_tombs = int(obs.get["n_tombs"])
         tomb_dl = int(obs.get["tomb_dl"])
@@ -1119,9 +1158,11 @@ def delete_by_query(spark: SparkSession, index_dir: str, must=None,
 
 def compact_index(spark: SparkSession, index_dir: str) -> dict:
     """Fold all segments + tombstones into a single new-generation segment
-    (the Lucene merge analog).  Exact and fully distributed: decode-explode
-    every posting, anti-join tombstones, re-encode through the same
-    single-shuffle streaming kernel as the build.
+    (the Lucene merge analog).  Exact and fully distributed: the active docs
+    get new ordinals and a new doc map (written first), then every posting
+    is decoded to its doc_id, tombstones are anti-joined, and the postings
+    are re-encoded with the new ordinals through the same single-shuffle
+    streaming kernel as the build.
 
     Crash-safe commit protocol: the compacted segment is written under a NEW
     batch id (max committed + 1); the state flip to ``committed=[NEW]`` is
@@ -1141,11 +1182,26 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     ds = _read_doc_stats(spark, index_dir, committed)
     active = ds.join(tomb, "doc_id", "left_anti") if tomb is not None else ds
 
+    # the new segment's doc rows and ord → doc_id map, before the postings
+    # whose encode reads the map
+    from pyspark.sql import Observation
+    obs = Observation(f"compact_b{new_b}")
+    (with_ordinals(active, st.s_shards)
+     .select("doc_id", "url", "warc_ts", "doc_len", "ord", "salt",
+             F.lit("d").alias("__t"))
+     .observe(obs, F.count(F.lit(1)).alias("n_docs"),
+              F.coalesce(F.sum("doc_len"), F.lit(0)).alias("sum_dl"))
+     .write.mode("overwrite").partitionBy("__t", "salt")
+     .parquet(f"{index_dir}/doc_stats/batch={new_b}"))
+    n_active = int(obs.get["n_docs"])
+    sum_active = int(obs.get["sum_dl"])
+
     post = spark.read.option("basePath", f"{index_dir}/postings").parquet(
         *_batch_dirs(index_dir, "postings", committed))
+    doc_maps = DocMaps(index_dir)
 
-    decoded = post.select("term", "salt", "n_docs", *_STREAMS) \
-        .mapInArrow(_explode_postings(("term", "salt")),
+    decoded = post.select("term", "batch", "salt", "n_docs", *_STREAMS) \
+        .mapInArrow(_explode_postings(("term", "salt"), doc_maps),
                     schema="term string, salt int, doc_id bigint, tf int, "
                            "doc_len int") \
         .select(F.xxhash64("term").alias("term_id"), "salt", "doc_id", "tf",
@@ -1155,18 +1211,19 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     # Size the re-encode shuffle from the DATA, not the core count — the
     # same ~48 B/occurrence rule as commit_batch: compaction folds the WHOLE
     # index, so a core-count partition count is the first thing to spill at
-    # scale.  Committed cstats already hold the active occurrence total
-    # (tombstoned doc_len subtracted at commit time) — a driver-side
-    # metadata read, no extra job.
-    _, sum_dl_active = _read_cstats(index_dir, committed)
+    # scale.  The doc_stats write above observed the active occurrence
+    # total.
     dp = spark.sparkContext.defaultParallelism
-    p = max(dp, int(sum_dl_active) * 48 // (128 << 20) + 1)
+    p = max(dp, sum_active * 48 // (128 << 20) + 1)
     # full final wave (same quantization rule as commit_batch's p_enc)
     p = ((p + dp - 1) // dp) * dp
     part = (decoded.repartition(p, "term_id", "salt")
             .sortWithinPartitions("term_id", "salt", "doc_id"))
-    enc = part.mapInPandas(_encode_stream_factory(st.n_buckets, with_tf=True),
-                           schema=POSTINGS_ENC_SCHEMA)
+    enc = part.mapInPandas(
+        _encode_stream_factory(
+            st.n_buckets, with_tf=True,
+            ord_of=lambda salt, d: ordinals_of(doc_maps, new_b, salt, d)),
+        schema=POSTINGS_ENC_SCHEMA)
     terms = post.select("term").distinct().select(
         "term", F.xxhash64("term").alias("term_id"))
     merged = enc.join(terms, "term_id").drop("term_id")
@@ -1185,17 +1242,9 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
             posd.write.mode("overwrite").partitionBy("bucket").parquet(
                 f"{index_dir}/positions/batch={new_b}")
 
-    # materialize the new generation (both datasets) before the state flip
-    from pyspark.sql import Observation
-    obs = Observation(f"compact_b{new_b}")
+    # materialize the new generation's postings before the state flip
     merged.write.mode("overwrite").partitionBy("bucket").parquet(
         f"{index_dir}/postings/batch={new_b}")
-    (active.select("doc_id", "url", "warc_ts", "doc_len")
-     .observe(obs, F.count(F.lit(1)).alias("n_docs"),
-              F.coalesce(F.sum("doc_len"), F.lit(0)).alias("sum_dl"))
-     .write.mode("overwrite").parquet(f"{index_dir}/doc_stats/batch={new_b}"))
-    n_active = int(obs.get["n_docs"])
-    sum_active = int(obs.get["sum_dl"])
     _write_cstats_delta(index_dir, new_b, n_active, sum_active)
     # post-compaction lexicon = segment metadata sums (no corrections left)
     lex = (spark.read.parquet(f"{index_dir}/postings/batch={new_b}")
@@ -1218,7 +1267,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
             os.remove(p_delta)
     for ckpt in _cstats_ckpts(index_dir):
         os.remove(ckpt)  # they cover pre-compaction batch sets only
-    shutil.rmtree(f"{index_dir}/tombstones", ignore_errors=True)
     shutil.rmtree(f"{index_dir}/df_corrections", ignore_errors=True)
     _cleanup_stale_gens(index_dir, new_b)
     import pyarrow.dataset as _ds
@@ -1245,6 +1293,7 @@ class IndexReader:
         if st is None:
             raise FileNotFoundError(f"no committed index at {index_dir}")
         self.state = st
+        self.doc_maps = DocMaps(index_dir)
         self._memo: dict = {}
 
     def _cstats_tuple(self) -> tuple[int, int]:
@@ -1326,11 +1375,8 @@ class IndexReader:
         post_rows, post_bytes = _rows_bytes("postings")
         pos_rows, pos_bytes = (_rows_bytes("positions")
                                if self.state.has_positions else (0, 0))
-        tomb_dirs = [d for b in committed
-                     for d in glob.glob(
-                         f"{self.index_dir}/doc_stats/batch={b}/__t=t")]
         n_tombs = sum(_ds.dataset(d, format="parquet").count_rows()
-                      for d in tomb_dirs)
+                      for d in _doc_stats_dirs(self.index_dir, committed, "t"))
         return {
             "n_docs": n_docs,
             "sum_doc_len": sum_dl,
@@ -1352,7 +1398,11 @@ class IndexReader:
         decoded to (term_id, doc_id, positions array<int>).  The bucket +
         term_id predicates push to the parquet scan (partition pruning and
         row-group stats), so the varbyte decode kernel receives only the
-        query terms' rows — O(Σ query-term df), never the corpus."""
+        query terms' rows — O(Σ query-term df), never the corpus.  The
+        kernel decodes each Arrow batch in one pass: the rows' ``pos_vb``
+        lie back to back in the column's value buffer, the delta chain
+        restarts at each row, and the lists are built from ``n_pos``
+        offsets."""
         from ..functions.hashing import xxhash64_str
 
         if not self.state.has_positions:
@@ -1369,17 +1419,21 @@ class IndexReader:
         pruned = df.filter(col_isin("bucket", buckets)
                            & col_isin("term_id", tids))
 
-        def _dec(it):
-            from ..functions.varbyte import delta_decode, varbyte_decode
-            for pdf in it:
-                yield pd.DataFrame({
-                    "term_id": pdf["term_id"], "doc_id": pdf["doc_id"],
-                    "positions": [
-                        delta_decode(varbyte_decode(vb)).astype(np.int64)
-                        for vb in pdf["pos_vb"]],
-                })
+        def _dec(batches):
+            import pyarrow as pa
 
-        return pruned.select("term_id", "doc_id", "pos_vb").mapInPandas(
+            for rb in batches:
+                n_pos = rb.column("n_pos").to_numpy().astype(np.int64)
+                offs, data = arrow_binary(rb.column("pos_vb"))
+                pos = decode_delta_runs(data[offs[0]:offs[-1]], n_pos)
+                lists = pa.ListArray.from_arrays(
+                    pa.array(np.concatenate(([0], np.cumsum(n_pos))), pa.int32()),
+                    pa.array(pos.astype(np.int32)))
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column("term_id"), rb.column("doc_id"), lists],
+                    ["term_id", "doc_id", "positions"])
+
+        return pruned.select("term_id", "doc_id", "n_pos", "pos_vb").mapInArrow(
             _dec, schema="term_id bigint, doc_id bigint, positions array<int>")
 
     def postings_for_terms(self, terms: list[str]) -> DataFrame:
@@ -1402,8 +1456,8 @@ class IndexReader:
         boolean-query combinator.  Streaming mapInArrow, one decode pass per
         Arrow batch; cost is O(Σ df(terms)) rows, never the whole index."""
         post = self.postings_for_terms(terms)
-        return post.select("term", "n_docs", *_STREAMS).mapInArrow(
-            _explode_postings(("term",)),
+        return post.select("term", "batch", "salt", "n_docs", *_STREAMS).mapInArrow(
+            _explode_postings(("term",), self.doc_maps),
             schema="term string, doc_id bigint, tf int, doc_len int")
 
     def term_contribs(self, terms: list[str],

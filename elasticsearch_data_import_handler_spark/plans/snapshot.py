@@ -121,6 +121,7 @@ def restore_index(repo_dir: str, name: str, dest_dir: str) -> dict:
     if os.path.exists(os.path.join(dest_dir, "_state")):
         raise ValueError(f"{dest_dir!r} already holds an index — "
                          "restore into a fresh directory")
+    state = IndexState.from_dict(manifest["state"], f"{repo_dir}:{name}")
     store = os.path.join(repo_dir, "store")
     for e in manifest["files"]:
         src = os.path.join(store, e["path"])
@@ -132,5 +133,5 @@ def restore_index(repo_dir: str, name: str, dest_dir: str) -> dict:
         dst = os.path.join(dest_dir, e["path"])
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         shutil.copy2(os.path.join(store, e["path"]), dst)
-    write_state(dest_dir, IndexState(**manifest["state"]))
+    write_state(dest_dir, state)
     return manifest

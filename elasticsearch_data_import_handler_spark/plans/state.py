@@ -17,6 +17,9 @@ external service:
 
 Lineage rows: (build_id, batch_id, status, n_docs, n_postings, wall_ms,
 attempt) — per-batch metrics + resume bookkeeping (C13/C14).
+
+``state.json`` carries the on-disk ``format_version``; an index written in
+any other format is refused, since there is one decoder (see plans/build.py).
 """
 
 from __future__ import annotations
@@ -26,6 +29,15 @@ import os
 import time
 import uuid
 from dataclasses import asdict, dataclass, field
+
+
+# 2: postings store per-(batch, salt) doc ordinals, doc_stats holds the
+# ord → doc_id map.  1 (no field in state.json): 64-bit doc-id postings.
+FORMAT_VERSION = 2
+
+
+class IndexFormatError(ValueError):
+    """The index on disk was written in a format this engine does not read."""
 
 
 @dataclass
@@ -39,6 +51,19 @@ class IndexState:
     build_id: str = ""
     analyzer: dict = field(default_factory=dict)  # A8: per-index analysis chain
     has_positions: bool = False    # positional postings written per batch
+    format_version: int = FORMAT_VERSION
+
+    @classmethod
+    def from_dict(cls, d: dict, where: str) -> "IndexState":
+        """The state stored as ``d``; raises :class:`IndexFormatError` when
+        it was written in another on-disk format."""
+        found = d.get("format_version", 1)
+        if found != FORMAT_VERSION:
+            raise IndexFormatError(
+                f"index {where} is in on-disk format {found}; this engine "
+                f"reads format {FORMAT_VERSION} only — rebuild the index "
+                "(build_index, or reindex from the source pages)")
+        return cls(**d)
 
 
 def _state_path(index_dir: str) -> str:
@@ -50,7 +75,7 @@ def read_state(index_dir: str) -> IndexState | None:
     if not os.path.exists(p):
         return None
     with open(p) as f:
-        return IndexState(**json.load(f))
+        return IndexState.from_dict(json.load(f), index_dir)
 
 
 def write_state(index_dir: str, state: IndexState) -> None:

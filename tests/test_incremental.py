@@ -315,9 +315,9 @@ def test_cstats_fold_bounds_file_reads(tmp_path_factory):
 
 
 def test_commit_after_compaction_mixes_layouts(spark, tmp_path_factory):
-    """A compacted generation stores doc_stats flat; later commits store the
-    partitioned __t=d/__t=t layout.  Readers must resolve the mixed layouts
-    (and upserts against a compacted index must still tombstone)."""
+    """Commits after a compaction: readers see the compacted generation's
+    and the new batch's doc_stats together, and upserts against a compacted
+    index still tombstone."""
     import os
 
     d = str(tmp_path_factory.mktemp("mixlayout"))

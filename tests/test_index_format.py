@@ -1,0 +1,122 @@
+"""The on-disk posting format: per-segment doc ordinals, the segment doc
+maps that turn them back into doc_ids, and the format version in _state."""
+
+import json
+import os
+import shutil
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from elasticsearch_data_import_handler_spark.operators.dedup import dedup_latest
+from elasticsearch_data_import_handler_spark.operators.scoring import bm25_topk
+from elasticsearch_data_import_handler_spark.operators.wand import bm25_topk_wand
+from elasticsearch_data_import_handler_spark.plans import docmap
+from elasticsearch_data_import_handler_spark.plans.build import (
+    IndexReader, build_incremental, build_index, commit_batch, compact_index,
+    docs_versioned)
+from elasticsearch_data_import_handler_spark.plans.state import (
+    FORMAT_VERSION, IndexFormatError, read_state)
+from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
+
+
+def _hits(rows):
+    return {(r["query_id"], r["rank"]): (r["doc_id"], round(r["score"], 9))
+            for r in rows}
+
+
+def _expected(spark, pages):
+    return _hits(bm25_topk(spark, docs_versioned(dedup_latest(pages)),
+                           round_to=None).collect())
+
+
+def test_old_format_state_is_refused(spark, tmp_path):
+    """An index whose _state predates the format version (64-bit doc-id
+    postings) is refused by every entry point with an error that says to
+    rebuild, rather than decoded wrongly."""
+    d = str(tmp_path / "old")
+    os.makedirs(f"{d}/_state")
+    with open(f"{d}/_state/state.json", "w") as f:
+        json.dump({"last_indexed_batch": 0, "committed_batches": [0],
+                   "s_shards": 1, "n_buckets": 8, "build_id": "b0",
+                   "analyzer": {}, "has_positions": False}, f)
+    for call in (lambda: read_state(d), lambda: IndexReader(spark, d),
+                 lambda: compact_index(spark, d)):
+        with pytest.raises(IndexFormatError, match="rebuild"):
+            call()
+    pages = synth_pages(spark, 5, seed=1)
+    with pytest.raises(IndexFormatError, match="rebuild"):
+        commit_batch(spark, pages, d, batch_id=1)
+
+
+def test_build_writes_dense_ordinals_and_version(spark, tmp_path):
+    d = str(tmp_path / "idx")
+    build_index(spark, synth_pages(spark, 300, seed=3), d, tau=100, n_buckets=4)
+    st = read_state(d)
+    assert st.format_version == FORMAT_VERSION and st.s_shards == 4
+    for salt in range(st.s_shards):
+        m = docmap.DocMaps(d)[(0, salt)]
+        assert m.size and np.all(np.diff(m) > 0)  # ord order is doc_id order
+    post = pq.read_table(f"{d}/postings", columns=["n_docs", "block_max_doc"])
+    # block_max_doc is an ordinal, below the segment's doc count
+    assert max(max(b) for b in post["block_max_doc"].to_pylist()) < 300
+
+
+def _segment(d, salt, ids):
+    sd = docmap.segment_dir(d, 0, salt)
+    shutil.rmtree(sd, ignore_errors=True)
+    os.makedirs(sd)
+    ids = np.sort(np.asarray(ids, np.int64))
+    pq.write_table(pa.table({"doc_id": ids, "ord": np.arange(ids.size, dtype=np.int32)}),
+                   f"{sd}/part-{ids[0]}.parquet")
+
+
+def test_doc_map_cache_follows_rewrites_and_cap(tmp_path, monkeypatch):
+    """A rewritten segment is read anew (its files' path, mtime and size
+    key the cache), an unchanged one is served from the cache, and the
+    cache stays under its byte cap."""
+    d = str(tmp_path)
+    maps = docmap.DocMaps(d)
+    _segment(d, 0, [30, 10, 20])
+    first = maps[(0, 0)]
+    assert first.tolist() == [10, 20, 30] and maps[(0, 0)] is first
+    _segment(d, 0, [5, 6])           # same segment, rewritten
+    assert maps[(0, 0)].tolist() == [5, 6]
+    monkeypatch.setattr(docmap, "_CACHE_BYTES", 3 * 8 * 100)
+    for salt in range(1, 8):
+        _segment(d, salt, np.arange(100) + 1000 * salt)
+        assert maps[(0, salt)][0] == 1000 * salt
+    assert docmap._cached["bytes"] <= docmap._CACHE_BYTES
+    assert sum(m.nbytes for m in docmap._cache.values()) == docmap._cached["bytes"]
+
+
+def test_rebuild_new_session_and_compaction_never_serve_stale_maps(spark, tmp_path):
+    """Ordinals are only meaningful with their segment's current map.  An
+    index rebuilt at the same path has segments of the same (batch, salt)
+    and the same directories as the one it replaced; read from a new
+    session (the same Python workers, whose caches hold the old maps), and
+    again after compact_index rewrites its segments, the WAND and TAAT
+    paths return the current index's docs."""
+    d = str(tmp_path / "idx")
+    first = synth_pages(spark, 150, seed=42)
+    build_index(spark, first, d, n_buckets=4)
+    for _ in range(3):  # several Python workers read the first index's maps
+        assert _hits(bm25_topk_wand(spark, IndexReader(spark, d)).collect()) \
+            == _expected(spark, first)
+
+    shutil.rmtree(d)
+    b0 = synth_pages(spark, 160, seed=7, batches=2, batch=0)
+    b1 = synth_pages(spark, 160, seed=7, batches=2, batch=1)
+    build_incremental(spark, [b0, b1], d, n_buckets=4)
+    want = _expected(spark, b0.unionByName(b1))
+    fresh = spark.newSession()
+    for _ in range(3):
+        assert _hits(bm25_topk_wand(fresh, IndexReader(fresh, d)).collect()) == want
+    compact_index(spark, d)
+    assert read_state(d).committed_batches == [2]
+    reader = IndexReader(fresh, d)
+    assert _hits(bm25_topk_wand(fresh, reader).collect()) == want
+    taat = {r["doc_id"] for r in reader.decoded_postings_for_terms(["spark"]).collect()}
+    assert taat and taat <= {r["doc_id"] for r in reader.doc_stats().collect()}

@@ -608,6 +608,32 @@ def test_porter_known_vectors():
     assert not bad, bad
 
 
+def test_porter_stems_each_distinct_token_once(monkeypatch):
+    """The porter filter's batch kernel calls porter_stem at most once per
+    distinct token of the batch (Zipf text repeats tokens), and returns the
+    lists a per-occurrence stem would, null and empty lists included."""
+    import numpy as np
+    import pandas as pd
+
+    from elasticsearch_data_import_handler_spark.functions import textanalysis as ta
+
+    rng = np.random.default_rng(5)
+    vocab = np.array(["running", "runs", "caresses", "ponies", "happy",
+                      "relational", "sky", "motoring", "a", "cats"], dtype=object)
+    rows = [vocab[rng.zipf(1.6, size=int(rng.integers(0, 40))) % vocab.size]
+            for _ in range(300)]
+    batch = pd.Series(rows + [None], dtype=object)
+    want = [None if xs is None else [ta.porter_stem(t) for t in xs]
+            for xs in batch]
+    calls = []
+    stem = ta.porter_stem
+    monkeypatch.setattr(ta, "porter_stem", lambda w: calls.append(w) or stem(w))
+    got = ta.porter_stem_lists(batch)
+    distinct = {t for xs in rows for t in xs}
+    assert len(calls) <= len(distinct) < sum(len(xs) for xs in rows)
+    assert [None if xs is None else list(xs) for xs in got] == want
+
+
 def test_synonym_rules_and_conflicts():
     from elasticsearch_data_import_handler_spark.functions.textanalysis import (
         parse_synonyms, py_tokenize)

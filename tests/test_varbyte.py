@@ -8,8 +8,8 @@ from hypothesis import strategies as st
 from elasticsearch_data_import_handler_spark.functions.varbyte import (
     bm25_partial,
     decode_posting_list,
+    decode_delta_runs,
     decode_posting_runs,
-    delta_decode,
     delta_encode,
     encode_posting_list,
     gather_ranges,
@@ -41,13 +41,14 @@ def test_delta_roundtrip_monotone():
     rng = np.random.default_rng(42)
     for n in [0, 1, 127, 128, 129, 10_000]:
         v = np.sort(rng.choice(2**62, size=n, replace=False).astype(np.uint64)) if n else np.empty(0, np.uint64)
-        assert np.array_equal(delta_decode(delta_encode(v)), v)
+        assert np.array_equal(
+            decode_delta_runs(varbyte_encode(delta_encode(v)), [n]), v)
 
 
 def test_posting_list_roundtrip_and_block_max():
     rng = np.random.default_rng(42)
     n = 1000
-    doc_ids = rng.choice(2**63 - 1, size=n, replace=False).astype(np.int64) - 2**62
+    doc_ids = rng.choice(3 * n, size=n, replace=False).astype(np.int64)  # ordinals
     tfs = rng.integers(1, 1000, n)
     dls = rng.integers(5, 2000, n)
     idf, avgdl = 1.7, 120.0
@@ -83,7 +84,7 @@ def test_selective_block_decode():
     encs, want, ranges, lens = [], [], [], []
     base = {"d": 0, "t": 0, "l": 0}
     for n in [1, 100, 128, 129, 1000, 5000]:
-        doc_ids = np.sort(rng.choice(2**62, size=n, replace=False).astype(np.int64))
+        doc_ids = np.sort(rng.choice(4 * n, size=n, replace=False).astype(np.int64))
         enc = encode_posting_list(doc_ids, rng.integers(1, 100, n),
                                   rng.integers(5, 2000, n))
         full = decode_posting_list(enc["doc_ids_vb"], enc["tfs_vb"], enc["dls_vb"])
@@ -143,21 +144,23 @@ def test_salted_split_union_equals_original():
         assert np.array_equal(merged[2], dls[base_order])
 
 
-@given(st.lists(st.integers(min_value=0, max_value=1 << 20), min_size=1,
-                max_size=200, unique=True))
+@given(st.lists(st.lists(st.integers(min_value=0, max_value=1 << 20),
+                         min_size=1, max_size=200, unique=True),
+                min_size=1, max_size=8))
 @settings(max_examples=200, deadline=None)
-def test_position_list_roundtrip(vals):
-    """The positional-postings codec path: sorted unique positions →
-    delta+varbyte → decode → identical list (build_positions/_dec pair)."""
+def test_position_list_roundtrip(rows):
+    """The positional-postings codec path: each row's sorted unique
+    positions → delta+varbyte, rows back to back → one multi-run decode
+    (the positions_for_terms kernel) → identical lists."""
     import numpy as np
 
     from elasticsearch_data_import_handler_spark.functions.varbyte import (
-        delta_decode, delta_encode, varbyte_decode, varbyte_encode)
+        decode_delta_runs, delta_encode, varbyte_encode)
 
-    pos = np.array(sorted(vals), dtype=np.int64)
-    vb = varbyte_encode(delta_encode(pos))
-    back = delta_decode(varbyte_decode(vb)).astype(np.int64)
-    assert back.tolist() == pos.tolist()
+    pos = [np.array(sorted(vals), dtype=np.int64) for vals in rows]
+    vb = b"".join(varbyte_encode(delta_encode(p)) for p in pos)
+    back = decode_delta_runs(np.frombuffer(vb, np.uint8), [p.size for p in pos])
+    assert back.tolist() == np.concatenate(pos).tolist()
 
 
 def test_encode_posting_batch_matches_per_group():
@@ -176,8 +179,8 @@ def test_encode_posting_batch_matches_per_group():
     pos = 0
     for sz in sizes:
         gstarts.append(pos)
-        d = np.sort(rng.integers(-(1 << 62), 1 << 62, sz, dtype=np.int64))
-        d = np.unique(d)  # strictly increasing like real doc_id streams
+        d = np.sort(rng.integers(0, 1 << 20, sz, dtype=np.int64))
+        d = np.unique(d)  # strictly increasing like real ordinal streams
         sz = d.size
         ds.append(d)
         ts.append(rng.integers(1, 1000, sz, dtype=np.int64))
@@ -197,3 +200,60 @@ def test_encode_posting_batch_matches_per_group():
             assert np.array_equal(np.asarray(got[k]), np.asarray(ref[k])), k
         for k in ("doc_ids_vb", "tfs_vb", "dls_vb"):
             assert bytes(got[k]) == bytes(ref[k]), k
+
+
+def _leb128(v: int) -> bytes:
+    out = bytearray()
+    while True:
+        low, v = v & 0x7F, v >> 7
+        out.append(low | (0x80 if v else 0))
+        if not v:
+            return bytes(out)
+
+
+def _reference_encode(ords, tfs, dls) -> dict:
+    """The ordinal posting format, one posting at a time: in each
+    128-posting block the first ordinal is stored whole and the rest as
+    gaps to their predecessor; tf and doc_len are stored whole; every
+    stream is LEB128 varbyte; the offsets are each block's first byte."""
+    streams = {"doc_ids_vb": bytearray(), "tfs_vb": bytearray(),
+               "dls_vb": bytearray()}
+    enc = {k: [] for k in ("off_d", "off_t", "off_l", "block_max_doc",
+                           "block_max_tf", "block_min_dl")}
+    for i, (o, tf, dl) in enumerate(zip(ords, tfs, dls)):
+        if i % 128 == 0:
+            for off, vb in (("off_d", "doc_ids_vb"), ("off_t", "tfs_vb"),
+                            ("off_l", "dls_vb")):
+                enc[off].append(len(streams[vb]))
+            block = slice(i, i + 128)
+            enc["block_max_doc"].append(ords[block][-1])
+            enc["block_max_tf"].append(max(tfs[block]))
+            enc["block_min_dl"].append(min(dls[block]))
+        streams["doc_ids_vb"] += _leb128(o if i % 128 == 0 else o - ords[i - 1])
+        streams["tfs_vb"] += _leb128(tf)
+        streams["dls_vb"] += _leb128(dl)
+    return {"n_docs": len(ords), **enc,
+            **{k: bytes(v) for k, v in streams.items()}}
+
+
+def test_encode_posting_batch_matches_reference_encoder():
+    """The vectorized batch encoder is byte-identical to the one-posting-
+    at-a-time reference of the ordinal format, over lists of 1, 127, 128,
+    129 and several blocks, sparse and dense ordinals, and values that
+    need 1–3 varbyte bytes."""
+    from elasticsearch_data_import_handler_spark.functions.varbyte import (
+        encode_posting_batch)
+
+    rng = np.random.default_rng(13)
+    lists = []
+    for n, span in [(1, 1), (127, 127), (128, 5000), (129, 129), (700, 3000),
+                    (1, 1 << 20), (300, 1 << 21), (256, 256)]:
+        ords = np.sort(rng.choice(span, size=n, replace=False)).astype(np.int64)
+        lists.append((ords, rng.integers(1, 300, n), rng.integers(1, 40_000, n)))
+    gstarts = np.cumsum([0] + [len(o) for o, _, _ in lists[:-1]])
+    got = encode_posting_batch(*(np.concatenate(c) for c in zip(*lists)), gstarts)
+    for row, (ords, tfs, dls) in zip(got, lists):
+        want = _reference_encode(ords.tolist(), tfs.tolist(), dls.tolist())
+        for k, v in want.items():
+            g = row[k]
+            assert (bytes(g) if isinstance(v, bytes) else np.asarray(g).tolist()) == v, k
