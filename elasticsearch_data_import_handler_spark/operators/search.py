@@ -744,10 +744,7 @@ def significant_terms(spark, reader, must=None, should=None, must_not=None,
     matched = bool_query(spark, reader, must=must, should=should,
                          must_not=must_not,
                          min_should=min_should).select("doc_id")
-    # n_docs is a driver-side snapshot scalar (committed cstats files) — the
-    # former corpus_stats().first() spent a Spark job on a 1-row local frame
-    from ..plans.build import _read_cstats
-    n_docs, _ = _read_cstats(reader.index_dir, reader.state.committed_batches)
+    n_docs = reader.state.n_docs  # the snapshot's total: a driver-side scalar
     if sample_mod is None and n_docs >= SIG_TERMS_SAMPLE_THRESHOLD:
         # ES samples this agg by default on large indices for the same
         # reason: the foreground df pass decodes full postings. 1/16 of

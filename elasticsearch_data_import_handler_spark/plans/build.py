@@ -16,8 +16,8 @@ Dataflow per batch (SURVEY.md §3.4):
 then: exact df corrections for tombstoned docs (distributed decode-explode
 of prior segments pruned to the tombstones' salt shards, joined against the
 tombstone frame — no driver materialization), an incremental lexicon
-generation (prev gen ∪ batch postings meta ∪ batch corrections), a per-batch
-corpus-stats *delta* file, lineage appended, state committed last (atomic
+generation (prev gen ∪ batch postings meta ∪ batch corrections), lineage
+appended, state — with the advanced corpus totals — committed last (atomic
 rename).  Every artifact under ``batch=K`` is derived purely from the
 committed state plus the batch input, so a crash before the state commit
 leaves the batch invisible and an idempotent retry overwrites it.
@@ -52,12 +52,13 @@ Layout decisions, stated for the 100 TB case:
 * **doc_stats** rows are ``(doc_id, url, warc_ts, doc_len, ord)`` under
   ``__t=d/salt=S``; tombstones are ``(doc_id, doc_len)`` under
   ``__t=t/salt=S`` of the batch that deleted them.
-* **Crash-idempotent stats**: corpus stats live as per-batch delta files
-  (``corpus_stats/delta_b{K}.parquet``); totals are the sum over *committed*
-  batches only, so a retried batch can never double-apply.  The lexicon is
-  generational (``lexicon/batch=K`` = full (term, df) snapshot built from
-  the previous committed generation + this batch) — readers pick the max
-  committed generation; idf is a read-time expression from current stats.
+* **Crash-idempotent stats**: the corpus totals (``n_docs``, ``sum_dl``)
+  live in ``_state/state.json`` and advance in the same atomic write that
+  commits the batch, so a crash before it leaves the old totals and a
+  retry recomputes from them.  The lexicon is generational
+  (``lexicon/batch=K`` = full (term, df) snapshot built from the previous
+  committed generation + this batch) — readers pick the max committed
+  generation; idf is a read-time expression from the snapshot's totals.
 * Exact-df deletes: the decode-explode is O(affected shards' doc_id streams)
   per batch.  At web scale you would amortize via compaction instead;
   both paths are implemented and the scan is salt-pruned.
@@ -390,113 +391,13 @@ def _df_corrections_df(spark: SparkSession, index_dir: str, committed: list[int]
     )
 
 
-# ------------------------------------------------------------- corpus stats
-# Per-batch delta files: overwrite-idempotent, committed-gated.  A retry of a
-# crashed batch rewrites the SAME delta file; totals are derived only from
-# committed batches, so mid-commit crashes can never double-apply a batch.
-
-def _cstats_delta_path(index_dir: str, batch_id: int) -> str:
-    return f"{index_dir}/corpus_stats/delta_b{batch_id}.parquet"
-
-
-def _write_cstats_delta(index_dir: str, batch_id: int, d_docs: int,
-                        d_sum: int) -> None:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(f"{index_dir}/corpus_stats", exist_ok=True)
-    t = pa.table({"batch_id": pa.array([batch_id], pa.int64()),
-                  "d_docs": pa.array([d_docs], pa.int64()),
-                  "d_sum": pa.array([d_sum], pa.int64())})
-    tmp = _cstats_delta_path(index_dir, batch_id) + ".tmp"
-    pq.write_table(t, tmp)
-    os.replace(tmp, _cstats_delta_path(index_dir, batch_id))
-
-
-_CSTATS_FOLD_EVERY = 16
-
-
-def _cstats_ckpt_path(index_dir: str, batch_id: int) -> str:
-    return f"{index_dir}/corpus_stats/ckpt_b{batch_id}.parquet"
-
-
-def _write_cstats_ckpt(index_dir: str, committed: list[int], n: int,
-                       s: int) -> None:
-    """Atomic cumulative checkpoint: totals + the exact batch set covered
-    (so a reader can prove the checkpoint applies to ITS committed list)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    t = pa.table({
-        "batches": pa.array([sorted(committed)], pa.list_(pa.int64())),
-        "n_docs": pa.array([n], pa.int64()),
-        "sum_dl": pa.array([s], pa.int64()),
-    })
-    dst = _cstats_ckpt_path(index_dir, max(committed))
-    pq.write_table(t, dst + ".tmp")
-    os.replace(dst + ".tmp", dst)
-
-
-def _cstats_ckpts(index_dir: str) -> list[str]:
-    ps = glob.glob(f"{index_dir}/corpus_stats/ckpt_b*.parquet")
-    return sorted(ps, key=lambda p: int(
-        os.path.basename(p)[len("ckpt_b"):-len(".parquet")]), reverse=True)
-
-
-def _maybe_fold_cstats(index_dir: str, committed: list[int]) -> None:
-    """Every _CSTATS_FOLD_EVERY commits, fold the per-batch delta files into
-    one cumulative checkpoint and delete the covered deltas, keeping
-    _read_cstats at O(fold window) file reads however many batches the index
-    has seen.  Crash-safe: the checkpoint lands atomically BEFORE any delta
-    is removed, and a checkpoint plus its still-present deltas double-counts
-    nothing (covered batches are skipped by the reader)."""
-    if len(committed) % _CSTATS_FOLD_EVERY:
-        return
-    n, s = _read_cstats(index_dir, committed)
-    _write_cstats_ckpt(index_dir, committed, n, s)
-    for b in committed:
-        p = _cstats_delta_path(index_dir, b)
-        if os.path.exists(p):
-            os.remove(p)
-    for stale in _cstats_ckpts(index_dir)[1:]:
-        os.remove(stale)
-
-
-def _read_cstats(index_dir: str, committed: list[int]) -> tuple[int, int]:
-    """(n_docs, sum_dl) over committed batches: newest applicable cumulative
-    checkpoint (batch set ⊆ committed) + the uncovered batches' delta files.
-    Driver-side parquet reads of single-row files — with folding every
-    _CSTATS_FOLD_EVERY commits this stays ≲ a handful of files at any batch
-    count (compaction resets it to one)."""
-    import pyarrow.parquet as pq
-
-    cset = set(committed)
-    n, s, covered = 0, 0, set()
-    for p in _cstats_ckpts(index_dir):
-        t = pq.read_table(p)
-        bs = t["batches"][0].as_py()
-        if set(bs) <= cset:
-            n = int(t["n_docs"][0].as_py())
-            s = int(t["sum_dl"][0].as_py())
-            covered = set(bs)
-            break
-    for b in committed:
-        if b in covered:
-            continue
-        p = _cstats_delta_path(index_dir, b)
-        if os.path.exists(p):
-            t = pq.read_table(p)
-            n += int(t["d_docs"][0].as_py())
-            s += int(t["d_sum"][0].as_py())
-    return n, s
-
-
 # ----------------------------------------------------------------- lexicon
 # Generational snapshots: lexicon/batch=K holds the full (term, df) table as
 # of batch K, built from the previous committed generation plus this batch's
 # postings metadata and df corrections — O(vocab) per commit, independent of
 # batch count.  Readers pick the max committed generation; idf is computed at
-# read time from current corpus stats (it shifts every commit, df does not).
+# read time from the snapshot's corpus totals (they shift every commit, df
+# does not).
 
 def _lexicon_gen_dir(index_dir: str, batch_id: int) -> str:
     return f"{index_dir}/lexicon/batch={batch_id}"
@@ -521,10 +422,10 @@ _LEXICON_DRIVER_MAX_ROWS = 4_000_000
 
 
 def _write_lexicon_gen(spark: SparkSession, index_dir: str, batch_id: int,
-                       committed_prev: list[int],
-                       batch_corr: DataFrame | None) -> None:
+                       committed_prev: list[int], corrections: bool) -> None:
     """lexicon/batch=K = prev committed gen ∪ batch=K postings meta ∪ batch=K
-    corrections, grouped-summed.  Derived purely from committed inputs + the
+    corrections (``df_corrections/batch=K``, when ``corrections``),
+    grouped-summed.  Derived purely from committed inputs + the
     deterministic batch recompute → overwrite-idempotent on retry.
 
     Data-sized dispatch: footer row counts decide between a driver-side
@@ -537,11 +438,9 @@ def _write_lexicon_gen(spark: SparkSession, index_dir: str, batch_id: int,
     pdir = f"{index_dir}/postings/batch={batch_id}"
     has_postings = bool(glob.glob(f"{pdir}/*/*.parquet")
                         or glob.glob(f"{pdir}/*.parquet"))
-    cdir = f"{index_dir}/df_corrections/batch={batch_id}"
-    # The driver path reads corrections from their materialized parquet dir
-    # (both callers write it before calling); an unmaterialized DataFrame
-    # forces the distributed path.
-    corr_on_disk = batch_corr is not None and bool(glob.glob(f"{cdir}/*.parquet"))
+    cdir = f"{index_dir}/df_corrections/batch={batch_id}" if corrections else None
+    if prev_dir is None and not has_postings and cdir is None:
+        return
 
     n_rows = 0
     try:
@@ -550,19 +449,15 @@ def _write_lexicon_gen(spark: SparkSession, index_dir: str, batch_id: int,
         if has_postings:
             n_rows += _ds.dataset(pdir, format="parquet",
                                   partitioning="hive").count_rows()
-        if corr_on_disk:
+        if cdir is not None:
             n_rows += _ds.dataset(cdir, format="parquet").count_rows()
-        driver_ok = (batch_corr is None or corr_on_disk) \
-            and n_rows <= _LEXICON_DRIVER_MAX_ROWS
+        driver_ok = n_rows <= _LEXICON_DRIVER_MAX_ROWS
     except Exception:
         driver_ok = False
 
     if driver_ok:
-        if prev_dir is None and not has_postings and not corr_on_disk:
-            return
         _write_lexicon_gen_driver(index_dir, batch_id, prev_dir, pdir if
-                                  has_postings else None,
-                                  cdir if corr_on_disk else None)
+                                  has_postings else None, cdir)
         return
 
     parts = []
@@ -572,10 +467,8 @@ def _write_lexicon_gen(spark: SparkSession, index_dir: str, batch_id: int,
     if has_postings:
         parts.append(spark.read.parquet(pdir)
                      .select("term", F.col("n_docs").cast("long").alias("delta")))
-    if batch_corr is not None:
-        parts.append(batch_corr.select("term", "delta"))
-    if not parts:
-        return
+    if cdir is not None:
+        parts.append(spark.read.parquet(cdir).select("term", "delta"))
     uni = parts[0]
     for p in parts[1:]:
         uni = uni.unionByName(p)
@@ -936,17 +829,10 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
         if corr is not None:
             corr.write.mode("overwrite").parquet(
                 f"{index_dir}/df_corrections/batch={batch_id}")
-            # read the materialized result back (cheap, vocab-scale) so the
-            # lexicon job doesn't recompute the decode-explode plan
-            corr = spark.read.parquet(f"{index_dir}/df_corrections/batch={batch_id}")
 
     timings["df_corrections"] = round(time.time() - t_phase, 2)
     t_phase = time.time()
-    committed_now = committed + [batch_id]
-    # corpus stats: overwrite-idempotent per-batch delta, committed-gated read
-    _write_cstats_delta(index_dir, batch_id, n_docs - n_tombs,
-                        sum_dl_new - tomb_dl)
-    _write_lexicon_gen(spark, index_dir, batch_id, committed, corr)
+    _write_lexicon_gen(spark, index_dir, batch_id, committed, corr is not None)
     timings["stats_lexicon"] = round(time.time() - t_phase, 2)
     kept.unpersist()
 
@@ -954,15 +840,13 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
     append_lineage(index_dir, [lineage_row(st.build_id or new_build_id(), batch_id,
                                            "done", n_docs, n_posting_rows, wall_ms,
                                            attempt)])
-    st.committed_batches = committed_now
+    st.committed_batches = committed + [batch_id]
     st.last_indexed_batch = max(st.last_indexed_batch, batch_id)
     st.s_shards = s_shards
     st.n_buckets = n_buckets
+    st.n_docs += n_docs - n_tombs
+    st.sum_dl += sum_dl_new - tomb_dl
     write_state(index_dir, st)
-    # fold cstats deltas ONLY once the batch is durably committed — folding
-    # before the state flip would let a crash delete deltas for a batch set
-    # the checkpoint can never apply to (its set ⊄ any future committed list)
-    _maybe_fold_cstats(index_dir, committed_now)
     # best-effort: drop lexicon generations older than the previous one
     # (kept so an in-flight reader of gen K-1 doesn't lose its files mid-scan)
     prev = _latest_lexicon_gen(index_dir, committed)
@@ -1030,9 +914,9 @@ def update_by_query(spark: SparkSession, index_dir: str, pages: DataFrame,
     bool query with ``transform`` (a Column → Column expression over the
     source ``text_col`` — the painless-script analog) applied, committed as
     ONE regular upsert batch: the new versions append, the standard upsert
-    path tombstones the old versions by url, df corrections / corpus-stats
-    delta / lexicon generation / lineage / state all flow through the same
-    crash-safe commit protocol as any ingest batch.
+    path tombstones the old versions by url, df corrections / lexicon
+    generation / lineage / state with its corpus totals all flow through the
+    same crash-safe commit protocol as any ingest batch.
 
     Like ES (which requires ``_source``), the raw document source lives
     outside the inverted index — ``pages`` is the source-of-truth frame
@@ -1085,10 +969,10 @@ def delete_by_query(spark: SparkSession, index_dir: str, must=None,
     Commits as a regular batch so every invariant holds downstream:
     tombstones land in ``doc_stats/batch=K/__t=t`` (one job, Observation
     counts), exact per-term df decrements via the same salt-pruned
-    decode-explode as upsert tombstones, corpus-stats delta, a new lexicon
-    generation, lineage row, state flip last.  Crash-safe for the same
-    reason commits are: every artifact is overwrite-idempotent under the
-    batch id and readers are gated on committed state.
+    decode-explode as upsert tombstones, a new lexicon generation, lineage
+    row, state flip (with the decremented corpus totals) last.  Crash-safe
+    for the same reason commits are: every artifact is overwrite-idempotent
+    under the batch id and readers are gated on committed state.
 
     Cost: O(Σ df of the query terms) to find victims + O(victim-shards'
     postings) for the df corrections — never a corpus scan."""
@@ -1136,19 +1020,17 @@ def delete_by_query(spark: SparkSession, index_dir: str, must=None,
         if corr is not None:
             corr.write.mode("overwrite").parquet(
                 f"{index_dir}/df_corrections/batch={batch_id}")
-            corr = spark.read.parquet(
-                f"{index_dir}/df_corrections/batch={batch_id}")
-        _write_cstats_delta(index_dir, batch_id, -n_tombs, -tomb_dl)
-        _write_lexicon_gen(spark, index_dir, batch_id, committed, corr)
+        _write_lexicon_gen(spark, index_dir, batch_id, committed,
+                           corr is not None)
 
         wall_ms = int((time.time() - t0) * 1000)
         append_lineage(index_dir, [lineage_row(st.build_id, batch_id,
                                                "delete", 0, 0, wall_ms, 1)])
-        committed_now = committed + [batch_id]
-        st.committed_batches = committed_now
+        st.committed_batches = committed + [batch_id]
         st.last_indexed_batch = batch_id
+        st.n_docs -= n_tombs
+        st.sum_dl -= tomb_dl
         write_state(index_dir, st)
-        _maybe_fold_cstats(index_dir, committed_now)
         prev = _latest_lexicon_gen(index_dir, committed)
         if prev is not None:
             _cleanup_stale_gens(index_dir, prev)
@@ -1245,16 +1127,13 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     # materialize the new generation's postings before the state flip
     merged.write.mode("overwrite").partitionBy("bucket").parquet(
         f"{index_dir}/postings/batch={new_b}")
-    _write_cstats_delta(index_dir, new_b, n_active, sum_active)
     # post-compaction lexicon = segment metadata sums (no corrections left)
-    lex = (spark.read.parquet(f"{index_dir}/postings/batch={new_b}")
-           .groupBy("term").agg(F.sum("n_docs").cast("long").alias("df"))
-           .filter(F.col("df") > 0))
-    lex.write.mode("overwrite").parquet(_lexicon_gen_dir(index_dir, new_b))
+    _write_lexicon_gen(spark, index_dir, new_b, [], False)
 
     # --- atomic commit point ---
     st.committed_batches = [new_b]
     st.last_indexed_batch = new_b
+    st.n_docs, st.sum_dl = n_active, sum_active
     write_state(index_dir, st)
 
     # cleanup (crash-tolerant: everything below is invisible to readers)
@@ -1262,11 +1141,6 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         shutil.rmtree(f"{index_dir}/postings/batch={b}", ignore_errors=True)
         shutil.rmtree(f"{index_dir}/doc_stats/batch={b}", ignore_errors=True)
         shutil.rmtree(f"{index_dir}/positions/batch={b}", ignore_errors=True)
-        p_delta = _cstats_delta_path(index_dir, b)
-        if os.path.exists(p_delta):
-            os.remove(p_delta)
-    for ckpt in _cstats_ckpts(index_dir):
-        os.remove(ckpt)  # they cover pre-compaction batch sets only
     shutil.rmtree(f"{index_dir}/df_corrections", ignore_errors=True)
     _cleanup_stale_gens(index_dir, new_b)
     import pyarrow.dataset as _ds
@@ -1282,9 +1156,10 @@ class IndexReader:
     A reader is a handle onto ONE committed snapshot (state read at
     construction), so every derived DataFrame is immutable for the reader's
     lifetime — they are built once and memoized (guide §1: the per-query
-    constant was dominated by re-constructing identical scans, re-reading
-    cstats files, and re-materializing the 1-row corpus-stats frame on every
-    operator call).  Writers commit through new readers, unaffected."""
+    constant was dominated by re-constructing identical scans and
+    re-materializing the 1-row corpus-stats frame on every operator call).
+    The corpus totals are the state's own.  Writers commit through new
+    readers, unaffected."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
@@ -1296,40 +1171,32 @@ class IndexReader:
         self.doc_maps = DocMaps(index_dir)
         self._memo: dict = {}
 
-    def _cstats_tuple(self) -> tuple[int, int]:
-        if "cstats" not in self._memo:
-            self._memo["cstats"] = _read_cstats(
-                self.index_dir, self.state.committed_batches)
-        return self._memo["cstats"]
-
     def avgdl_value(self) -> float:
         """The corpus avgdl as a driver-side float — exactly the value
         ``corpus_stats()`` carries (same Python division), usable as a
         literal column instead of a 1-row crossJoin."""
-        n_docs, sum_dl = self._cstats_tuple()
+        n_docs, sum_dl = self.state.n_docs, self.state.sum_dl
         return (sum_dl / n_docs) if n_docs else 0.0
 
     def lexicon(self) -> DataFrame:
         """(term, df, idf) — df from the max committed lexicon generation,
-        idf computed here from current corpus stats (exact, always fresh)."""
+        idf computed here from the snapshot's corpus totals."""
         if "lexicon" not in self._memo:
             gen = _latest_lexicon_gen(self.index_dir,
                                       self.state.committed_batches)
             if gen is None:
                 raise FileNotFoundError(
                     f"no lexicon generation in {self.index_dir}")
-            n_docs, _ = self._cstats_tuple()
             self._memo["lexicon"] = (
                 self.spark.read.parquet(_lexicon_gen_dir(self.index_dir, gen))
-                .select("term", "df", _idf_expr(n_docs).alias("idf")))
+                .select("term", "df",
+                        _idf_expr(self.state.n_docs).alias("idf")))
         return self._memo["lexicon"]
 
     def corpus_stats(self) -> DataFrame:
         if "corpus_stats" not in self._memo:
-            n_docs, sum_dl = self._cstats_tuple()
-            avgdl = (sum_dl / n_docs) if n_docs else 0.0
             self._memo["corpus_stats"] = self.spark.createDataFrame(
-                [(n_docs, sum_dl, avgdl)],
+                [(self.state.n_docs, self.state.sum_dl, self.avgdl_value())],
                 "n_docs long, sum_dl long, avgdl double")
         return self._memo["corpus_stats"]
 
@@ -1361,7 +1228,7 @@ class IndexReader:
         import pyarrow.dataset as _ds
 
         committed = self.state.committed_batches
-        n_docs, sum_dl = _read_cstats(self.index_dir, committed)
+        n_docs, sum_dl = self.state.n_docs, self.state.sum_dl
 
         def _rows_bytes(kind: str) -> tuple[int, int]:
             dirs = _batch_dirs(self.index_dir, kind, committed)

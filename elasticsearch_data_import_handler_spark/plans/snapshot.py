@@ -3,19 +3,19 @@
 ES snapshots are INCREMENTAL at the segment level: a snapshot copies only
 segment files the repository doesn't already hold, because segments are
 immutable once written.  Our index has the same property — committed
-batch directories (postings/positions/doc_stats/corpus_stats/lexicon
-parquet) never mutate after commit; compaction and deletes write NEW
-generations/batches — so the same incremental scheme applies directly:
+batch directories (postings/positions/doc_stats/lexicon parquet) never
+mutate after commit; compaction and deletes write NEW generations/batches
+— so the same incremental scheme applies directly:
 a repository is a flat content store keyed by relative path, and a
 snapshot is a manifest (file list + sizes + the state JSON at snapshot
 time).  Restore materializes the manifest into a fresh index dir.
 
 Consistency: a snapshot reads the committed state FIRST and then copies
 only files that state references (batch dirs in ``committed_batches``,
-current lexicon generation, corpus stats, tombstones) — a concurrent
-in-flight build's half-written batch is invisible to it, the same
-isolation the query readers get from commit-last-state-flip.  Restore
-never overwrites an existing index dir.
+current lexicon generation, tombstones; the corpus totals ride in the
+state itself) — a concurrent in-flight build's half-written batch is
+invisible to it, the same isolation the query readers get from
+commit-last-state-flip.  Restore never overwrites an existing index dir.
 
 Scale note: driver-side ``shutil`` here (same discipline as
 ``state.py``'s JSON backend); a lakehouse deployment swaps the file copy

@@ -20,6 +20,8 @@ attempt) — per-batch metrics + resume bookkeeping (C13/C14).
 
 ``state.json`` carries the on-disk ``format_version``; an index written in
 any other format is refused, since there is one decoder (see plans/build.py).
+It also carries the corpus totals (``n_docs``, ``sum_dl``), so the totals
+and the batches they count advance in one atomic write.
 """
 
 from __future__ import annotations
@@ -31,9 +33,11 @@ import uuid
 from dataclasses import asdict, dataclass, field
 
 
-# 2: postings store per-(batch, salt) doc ordinals, doc_stats holds the
-# ord → doc_id map.  1 (no field in state.json): 64-bit doc-id postings.
-FORMAT_VERSION = 2
+# 3: state.json carries the corpus totals n_docs and sum_dl (a format-2
+# state has none).  2: postings store per-(batch, salt) doc ordinals,
+# doc_stats holds the ord → doc_id map.  1 (no field in state.json): 64-bit
+# doc-id postings.
+FORMAT_VERSION = 3
 
 
 class IndexFormatError(ValueError):
@@ -51,6 +55,8 @@ class IndexState:
     build_id: str = ""
     analyzer: dict = field(default_factory=dict)  # A8: per-index analysis chain
     has_positions: bool = False    # positional postings written per batch
+    n_docs: int = 0            # active docs over committed batches
+    sum_dl: int = 0            # their summed doc lengths
     format_version: int = FORMAT_VERSION
 
     @classmethod

@@ -204,35 +204,119 @@ def test_three_version_upsert_and_reimport(spark, tmp_path_factory):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_cstats_retry_idempotent_and_uncommitted_gated(spark, tmp_path_factory):
-    """ADVICE medium ×2: (a) a delta file left by a crashed batch attempt is
-    overwritten on retry and never double-applied; (b) artifacts from
-    uncommitted batches (cstats deltas, df_corrections) are invisible."""
-    from elasticsearch_data_import_handler_spark.plans.build import (
-        _write_cstats_delta, _read_cstats, commit_batch)
+def _crash_at_state_commit(monkeypatch):
+    """The next ``write_state`` in plans.build raises, as a crash right
+    before the atomic commit point would; ``monkeypatch.undo()`` restores
+    it for the retry."""
+    from elasticsearch_data_import_handler_spark.plans import build as B
 
-    d = str(tmp_path_factory.mktemp("retry"))
-    commit_batch(spark, _pages_df(spark, [("u1", "2026-01-01", "one two")]),
-                 d, 0, tau=100, n_buckets=2)
-    # simulate a crashed batch-1 attempt: delta written, state NOT advanced
-    _write_cstats_delta(d, 1, 999, 999_999)
+    def _crash(*_):
+        raise OSError("injected crash at the state commit")
+    monkeypatch.setattr(B, "write_state", _crash)
+
+
+def _totals(d):
     st = read_state(d)
-    assert st.committed_batches == [0]
-    assert _read_cstats(d, st.committed_batches) == (1, 2)  # gated: garbage invisible
-    # retry of batch 1 overwrites the garbage delta; totals stay exact
-    commit_batch(spark, _pages_df(spark, [("u2", "2026-01-01", "three four five")]),
-                 d, 1, tau=100, n_buckets=2)
-    reader = IndexReader(spark, d)
-    cs = reader.corpus_stats().first()
-    assert (cs["n_docs"], cs["sum_dl"]) == (2, 5)
-    # stray df_corrections from a crashed/renumbered batch: must not affect df
+    return st.n_docs, st.sum_dl
+
+
+def test_crashed_commit_invisible_and_retry_matches_clean_build(
+        spark, full_and_incr, tmp_path_factory, monkeypatch):
+    """A commit that dies at the state write leaves the previous totals and
+    top-k to a fresh reader; retrying the same batch id gives exactly the
+    clean two-batch build's totals, ranked rows and lexicon — a stray
+    uncommitted df_corrections dir changes nothing."""
     import os
+
     import pandas as pd
+
+    from elasticsearch_data_import_handler_spark.plans.build import commit_batch
+
+    _, clean = full_and_incr
+    d = str(tmp_path_factory.mktemp("crashcommit"))
+    b0 = synth_pages(spark, N_ROWS, seed=42, batches=2, batch=0)
+    b1 = synth_pages(spark, N_ROWS, seed=42, batches=2, batch=1)
+    build_incremental(spark, [b0], d, tau=TAU, n_buckets=4)
+    totals, top = _totals(d), _topk(spark, d)
+
+    _crash_at_state_commit(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        commit_batch(spark, b1, d, 1, tau=TAU, n_buckets=4)
+    monkeypatch.undo()
+    stats = IndexReader(spark, d).stats()
+    assert stats["committed_batches"] == [0]
+    assert (stats["n_docs"], stats["sum_doc_len"]) == totals
+    assert _topk(spark, d) == top
+
+    commit_batch(spark, b1, d, 1, tau=TAU, n_buckets=4)
+    assert _totals(d) == _totals(clean)
+    assert _topk(spark, d) == _topk(spark, clean)
+    # stray df_corrections from a crashed/renumbered batch: must not affect df
     os.makedirs(f"{d}/df_corrections/batch=99", exist_ok=True)
-    pd.DataFrame({"term": ["one"], "delta": [-100]}).to_parquet(
+    pd.DataFrame({"term": ["spark"], "delta": [-100]}).to_parquet(
         f"{d}/df_corrections/batch=99/part-0.parquet")
-    lex = {r["term"]: r["df"] for r in IndexReader(spark, d).lexicon().collect()}
-    assert lex["one"] == 1
+
+    def lex(x):
+        return {r["term"]: r["df"] for r in IndexReader(spark, x).lexicon().collect()}
+    assert lex(d) == lex(clean)
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def test_crashed_delete_invisible_and_retry_matches_clean_delete(
+        spark, full_and_incr, tmp_path_factory, monkeypatch):
+    """delete_by_query dying at the state write leaves the previous totals
+    and top-k; the retry (same batch id) equals an uninterrupted delete."""
+    import os
+
+    from elasticsearch_data_import_handler_spark.plans.build import delete_by_query
+
+    _, src = full_and_incr
+    d = str(tmp_path_factory.mktemp("crashdel") / "idx")
+    clean = str(tmp_path_factory.mktemp("cleandel") / "idx")
+    shutil.copytree(src, d)
+    shutil.copytree(src, clean)
+    want = delete_by_query(spark, clean, must=["merge"])
+    assert want["n_tombstones"] > 0
+    totals, top = _totals(d), _topk(spark, d)
+
+    _crash_at_state_commit(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        delete_by_query(spark, d, must=["merge"])
+    monkeypatch.undo()
+    assert read_state(d).committed_batches == [0, 1]
+    assert _totals(d) == totals and _topk(spark, d) == top
+
+    got = delete_by_query(spark, d, must=["merge"])
+    assert (got["batch_id"], got["n_tombstones"]) == \
+        (want["batch_id"], want["n_tombstones"])
+    assert _totals(d) == _totals(clean)
+    assert _totals(d)[0] == totals[0] - want["n_tombstones"]
+    assert _topk(spark, d) == _topk(spark, clean)
+    assert not os.path.exists(f"{d}/corpus_stats")
+    shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(clean, ignore_errors=True)
+
+
+def test_stale_reader_keeps_its_totals(spark, tmp_path_factory):
+    """A reader is a handle onto one committed snapshot: one opened (and
+    not yet used) before a later commit scores with its snapshot's totals,
+    not the new ones.  Sixteen one-doc commits, the last after the reader
+    opened."""
+    from elasticsearch_data_import_handler_spark.plans.build import commit_batch
+
+    d = str(tmp_path_factory.mktemp("stale"))
+    docs = [synth_pages(spark, 16, seed=42, batches=16, batch=i)
+            for i in range(16)]
+    build_incremental(spark, docs[:15], d, tau=TAU, n_buckets=4)
+    ref, stale = IndexReader(spark, d), IndexReader(spark, d)
+    want = (ref.avgdl_value(), ref.stats()["n_docs"],
+            bm25_topk_wand(spark, ref).collect())
+    assert want[1] == 15 and want[2]
+
+    commit_batch(spark, docs[15], d, 15, tau=TAU, n_buckets=4)
+    assert IndexReader(spark, d).stats()["n_docs"] == 16
+    assert (stale.avgdl_value(), stale.stats()["n_docs"],
+            bm25_topk_wand(spark, stale).collect()) == want
     shutil.rmtree(d, ignore_errors=True)
 
 
@@ -283,37 +367,6 @@ def test_analyzer_settings_surface(spark, tmp_path_factory):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_cstats_fold_bounds_file_reads(tmp_path_factory):
-    """100 commits' corpus-stats deltas fold into cumulative checkpoints
-    every _CSTATS_FOLD_EVERY commits: totals stay exact, the directory holds
-    ≤ fold-window + 1 files, and a checkpoint written for a batch set that
-    never got committed (crash before the state flip) is ignored."""
-    import glob as _glob
-
-    from elasticsearch_data_import_handler_spark.plans.build import (
-        _CSTATS_FOLD_EVERY, _maybe_fold_cstats, _read_cstats,
-        _write_cstats_ckpt, _write_cstats_delta)
-
-    d = str(tmp_path_factory.mktemp("cstatsfold"))
-    committed = []
-    exp_n = exp_s = 0
-    for b in range(100):
-        _write_cstats_delta(d, b, b + 1, 10 * (b + 1))
-        committed.append(b)
-        _maybe_fold_cstats(d, committed)
-        exp_n += b + 1
-        exp_s += 10 * (b + 1)
-    assert _read_cstats(d, committed) == (exp_n, exp_s)
-    files = _glob.glob(f"{d}/corpus_stats/*.parquet")
-    # one checkpoint + at most (fold window) uncovered deltas
-    assert len(files) <= _CSTATS_FOLD_EVERY + 1, sorted(files)
-
-    # crash-window property: a ckpt covering a batch that is NOT committed
-    # must not be applied (its deltas were never folded away)
-    _write_cstats_ckpt(d, committed + [999], 10**9, 10**9)
-    assert _read_cstats(d, committed) == (exp_n, exp_s)
-
-
 def test_commit_after_compaction_mixes_layouts(spark, tmp_path_factory):
     """Commits after a compaction: readers see the compacted generation's
     and the new batch's doc_stats together, and upserts against a compacted
@@ -342,4 +395,5 @@ def test_commit_after_compaction_mixes_layouts(spark, tmp_path_factory):
     active = reader.doc_stats().join(tomb, "doc_id", "left_anti")
     assert active.count() == 120
     assert len(_topk(spark, d)) > 0                 # index still queryable
+    assert not os.path.exists(f"{d}/corpus_stats")
     shutil.rmtree(d, ignore_errors=True)

@@ -1,5 +1,6 @@
 """The on-disk posting format: per-segment doc ordinals, the segment doc
-maps that turn them back into doc_ids, and the format version in _state."""
+maps that turn them back into doc_ids, and the format version and corpus
+totals in _state."""
 
 import json
 import os
@@ -32,23 +33,37 @@ def _expected(spark, pages):
                            round_to=None).collect())
 
 
-def test_old_format_state_is_refused(spark, tmp_path):
-    """An index whose _state predates the format version (64-bit doc-id
-    postings) is refused by every entry point with an error that says to
-    rebuild, rather than decoded wrongly."""
+_STATE_V1 = {"last_indexed_batch": 0, "committed_batches": [0], "s_shards": 1,
+             "n_buckets": 8, "build_id": "b0", "analyzer": {},
+             "has_positions": False}
+
+
+@pytest.mark.parametrize("old_state", [
+    _STATE_V1,                           # 64-bit doc-id postings
+    {**_STATE_V1, "format_version": 2},  # corpus totals outside the state
+], ids=["unversioned", "format2"])
+def test_old_format_state_is_refused(spark, tmp_path, old_state):
+    """An index whose _state is in an older on-disk format is refused by
+    every entry point — and a snapshot of one by restore — with an error
+    that says to rebuild, rather than read wrongly (a format-2 state has no
+    corpus totals and would score with n_docs = 0)."""
+    from elasticsearch_data_import_handler_spark.plans.snapshot import restore_index
+
     d = str(tmp_path / "old")
     os.makedirs(f"{d}/_state")
     with open(f"{d}/_state/state.json", "w") as f:
-        json.dump({"last_indexed_batch": 0, "committed_batches": [0],
-                   "s_shards": 1, "n_buckets": 8, "build_id": "b0",
-                   "analyzer": {}, "has_positions": False}, f)
+        json.dump(old_state, f)
+    repo = tmp_path / "repo"
+    os.makedirs(repo / "snapshots")
+    with open(repo / "snapshots" / "old.json", "w") as f:
+        json.dump({"name": "old", "ts": 0, "state": old_state, "files": []}, f)
+    pages = synth_pages(spark, 5, seed=1)
     for call in (lambda: read_state(d), lambda: IndexReader(spark, d),
-                 lambda: compact_index(spark, d)):
+                 lambda: compact_index(spark, d),
+                 lambda: commit_batch(spark, pages, d, batch_id=1),
+                 lambda: restore_index(str(repo), "old", str(tmp_path / "dst"))):
         with pytest.raises(IndexFormatError, match="rebuild"):
             call()
-    pages = synth_pages(spark, 5, seed=1)
-    with pytest.raises(IndexFormatError, match="rebuild"):
-        commit_batch(spark, pages, d, batch_id=1)
 
 
 def test_build_writes_dense_ordinals_and_version(spark, tmp_path):
