@@ -30,6 +30,17 @@ Subcommands:
                         segment doc maps) and to encode every posting list
                         (encode_posting_batch), median of --reps passes,
                         and the index's on-disk bytes per subdirectory.
+  single                the phase split of a warm single-query request on
+                        the seeded perfbench search index (--seed, default
+                        7), median ms over --reps (default 10) of its
+                        singles, for both paths of a one-group request: the
+                        driver path bm25_topk_wand takes (query frame,
+                        qterms collect, pyarrow read of postings, lexicon df
+                        and tombstones, StrictMath idf, join, kernel,
+                        merge, final collect) and the Spark plan
+                        (candidates=True, toArrow, the same merge, final
+                        collect), with each path's Spark jobs and whether
+                        their ranked rows are identical.
   task_overhead         the fixed cost of one Python task, under the stock
                         pyspark.daemon and under the engine's preloading
                         daemon (daemon.py).  Runs --reps (default 30)
@@ -222,7 +233,9 @@ def cmd_wand(seed=7, reps=5, cpus=4):
         reader = IndexReader(spark, idx)
         avgdl = reader.avgdl_value()
         rows = [(q, t, k) for q, text, k in queries for t in query_terms(text)]
-        scored, _ = wand._scorer_input(spark, reader, query_terms_df(spark, rows))
+        qterms, qt = wand._request_rows(spark, query_terms_df(spark, rows))
+        scored = wand._scorer_input(spark, reader, qterms, qt,
+                                    wand._query_buckets(qt))
         scored.write.mode("overwrite").parquet(groups_dir)
     finally:
         spark.stop()
@@ -261,6 +274,94 @@ def cmd_wand(seed=7, reps=5, cpus=4):
         "postings_decoded": decoded, "kernel_s": [round(x, 4) for x in secs],
         "ns_per_decoded_posting": round(1e9 * s / max(1, decoded), 1),
         "groups_per_s": round(len(groups) / s, 1)}))
+
+
+def cmd_single(seed=7, reps=10, cpus=4):
+    from statistics import median
+
+    import pyarrow as pa
+
+    from elasticsearch_data_import_handler_spark.operators import wand
+    from elasticsearch_data_import_handler_spark.operators.scoring import (
+        query_terms_df)
+    from elasticsearch_data_import_handler_spark.plans.build import IndexReader
+    from elasticsearch_data_import_handler_spark.queryset import query_terms
+    from elasticsearch_data_import_handler_spark.session import get_spark
+
+    spark = get_spark("bench-extra-single", cpus=cpus)
+    sc = spark.sparkContext
+    try:
+        _, idx, inp = _seed_index(spark, seed)
+        reader = IndexReader(spark, idx)
+        if reader.state.s_shards != 1:
+            raise SystemExit("the one-group path needs an index of one salt")
+        avgdl = reader.avgdl_value()
+        singles = [[(q, t, k) for q, text, k in r["queries"]
+                    for t in query_terms(text)]
+                   for r in inp.search_requests()["single"]]
+
+        def timed(phases, name, fn, *a):
+            t0 = time.perf_counter()
+            out = fn(*a)
+            phases[name] = phases.get(name, 0.0) + 1000 * (time.perf_counter() - t0)
+            return out
+
+        def local(rows):
+            ph = {}
+            qterms = timed(ph, "query_terms_df", query_terms_df, spark, rows)
+            _, qt = timed(ph, "qterms_collect", wand._request_rows, spark, qterms)
+            terms = sorted(set(qt.column("term").to_pylist()))
+            post, lex, tombs = timed(ph, "read", reader.group_tables, terms)
+            idf = timed(ph, "idf", wand._strict_idf, spark,
+                        lex.column("df").to_numpy(), reader.state.n_docs)
+            table = (timed(ph, "join", wand._join_group, qt, post,
+                           lex.column("term"), idf)
+                     if post is not None else None)
+            ts = pa.table({"__ts_doc_id": tombs}) if tombs.size else None
+            top = (timed(ph, "kernel", wand._score_group, table, ts, avgdl,
+                         reader.doc_maps)
+                   if table is not None else wand._TOPK.empty_table())
+            df = timed(ph, "merge", wand._merge_shard_topks, spark, top, None)
+            return ph, timed(ph, "collect", df.collect)
+
+        def via_spark(rows):
+            ph = {}
+            qterms = timed(ph, "query_terms_df", query_terms_df, spark, rows)
+            cands = timed(ph, "plan_and_udf", wand.bm25_topk_wand, spark,
+                          reader, qterms, None, True)
+            top = timed(ph, "toArrow", cands.toArrow)
+            df = timed(ph, "merge", wand._merge_shard_topks, spark, top, None)
+            return ph, timed(ph, "collect", df.collect)
+
+        def run(path, rows, group):
+            sc.setJobGroup(group, group)
+            try:
+                ph, got = path(rows)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            ph["total"] = sum(ph.values())
+            return ph, got
+
+        run(local, singles[0], "single-warm-local")
+        run(via_spark, singles[0], "single-warm-spark")
+        res = {"local": [], "spark": []}
+        identical = True
+        for i in range(reps):
+            rows = singles[i % len(singles)]
+            a, got_l = run(local, rows, f"single-local-{i}")
+            b, got_s = run(via_spark, rows, f"single-spark-{i}")
+            res["local"].append(a)
+            res["spark"].append(b)
+            identical &= got_l == got_s
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = {p: median(len(sc.statusTracker().getJobIdsForGroup(
+            f"single-{p}-{i}")) for i in range(reps)) for p in res}
+    finally:
+        spark.stop()
+    print(json.dumps({
+        "seed": seed, "reps": reps, "identical_rows": identical, "jobs": jobs,
+        **{f"{p}_ms": {k: round(median(r[k] for r in runs), 2) for k in runs[0]}
+           for p, runs in res.items()}}))
 
 
 def cmd_format(seed=7, reps=5, cpus=4):
@@ -415,7 +516,7 @@ if __name__ == "__main__":
 
     ap = argparse.ArgumentParser()
     ap.add_argument("cmd", choices=["suite", "plans", "build", "wand",
-                                    "format", "task_overhead"])
+                                    "format", "single", "task_overhead"])
     ap.add_argument("names", nargs="*")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--reps", type=int, default=None)
@@ -432,6 +533,9 @@ if __name__ == "__main__":
     elif a.cmd == "wand":
         cmd_wand(seed=a.seed, reps=a.reps or 5,
                  cpus=min(a.cpus or 8, os.cpu_count() or 1))
+    elif a.cmd == "single":
+        cmd_single(seed=a.seed, reps=a.reps or 10,
+                   cpus=min(a.cpus or 8, os.cpu_count() or 1))
     elif a.cmd == "format":
         cmd_format(seed=a.seed, reps=a.reps or 5,
                    cpus=min(a.cpus or 8, os.cpu_count() or 1))

@@ -18,6 +18,19 @@ Query plan (SURVEY.md §3.4):
       no ranking stage, like a search engine's coordinating node reducing
       its shards' top-k (query-then-fetch)
 
+One-group requests (ranked, round(√Q) = 1, i.e. at most 2 queries, on an
+index of one salt) are the whole plan above in one scorer group, so the
+driver runs that group itself and no Spark job runs:
+
+  qterms collect (the same bounded collect)
+    → IndexReader.group_tables: pyarrow reads of the terms' postings/
+      batch=K/bucket=J files, the lexicon generation's df and the
+      tombstoned doc_ids
+    → idf through java.lang.StrictMath.log, bit-identical to the lexicon's
+    → _join_group: the plan's two inner joins, in numpy
+    → _score_group (the same call the one Python task would make)
+    → _merge_shard_topks (the same merge)
+
 Because every term's postings are sharded by the same doc-hash (build.py),
 the rows of one (query, salt) hold a *complete, disjoint document subspace*:
 all query terms' postings for exactly the docs with pmod(xxhash64(doc_id), S)
@@ -59,7 +72,7 @@ from ..functions.sqltext import col_isin
 from ..functions.varbyte import (
     BLOCK_SIZE, arrow_binary, arrow_list, bm25_partial, decode_posting_runs,
     gather_ranges)
-from ..plans.docmap import DocMaps, segment_maps
+from ..plans.docmap import segment_maps
 
 # what the scorer reads beside the group's salt; nothing else crosses the
 # shuffle
@@ -290,31 +303,99 @@ def _merge_shard_topks(spark: SparkSession, shard_topk: pa.Table,
                              f"round(score, {int(round_to)}) AS score")
 
 
-def _scorer_input(spark: SparkSession, reader, qterms: DataFrame | None
-                  ) -> tuple[DataFrame, int]:
-    """(the scorer's input rows keyed by (__qbucket, salt) and projected to
-    the kernel's columns, the query-bucket count round(√Q))."""
+def _request_rows(spark: SparkSession, qterms: DataFrame | None
+                  ) -> tuple[DataFrame, pa.Table]:
+    """(the request's query-term frame, its (query_id, term, k) rows as an
+    Arrow table).  The one bounded collect of a request: |queries|×|terms|
+    rows, which feed the pruned postings scan, the query-bucket count and
+    the one-group path.  On a query_terms_df frame (a LocalRelation) it runs
+    no Spark job."""
     from .scoring import query_terms_df
 
     if qterms is None:
         qterms = query_terms_df(spark)
-    # one bounded collect (|queries|×|terms| rows, deduplicated by the sets
-    # below) feeds both the pruned postings scan and the query-bucket count.
-    # On a query_terms_df frame (a LocalRelation) it runs no Spark job.
-    qt_rows = qterms.select("query_id", "term").collect()
-    terms = sorted({r["term"] for r in qt_rows})
-    n_queries = len({r["query_id"] for r in qt_rows})
+    rows = qterms.select("query_id", "term", "k").collect()
+    return qterms, pa.table({
+        "query_id": pa.array([r[0] for r in rows], pa.int32()),
+        "term": pa.array([r[1] for r in rows], pa.string()),
+        "k": pa.array([r[2] for r in rows], pa.int32())})
+
+
+def _query_buckets(qt: pa.Table) -> int:
+    """The query-bucket count round(√Q) of a request."""
+    return max(1, int(round(len(pc.unique(qt.column("query_id"))) ** 0.5)))
+
+
+def _scorer_input(spark: SparkSession, reader, qterms: DataFrame,
+                  qt: pa.Table, n_qb: int) -> DataFrame:
+    """The scorer's input rows keyed by (__qbucket, salt) and projected to
+    the kernel's columns; ``qt`` is the collected ``qterms``, ``n_qb`` its
+    query-bucket count."""
+    terms = sorted(set(qt.column("term").to_pylist()))
     post = reader.postings_for_terms(terms)
     lex = reader.lexicon().select("term", "idf").filter(col_isin("term", terms))
-    n_qb = max(1, int(round(n_queries ** 0.5)))
     # one SQL-text projection: the same select built from Column objects
     # costs ~100 more driver→JVM round trips, a visible share of the
     # single-query latency
-    scored = (post.join(F.broadcast(lex), "term")
-              .join(F.broadcast(qterms), "term")
-              .selectExpr("cast(pmod(xxhash64(cast(query_id as bigint)), "
-                          f"{n_qb}) as int) AS __qbucket", "salt", *_KERNEL_COLS))
-    return scored, n_qb
+    return (post.join(F.broadcast(lex), "term")
+            .join(F.broadcast(qterms), "term")
+            .selectExpr("cast(pmod(xxhash64(cast(query_id as bigint)), "
+                        f"{n_qb}) as int) AS __qbucket", "salt",
+                        *_KERNEL_COLS))
+
+
+def _strict_idf(spark: SparkSession, df: np.ndarray, n_docs: int) -> np.ndarray:
+    """idf per lexicon df, bit-identical to plans.build._idf_expr: the
+    argument in Python doubles, with the Spark expression's operations in
+    its order, then ``java.lang.StrictMath.log`` — the function Spark's
+    ``log`` calls — once per term.  np.log and math.log differ from it in
+    the last bits on some terms."""
+    log = spark._jvm.java.lang.StrictMath.log
+    return np.array([log(1.0 + ((n_docs - d) + 0.5) / (d + 0.5))
+                     for d in df.tolist()], dtype=np.float64)
+
+
+def _join_group(qt: pa.Table, post: pa.Table, lex_terms: pa.ChunkedArray,
+                idf: np.ndarray) -> pa.Table:
+    """The kernel input of one group, joined on the driver with the Spark
+    plan's semantics: ``post`` rows inner-joined to the lexicon terms
+    ``lex_terms`` (a term whose df fell to 0 after deletes has postings rows
+    but no lexicon row, and is dropped) and then to the query rows ``qt``,
+    one output row per query row (a query that lists a term twice carries
+    each postings row twice); ``idf[i]`` is ``lex_terms[i]``'s idf."""
+    def lex_index(terms):  # each term's lexicon row, -1 when it has none
+        return pc.fill_null(pc.index_in(terms, lex_terms), -1).to_numpy()
+
+    p_t, q_t = lex_index(post.column("term")), lex_index(qt.column("term"))
+    p_ok, q_ok = np.flatnonzero(p_t >= 0), np.flatnonzero(q_t >= 0)
+    p_t, q_t = p_t[p_ok], q_t[q_ok]
+    # postings rows grouped by lexicon term; each query row takes its term's
+    by_term = p_ok[np.argsort(p_t, kind="stable")]
+    n_of = np.bincount(p_t, minlength=len(lex_terms))
+    first = np.cumsum(n_of) - n_of
+    reps = n_of[q_t]
+    within = np.arange(reps.sum()) - np.repeat(np.cumsum(reps) - reps, reps)
+    table = post.take(pa.array(by_term[np.repeat(first[q_t], reps) + within],
+                               pa.int64()))
+    for name, values in (
+            ("query_id", np.repeat(qt.column("query_id").to_numpy()[q_ok], reps)),
+            ("k", np.repeat(qt.column("k").to_numpy()[q_ok], reps)),
+            ("idf", np.repeat(idf[q_t], reps))):
+        table = table.append_column(name, pa.array(values))
+    return table
+
+
+def _local_group(spark: SparkSession, reader, qt: pa.Table
+                 ) -> tuple[pa.Table, pa.Table | None]:
+    """(the kernel input, the tombstones) of the one scorer group of a
+    one-group request, read (IndexReader.group_tables) and joined
+    (:func:`_join_group`) on the driver."""
+    post, lex, tombs = reader.group_tables(sorted(set(qt.column("term").to_pylist())))
+    ts = pa.table({"__ts_doc_id": tombs}) if tombs.size else None
+    if post is None:
+        return pa.table({}), ts  # no postings row: the kernel scores none
+    idf = _strict_idf(spark, lex.column("df").to_numpy(), reader.state.n_docs)
+    return _join_group(qt, post, lex.column("term"), idf), ts
 
 
 def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
@@ -326,15 +407,24 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
     identical to operators.scoring.bm25_topk (test-enforced).  The ranked
     result runs its Spark jobs when this function is called: the shard
     top-ks are collected and merged on the driver, and the returned frame is
-    a local relation over the hits, so collecting it runs no job.  With
+    a local relation over the hits, so collecting it runs no job.  A ranked
+    request that is one scorer group — at most 2 queries (round(√Q) = 1) on
+    an index of one salt — runs no Spark job at all: the driver reads the
+    group with pyarrow and makes the one ``_score_group`` call the Spark
+    plan would make in its one Python task, then the same merge.  With
     ``candidates=True`` returns the unranked tie-inclusive candidate pool
     (query_id, doc_id, score, k), lazily, so callers can rank under their
     own doc-id order (used by the oracle gate, which ranks by native table
     ids).
     """
-    scored, n_qb = _scorer_input(spark, reader, qterms)
-    avgdl = reader.avgdl_value()
-    doc_maps = DocMaps(reader.index_dir)
+    qterms, qt = _request_rows(spark, qterms)
+    n_qb = _query_buckets(qt)
+    avgdl, doc_maps = reader.avgdl_value(), reader.doc_maps
+    if not candidates and n_qb == 1 and reader.state.s_shards == 1:
+        table, ts = _local_group(spark, reader, qt)
+        return _merge_shard_topks(
+            spark, _score_group(table, ts, avgdl, doc_maps), round_to)
+    scored = _scorer_input(spark, reader, qterms, qt, n_qb)
     schema = "query_id int, doc_id bigint, score double, k int"
     tomb = reader.tombstones_df()
     if tomb is None:

@@ -16,9 +16,9 @@ Dataflow per batch (SURVEY.md §3.4):
 then: exact df corrections for tombstoned docs (distributed decode-explode
 of prior segments pruned to the tombstones' salt shards, joined against the
 tombstone frame — no driver materialization), an incremental lexicon
-generation (prev gen ∪ batch postings meta ∪ batch corrections), lineage
-appended, state — with the advanced corpus totals — committed last (atomic
-rename).  Every artifact under ``batch=K`` is derived purely from the
+generation (prev gen ∪ batch postings meta ∪ batch corrections), state —
+with the advanced corpus totals — committed (atomic rename), then the lineage
+row appended.  Every artifact under ``batch=K`` is derived purely from the
 committed state plus the batch input, so a crash before the state commit
 leaves the batch invisible and an idempotent retry overwrites it.
 
@@ -99,6 +99,9 @@ POSTINGS_SCHEMA = (
     "doc_ids_vb binary, tfs_vb binary, dls_vb binary, bucket int"
 )
 _STREAMS = ("doc_ids_vb", "tfs_vb", "dls_vb")
+# the postings columns a WAND scorer group reads (IndexReader.group_tables)
+_GROUP_COLS = ["term", "salt", "n_docs", "block_max_tf", "block_min_dl",
+               "off_d", "off_t", "off_l", *_STREAMS]
 
 
 def _batch_dirs(index_dir: str, sub: str, committed: list[int]) -> list[str]:
@@ -597,39 +600,20 @@ def build_positions(docs: DataFrame, n_buckets: int,
     # same kernel shape as the BM25 postings encode (_encode_stream_factory):
     # ONE shuffle on (term_id, doc_id), local Tungsten sort, then a streaming
     # boundary-detected encode over the CONCATENATED position stream — the
-    # whole batch's deltas are varbyte'd in a single vectorized pass and
-    # sliced into per-row buffers by prefix-sum byte offsets.  Positions are
+    # whole batch's deltas are varbyte'd in a single vectorized pass, and the
+    # rows' binary column is that buffer under prefix-sum byte offsets
+    # (encode_positions, one Arrow array per batch).  Positions are
     # Σ doc_len rows — the biggest table in the index — so no per-list
     # Python encode is allowed here (BASELINE.json input_hint mandate).
     srt = (ex.repartition(p, "term_id", "doc_id")
            .sortWithinPartitions("term_id", "doc_id", "pos"))
 
     def _enc(batches):
-        from ..functions.varbyte import varbyte_encode, varbyte_nbytes
-
-        def emit(tid, did, pos, starts, end):
-            # encode groups [starts[i], starts[i+1]) within pos[:end]:
-            # gap-code each group (first value absolute) on the concatenated
-            # stream, varbyte ONCE, slice per row by byte offsets
-            seg = pos[:end].astype(np.uint64)
-            deltas = seg.copy()
-            deltas[1:] = seg[1:] - seg[:-1]
-            deltas[starts] = seg[starts]
-            buf = varbyte_encode(deltas)
-            cum = np.concatenate(([0], np.cumsum(varbyte_nbytes(deltas))))
-            ends = np.concatenate((starts[1:], [end]))
-            bo, be = cum[starts], cum[ends]
-            return pd.DataFrame({
-                "term_id": tid[starts], "doc_id": did[starts],
-                "n_pos": (ends - starts).astype(np.int32),
-                "pos_vb": [buf[bo[i]:be[i]] for i in range(starts.size)],
-            })
-
         carry = None
-        for pdf in batches:
-            tid = pdf["term_id"].to_numpy(np.int64)
-            did = pdf["doc_id"].to_numpy(np.int64)
-            pos = pdf["pos"].to_numpy(np.int64)
+        for rb in batches:
+            tid = rb.column("term_id").to_numpy()
+            did = rb.column("doc_id").to_numpy()
+            pos = rb.column("pos").to_numpy().astype(np.int64)
             if carry is not None:
                 tid = np.concatenate((carry[0], tid))
                 did = np.concatenate((carry[1], did))
@@ -642,16 +626,45 @@ def build_positions(docs: DataFrame, n_buckets: int,
             # the last group may continue into the next Arrow batch → carry
             last = starts[-1]
             if starts.size > 1:
-                yield emit(tid, did, pos, starts[:-1], last)
+                yield encode_positions(tid, did, pos, starts[:-1], last)
             carry = (tid[last:], did[last:], pos[last:])
         if carry is not None and carry[0].size:
-            yield emit(carry[0], carry[1], carry[2],
-                       np.array([0], dtype=np.int64), carry[0].size)
+            yield encode_positions(carry[0], carry[1], carry[2],
+                                   np.array([0], dtype=np.int64), carry[0].size)
 
-    return (srt.mapInPandas(
+    return (srt.mapInArrow(
         _enc, schema="term_id bigint, doc_id bigint, n_pos int, pos_vb binary")
         .withColumn("bucket",
                     F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int")))
+
+
+def encode_positions(tid: np.ndarray, did: np.ndarray, pos: np.ndarray,
+                     starts: np.ndarray, end: int):
+    """One positional-postings row per group ``[starts[i], starts[i+1])`` of
+    ``pos[:end]`` (the last group ends at ``end``), as an Arrow batch
+    (term_id, doc_id, n_pos, pos_vb).  Each group is gap-coded (first value
+    absolute) on the concatenated stream, varbyte-encoded once, and
+    ``pos_vb`` is that one buffer under the groups' byte offsets — no
+    per-row slice."""
+    import pyarrow as pa
+
+    from ..functions.varbyte import varbyte_encode, varbyte_nbytes
+
+    seg = pos[:end].astype(np.uint64)
+    deltas = seg.copy()
+    deltas[1:] = seg[1:] - seg[:-1]
+    deltas[starts] = seg[starts]
+    nbytes = varbyte_nbytes(deltas)
+    buf = varbyte_encode(deltas, nbytes)
+    cum = np.concatenate(([0], np.cumsum(nbytes)))
+    ends = np.concatenate((starts[1:], [end]))
+    offs = cum[np.append(starts, end)].astype(np.int32)
+    pos_vb = pa.Array.from_buffers(pa.binary(), starts.size,
+                                   [None, pa.py_buffer(offs), pa.py_buffer(buf)])
+    return pa.RecordBatch.from_arrays(
+        [pa.array(tid[starts], pa.int64()), pa.array(did[starts], pa.int64()),
+         pa.array((ends - starts).astype(np.int32)), pos_vb],
+        ["term_id", "doc_id", "n_pos", "pos_vb"])
 
 
 def _tombstone_rows(tombs: DataFrame, s_shards: int) -> DataFrame:
@@ -668,7 +681,7 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
                  s_shards: int | None = None, attempt: int = 1,
                  dedup: bool = True, analyzer: dict | None = None,
                  positions: bool = False) -> dict:
-    """Index one batch and commit it (data dirs → stats → lineage → state).
+    """Index one batch and commit it (data dirs → stats → state → lineage).
 
     ``analyzer`` (A8 settings surface): honored on the index's FIRST batch
     and persisted in state; later batches always use the persisted analyzer
@@ -762,12 +775,12 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
         # kept empty ⇒ tombs empty (a tombstoning row is always also kept)
         kept.unpersist()
         wall_ms = int((time.time() - t0) * 1000)
-        append_lineage(index_dir, [lineage_row(st.build_id or new_build_id(),
-                                               batch_id, "done", 0, 0, wall_ms,
-                                               attempt)])
         st.committed_batches = committed + [batch_id]
         st.last_indexed_batch = max(st.last_indexed_batch, batch_id)
         write_state(index_dir, st)
+        append_lineage(index_dir, [lineage_row(st.build_id or new_build_id(),
+                                               batch_id, "done", 0, 0, wall_ms,
+                                               attempt)])
         return {"n_docs": 0, "n_posting_rows": 0, "wall_ms": wall_ms,
                 "s_shards": st.s_shards, "batch_id": batch_id, "n_tombstones": 0}
 
@@ -837,9 +850,6 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
     kept.unpersist()
 
     wall_ms = int((time.time() - t0) * 1000)
-    append_lineage(index_dir, [lineage_row(st.build_id or new_build_id(), batch_id,
-                                           "done", n_docs, n_posting_rows, wall_ms,
-                                           attempt)])
     st.committed_batches = committed + [batch_id]
     st.last_indexed_batch = max(st.last_indexed_batch, batch_id)
     st.s_shards = s_shards
@@ -847,6 +857,11 @@ def commit_batch(spark: SparkSession, pages_batch: DataFrame, index_dir: str,
     st.n_docs += n_docs - n_tombs
     st.sum_dl += sum_dl_new - tomb_dl
     write_state(index_dir, st)
+    # lineage records committed batches only: a commit that dies before the
+    # state write leaves no row, and its retry writes the one row
+    append_lineage(index_dir, [lineage_row(st.build_id or new_build_id(), batch_id,
+                                           "done", n_docs, n_posting_rows, wall_ms,
+                                           attempt)])
     # best-effort: drop lexicon generations older than the previous one
     # (kept so an in-flight reader of gen K-1 doesn't lose its files mid-scan)
     prev = _latest_lexicon_gen(index_dir, committed)
@@ -969,8 +984,8 @@ def delete_by_query(spark: SparkSession, index_dir: str, must=None,
     Commits as a regular batch so every invariant holds downstream:
     tombstones land in ``doc_stats/batch=K/__t=t`` (one job, Observation
     counts), exact per-term df decrements via the same salt-pruned
-    decode-explode as upsert tombstones, a new lexicon generation, lineage
-    row, state flip (with the decremented corpus totals) last.  Crash-safe
+    decode-explode as upsert tombstones, a new lexicon generation, the state
+    flip (with the decremented corpus totals), then the lineage row.  Crash-safe
     for the same reason commits are: every artifact is overwrite-idempotent
     under the batch id and readers are gated on committed state.
 
@@ -1024,13 +1039,13 @@ def delete_by_query(spark: SparkSession, index_dir: str, must=None,
                            corr is not None)
 
         wall_ms = int((time.time() - t0) * 1000)
-        append_lineage(index_dir, [lineage_row(st.build_id, batch_id,
-                                               "delete", 0, 0, wall_ms, 1)])
         st.committed_batches = committed + [batch_id]
         st.last_indexed_batch = batch_id
         st.n_docs -= n_tombs
         st.sum_dl -= tomb_dl
         write_state(index_dir, st)
+        append_lineage(index_dir, [lineage_row(st.build_id, batch_id,
+                                               "delete", 0, 0, wall_ms, 1)])
         prev = _latest_lexicon_gen(index_dir, committed)
         if prev is not None:
             _cleanup_stale_gens(index_dir, prev)
@@ -1182,16 +1197,18 @@ class IndexReader:
         """(term, df, idf) — df from the max committed lexicon generation,
         idf computed here from the snapshot's corpus totals."""
         if "lexicon" not in self._memo:
-            gen = _latest_lexicon_gen(self.index_dir,
-                                      self.state.committed_batches)
-            if gen is None:
-                raise FileNotFoundError(
-                    f"no lexicon generation in {self.index_dir}")
             self._memo["lexicon"] = (
-                self.spark.read.parquet(_lexicon_gen_dir(self.index_dir, gen))
+                self.spark.read.parquet(self._lexicon_dir())
                 .select("term", "df",
                         _idf_expr(self.state.n_docs).alias("idf")))
         return self._memo["lexicon"]
+
+    def _lexicon_dir(self) -> str:
+        """The snapshot's lexicon generation: the max committed one."""
+        gen = _latest_lexicon_gen(self.index_dir, self.state.committed_batches)
+        if gen is None:
+            raise FileNotFoundError(f"no lexicon generation in {self.index_dir}")
+        return _lexicon_gen_dir(self.index_dir, gen)
 
     def corpus_stats(self) -> DataFrame:
         if "corpus_stats" not in self._memo:
@@ -1316,6 +1333,43 @@ class IndexReader:
                              self.state.committed_batches))
         df = self._memo["postings_base"]
         return df.filter(col_isin("bucket", buckets) & col_isin("term", terms))
+
+    def group_tables(self, terms: list[str]):
+        """The inputs of a scorer group that holds every doc of the index,
+        read on the driver with pyarrow, no Spark job: (the committed
+        batches' postings rows of ``terms`` with ``batch`` added, read from
+        the terms' ``bucket=J`` dirs only; the lexicon generation's ``(term,
+        df)`` rows of ``terms``; the tombstoned doc_ids, an int64 array).
+        The rows are those of :meth:`postings_for_terms` and
+        :meth:`lexicon`; what to join is the caller's."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as _ds
+
+        from ..functions.hashing import xxhash64_str
+
+        st = self.state
+        want = pc.field("term").isin(pa.array(sorted(set(terms)), pa.string()))
+        buckets = sorted({xxhash64_str(t) % st.n_buckets for t in terms})
+        parts = []
+        for b in st.committed_batches:
+            files = [f for j in buckets for f in sorted(glob.glob(
+                f"{self.index_dir}/postings/batch={b}/bucket={j}/*.parquet"))]
+            if files:
+                t = _ds.dataset(files, format="parquet").to_table(
+                    columns=_GROUP_COLS, filter=want)
+                parts.append(t.append_column(
+                    "batch", pa.array(np.full(t.num_rows, b, np.int32))))
+        post = pa.concat_tables(parts) if parts else None
+
+        lex = _ds.dataset(self._lexicon_dir(), format="parquet").to_table(
+            columns=["term", "df"], filter=want)
+        files = [f for d in _doc_stats_dirs(self.index_dir, st.committed_batches, "t")
+                 for f in glob.glob(f"{d}/salt=*/*.parquet")]
+        tombs = (_ds.dataset(files, format="parquet").to_table(columns=["doc_id"])
+                 .column("doc_id").to_numpy() if files
+                 else np.empty(0, np.int64))
+        return post, lex, tombs
 
     def decoded_postings_for_terms(self, terms: list[str]) -> DataFrame:
         """Bucket-pruned scan decoded to one row per posting:

@@ -215,6 +215,12 @@ def _crash_at_state_commit(monkeypatch):
     monkeypatch.setattr(B, "write_state", _crash)
 
 
+def _lineage(d):
+    """(batch_id, status) of every lineage row, sorted."""
+    lin = read_lineage(d)
+    return sorted(zip(lin["batch_id"].tolist(), lin["status"].tolist()))
+
+
 def _totals(d):
     st = read_state(d)
     return st.n_docs, st.sum_dl
@@ -223,9 +229,10 @@ def _totals(d):
 def test_crashed_commit_invisible_and_retry_matches_clean_build(
         spark, full_and_incr, tmp_path_factory, monkeypatch):
     """A commit that dies at the state write leaves the previous totals and
-    top-k to a fresh reader; retrying the same batch id gives exactly the
-    clean two-batch build's totals, ranked rows and lexicon — a stray
-    uncommitted df_corrections dir changes nothing."""
+    top-k to a fresh reader and no lineage row; retrying the same batch id
+    gives exactly the clean two-batch build's totals, ranked rows and
+    lexicon, and one lineage row — a stray uncommitted df_corrections dir
+    changes nothing."""
     import os
 
     import pandas as pd
@@ -247,8 +254,10 @@ def test_crashed_commit_invisible_and_retry_matches_clean_build(
     assert stats["committed_batches"] == [0]
     assert (stats["n_docs"], stats["sum_doc_len"]) == totals
     assert _topk(spark, d) == top
+    assert _lineage(d) == [(0, "done")]
 
     commit_batch(spark, b1, d, 1, tau=TAU, n_buckets=4)
+    assert _lineage(d) == [(0, "done"), (1, "done")]
     assert _totals(d) == _totals(clean)
     assert _topk(spark, d) == _topk(spark, clean)
     # stray df_corrections from a crashed/renumbered batch: must not affect df
@@ -265,7 +274,8 @@ def test_crashed_commit_invisible_and_retry_matches_clean_build(
 def test_crashed_delete_invisible_and_retry_matches_clean_delete(
         spark, full_and_incr, tmp_path_factory, monkeypatch):
     """delete_by_query dying at the state write leaves the previous totals
-    and top-k; the retry (same batch id) equals an uninterrupted delete."""
+    and top-k and no lineage row; the retry (same batch id) equals an
+    uninterrupted delete and writes one lineage row."""
     import os
 
     from elasticsearch_data_import_handler_spark.plans.build import delete_by_query
@@ -285,8 +295,11 @@ def test_crashed_delete_invisible_and_retry_matches_clean_delete(
     monkeypatch.undo()
     assert read_state(d).committed_batches == [0, 1]
     assert _totals(d) == totals and _topk(spark, d) == top
+    before = _lineage(d)
+    assert (want["batch_id"], "delete") not in before
 
     got = delete_by_query(spark, d, must=["merge"])
+    assert _lineage(d) == sorted(before + [(want["batch_id"], "delete")])
     assert (got["batch_id"], got["n_tombstones"]) == \
         (want["batch_id"], want["n_tombstones"])
     assert _totals(d) == _totals(clean)

@@ -135,3 +135,42 @@ def test_rebuild_new_session_and_compaction_never_serve_stale_maps(spark, tmp_pa
     assert _hits(bm25_topk_wand(fresh, reader).collect()) == want
     taat = {r["doc_id"] for r in reader.decoded_postings_for_terms(["spark"]).collect()}
     assert taat and taat <= {r["doc_id"] for r in reader.doc_stats().collect()}
+
+
+def _positions_sliced(tid, did, pos, starts, end):
+    """The positions encoder before it built one Arrow array per batch: the
+    same gap-coded varbyte stream, sliced into one bytes object per row."""
+    from elasticsearch_data_import_handler_spark.functions.varbyte import (
+        varbyte_encode, varbyte_nbytes)
+
+    seg = pos[:end].astype(np.uint64)
+    deltas = seg.copy()
+    deltas[1:] = seg[1:] - seg[:-1]
+    deltas[starts] = seg[starts]
+    buf = varbyte_encode(deltas)
+    cum = np.concatenate(([0], np.cumsum(varbyte_nbytes(deltas))))
+    ends = np.concatenate((starts[1:], [end]))
+    bo, be = cum[starts], cum[ends]
+    return {"term_id": tid[starts].tolist(), "doc_id": did[starts].tolist(),
+            "n_pos": (ends - starts).tolist(),
+            "pos_vb": [buf[bo[i]:be[i]] for i in range(starts.size)]}
+
+
+def test_positions_encode_is_byte_identical_to_sliced_encoder():
+    """encode_positions (one binary Arrow array from byte offsets) writes the
+    bytes the per-row slicing encoder wrote: groups of one and many
+    positions, gaps of one to three varbyte bytes, a trailing row left out
+    by ``end`` (the carried group)."""
+    from elasticsearch_data_import_handler_spark.plans.build import encode_positions
+
+    rng = np.random.default_rng(3)
+    sizes = rng.integers(1, 40, 500)
+    n = int(sizes.sum())
+    starts = np.concatenate(([0], np.cumsum(sizes)[:-1]))
+    tid = np.repeat(rng.integers(-2**62, 2**62, sizes.size), sizes)
+    did = np.repeat(rng.integers(-2**62, 2**62, sizes.size), sizes)
+    gaps = rng.choice([1, 5, 200, 40_000], n, p=[0.6, 0.3, 0.08, 0.02])
+    pos = np.concatenate([np.cumsum(g) - g[0] for g in np.split(gaps, starts[1:])])
+    for st, end in ((starts, n), (starts[:-1], int(starts[-1])), (starts[:1], n)):
+        got = encode_positions(tid, did, pos, st, end).to_pydict()
+        assert got == _positions_sliced(tid, did, pos, st, end)

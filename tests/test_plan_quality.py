@@ -166,12 +166,14 @@ def _jobs_in_group(spark, group, action):
 
 
 def test_wand_single_query_job_budget(spark, tmp_path):
-    """A warm single-query WAND request on a clean index runs at most 4
-    Spark jobs: the query terms are a driver-local LocalRelation (collecting
-    them runs none), the scorer groups take the one hash shuffle, and the
-    shard top-ks are merged on the driver — the ranked result is a local
-    relation, with no ranking stage, range-partition sample or second
-    shuffle."""
+    """A warm single-query WAND request on a clean index of two salts runs
+    at most 4 Spark jobs: the query terms are a driver-local LocalRelation
+    (collecting them runs none), the scorer groups take the one hash
+    shuffle, and the shard top-ks are merged on the driver — the ranked
+    result is a local relation, with no ranking stage, range-partition
+    sample or second shuffle.  The index has two salts (τ = 100), so the
+    request is two scorer groups and this pins the Spark plan; a one-group
+    request runs no job (test_wand_one_group_single_runs_no_spark_job)."""
     from elasticsearch_data_import_handler_spark.operators.scoring import (
         query_terms_df)
     from elasticsearch_data_import_handler_spark.operators.wand import (
@@ -184,6 +186,7 @@ def test_wand_single_query_job_budget(spark, tmp_path):
     build_index(spark, synth_pages(spark, 150, seed=42), d, tau=100,
                 n_buckets=4)
     reader = IndexReader(spark, d)
+    assert reader.state.s_shards == 2
     rows = [(0, "spark", 10), (0, "sql", 10)]
     n, got = _jobs_in_group(spark, "wand-qterms",
                             query_terms_df(spark, rows).collect)
@@ -772,12 +775,14 @@ def test_wand_request_round_trip_budget(spark, taat_reader):
     round trips, whatever the number of terms: a 40-query batch over 40
     distinct terms costs at most a few more than a two-term single query,
     and the single query at most 250.  Built with ``Column.isin`` the IN
-    lists cost about four round trips per term."""
+    lists cost about four round trips per term.  The index has two salts
+    (τ = 100), so both requests take the Spark plan."""
     from elasticsearch_data_import_handler_spark.operators.scoring import (
         query_terms_df)
     from elasticsearch_data_import_handler_spark.operators.wand import (
         bm25_topk_wand)
 
+    assert taat_reader.state.s_shards == 2
     terms = sorted(r.term for r in
                    taat_reader.lexicon().select("term").limit(40).collect())
     single = [(0, terms[0], 10), (0, terms[1], 10)]
@@ -794,3 +799,38 @@ def test_wand_request_round_trip_budget(spark, taat_reader):
     assert n_single <= 250, n_single
     assert n_batch <= n_single + 10, (n_single, n_batch)
     assert {r.query_id for r in df.collect()} <= set(range(40))
+
+
+def test_wand_one_group_single_runs_no_spark_job(spark, tmp_path):
+    """A warm single-query request on an index of one salt is one scorer
+    group, scored on the driver: it runs 0 Spark jobs, its ranked frame is
+    a LocalTableScan, and building it costs a pinned number of driver→JVM
+    round trips (two query terms: the query frame and its collect, one
+    StrictMath.log per term, the merge's local relation)."""
+    from elasticsearch_data_import_handler_spark.operators.scoring import (
+        query_terms_df)
+    from elasticsearch_data_import_handler_spark.operators.wand import (
+        bm25_topk_wand)
+    from elasticsearch_data_import_handler_spark.plans.build import (
+        IndexReader, build_index)
+    from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
+
+    d = str(tmp_path / "idx")
+    build_index(spark, synth_pages(spark, 150, seed=42), d, n_buckets=4)
+    reader = IndexReader(spark, d)
+    assert reader.state.s_shards == 1
+    rows = [(0, "spark", 10), (0, "sql", 10)]
+
+    def build():
+        return bm25_topk_wand(spark, reader, qterms=query_terms_df(spark, rows))
+
+    def request():
+        df = build()
+        return df, df.collect()
+
+    request()  # warm
+    n, (df, hits) = _jobs_in_group(spark, "wand-one-group", request)
+    assert hits and n == 0, n
+    assert _plan(df).startswith("LocalTableScan"), _plan(df)
+    n_rt, _ = _round_trips(build)
+    assert n_rt <= 72, n_rt  # measured: 72
