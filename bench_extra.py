@@ -35,12 +35,20 @@ Subcommands:
                         7), median ms over --reps (default 10) of its
                         singles, for both paths of a one-group request: the
                         driver path bm25_topk_wand takes (query frame,
-                        qterms collect, pyarrow read of postings, lexicon df
-                        and tombstones, StrictMath idf, join, kernel,
-                        merge, final collect) and the Spark plan
+                        qterms collect, pyarrow read of postings and lexicon
+                        df, the tombstone load, StrictMath idf, join,
+                        kernel, merge, final collect) and the Spark plan
                         (candidates=True, toArrow, the same merge, final
                         collect), with each path's Spark jobs and whether
                         their ranked rows are identical.
+  upserted              a WAND request on an index with tombstones against
+                        the same index before them: builds 2,000 seeded
+                        pages (tau 200, 8 buckets, so 16 salts and the Spark
+                        plan), opens a reader, upserts 600 re-crawled pages
+                        (600 tombstones) and opens a second reader; prints
+                        the Spark jobs, stages and median ms of a warm
+                        single and a warm 300-query batch on each reader,
+                        over --reps (default 8) alternating reps.
   task_overhead         the fixed cost of one Python task, under the stock
                         pyspark.daemon and under the engine's preloading
                         daemon (daemon.py).  Runs --reps (default 30)
@@ -213,6 +221,7 @@ def _seed_index(spark, seed):
 def cmd_wand(seed=7, reps=5, cpus=4):
     from statistics import median
 
+    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
@@ -243,7 +252,7 @@ def cmd_wand(seed=7, reps=5, cpus=4):
     qb, salt = table["__qbucket"].to_numpy(), table["salt"].to_numpy()
     groups = [table.filter(pa.array((qb == b) & (salt == s)))
               for b, s in sorted(set(zip(qb.tolist(), salt.tolist())))]
-    doc_maps = DocMaps(idx)
+    doc_maps, none_deleted = DocMaps(idx), np.empty(0, np.int64)
 
     decoded = 0
     run = wand.decode_posting_runs
@@ -257,14 +266,14 @@ def cmd_wand(seed=7, reps=5, cpus=4):
     wand.decode_posting_runs = counting
     try:
         for g in groups:
-            wand._score_group(g, None, avgdl, doc_maps)
+            wand._score_group(g, none_deleted, avgdl, doc_maps)
     finally:
         wand.decode_posting_runs = run
     secs = []
     for _ in range(reps):
         t0 = time.perf_counter()
         for g in groups:
-            wand._score_group(g, None, avgdl, doc_maps)
+            wand._score_group(g, none_deleted, avgdl, doc_maps)
         secs.append(time.perf_counter() - t0)
     s = median(secs)
     print(json.dumps({
@@ -278,8 +287,6 @@ def cmd_wand(seed=7, reps=5, cpus=4):
 
 def cmd_single(seed=7, reps=10, cpus=4):
     from statistics import median
-
-    import pyarrow as pa
 
     from elasticsearch_data_import_handler_spark.operators import wand
     from elasticsearch_data_import_handler_spark.operators.scoring import (
@@ -311,14 +318,14 @@ def cmd_single(seed=7, reps=10, cpus=4):
             qterms = timed(ph, "query_terms_df", query_terms_df, spark, rows)
             _, qt = timed(ph, "qterms_collect", wand._request_rows, spark, qterms)
             terms = sorted(set(qt.column("term").to_pylist()))
-            post, lex, tombs = timed(ph, "read", reader.group_tables, terms)
+            post, lex = timed(ph, "read", reader.group_tables, terms)
+            deleted = timed(ph, "tombstones", reader.doc_maps.deleted, 0)
             idf = timed(ph, "idf", wand._strict_idf, spark,
                         lex.column("df").to_numpy(), reader.state.n_docs)
             table = (timed(ph, "join", wand._join_group, qt, post,
                            lex.column("term"), idf)
                      if post is not None else None)
-            ts = pa.table({"__ts_doc_id": tombs}) if tombs.size else None
-            top = (timed(ph, "kernel", wand._score_group, table, ts, avgdl,
+            top = (timed(ph, "kernel", wand._score_group, table, deleted, avgdl,
                          reader.doc_maps)
                    if table is not None else wand._TOPK.empty_table())
             df = timed(ph, "merge", wand._merge_shard_topks, spark, top, None)
@@ -362,6 +369,75 @@ def cmd_single(seed=7, reps=10, cpus=4):
         "seed": seed, "reps": reps, "identical_rows": identical, "jobs": jobs,
         **{f"{p}_ms": {k: round(median(r[k] for r in runs), 2) for k in runs[0]}
            for p, runs in res.items()}}))
+
+
+def cmd_upserted(reps=8, cpus=4):
+    import shutil
+    from statistics import median
+
+    import numpy as np
+    import pandas as pd
+
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    from tracing import Tracer
+
+    from elasticsearch_data_import_handler_spark.operators.scoring import (
+        query_terms_df)
+    from elasticsearch_data_import_handler_spark.operators.wand import (
+        bm25_topk_wand)
+    from elasticsearch_data_import_handler_spark.plans.build import (
+        IndexReader, build_index, commit_batch)
+    from elasticsearch_data_import_handler_spark.queryset import query_terms
+    from elasticsearch_data_import_handler_spark.session import get_spark
+    from elasticsearch_data_import_handler_spark.sources.corpus import (
+        PAGES_SCHEMA, build_vocab, synth_pages_pdf)
+
+    spark = get_spark("bench-extra-upserted", cpus=cpus)
+    tracer = Tracer(spark, enabled=True)
+    idx = os.path.join(REPO, ".bench", "upserted", "idx")
+    shutil.rmtree(idx, ignore_errors=True)
+    try:
+        base = synth_pages_pdf(2000, seed=7)
+        build_index(spark, spark.createDataFrame(base, schema=PAGES_SCHEMA), idx,
+                    tau=200, n_buckets=8)
+        before = IndexReader(spark, idx)
+        # re-crawl: 600 of the urls, a day later, with another page's text
+        recrawl = synth_pages_pdf(600, seed=8).iloc[:600].copy()
+        recrawl["url"] = base["url"].iloc[:600].to_numpy()
+        recrawl["warc_ts"] = base["warc_ts"].iloc[:600].to_numpy() + pd.Timedelta(days=1)
+        upsert = commit_batch(spark, spark.createDataFrame(recrawl, schema=PAGES_SCHEMA),
+                              idx, 1, tau=200, n_buckets=8)
+        after = IndexReader(spark, idx)
+        rng = np.random.default_rng(7)
+        words = build_vocab(5000)[5:505]
+        batch = [(q, t, 10) for q in range(300)
+                 for t in query_terms(" ".join(rng.choice(words, 3)))]
+        single = [(0, t, 10) for t in query_terms("spark sql join")]
+        readers = {"before": before, "after": after}
+        kinds = {"single": single, "batch": batch}
+
+        def request(reader, rows):
+            return bm25_topk_wand(spark, reader, qterms=query_terms_df(spark, rows)).collect()
+
+        for reader in readers.values():
+            for rows in kinds.values():
+                request(reader, rows)  # warm: lexicon, doc maps, tombstones
+        spans = {(r, k): [] for r in readers for k in kinds}
+        for i in range(reps):
+            for r in (readers if i % 2 == 0 else reversed(list(readers))):
+                for k, rows in kinds.items():
+                    with tracer.span(f"{r}-{k}") as sp:
+                        request(readers[r], rows)
+                    spans[(r, k)].append(sp)
+    finally:
+        spark.stop()
+    print(json.dumps({
+        "reps": reps, "s_shards": after.state.s_shards,
+        "n_tombstones": upsert["n_tombstones"],
+        **{f"{r}_{k}": {"jobs": median(sp.jobs for sp in ss),
+                        "stages": median(sp.stages for sp in ss),
+                        "ms_p50": round(1000 * median(sp.wall_s for sp in ss), 1)}
+           for (r, k), ss in spans.items()}}))
 
 
 def cmd_format(seed=7, reps=5, cpus=4):
@@ -516,7 +592,8 @@ if __name__ == "__main__":
 
     ap = argparse.ArgumentParser()
     ap.add_argument("cmd", choices=["suite", "plans", "build", "wand",
-                                    "format", "single", "task_overhead"])
+                                    "format", "single", "upserted",
+                                    "task_overhead"])
     ap.add_argument("names", nargs="*")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--reps", type=int, default=None)
@@ -536,6 +613,8 @@ if __name__ == "__main__":
     elif a.cmd == "single":
         cmd_single(seed=a.seed, reps=a.reps or 10,
                    cpus=min(a.cpus or 8, os.cpu_count() or 1))
+    elif a.cmd == "upserted":
+        cmd_upserted(reps=a.reps or 8, cpus=min(a.cpus or 4, os.cpu_count() or 1))
     elif a.cmd == "format":
         cmd_format(seed=a.seed, reps=a.reps or 5,
                    cpus=min(a.cpus or 8, os.cpu_count() or 1))

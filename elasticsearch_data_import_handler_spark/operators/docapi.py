@@ -107,8 +107,9 @@ def msearch(spark: SparkSession, reader, queries: dict[str, list[str]],
             k: int = 10, round_to: int | None = 4) -> DataFrame:
     """ES ``_msearch``: a batch of independent term queries answered in ONE
     pass — (query_key, rank, doc_id, score).  Delegates to the block-max
-    WAND batch scorer (query-bucket balanced, single cogrouped shuffle),
-    which is exactly what makes a search backend's msearch cheaper than N
+    WAND batch scorer (query-bucket balanced, one hash shuffle, each
+    scorer group reading its salt's tombstones beside the doc maps), which
+    is exactly what makes a search backend's msearch cheaper than N
     round-trips."""
     from .wand import bm25_topk_wand
 

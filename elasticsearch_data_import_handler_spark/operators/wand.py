@@ -7,8 +7,8 @@ Query plan (SURVEY.md §3.4):
     → broadcast-join the query terms (query_id, k)
     → project to the kernel's columns, add __qbucket = pmod(xxhash64(query_id),
       round(√Q))
-    → groupBy(__qbucket, salt) [cogrouped with the tombstone frame keyed the
-      same way] .applyInArrow(_score_group)      ← the only hash shuffle
+    → groupBy(__qbucket, salt).applyInArrow(_score_group, with the salt's
+      deleted doc_ids)                           ← the only hash shuffle
     → toArrow() to the driver: the shard top-ks (≤ S·k rows per query plus
       ties, S·k·Q for a batch of Q queries — the rows one single-partition
       ranking task would hold), each carrying its k
@@ -24,8 +24,8 @@ driver runs that group itself and no Spark job runs:
 
   qterms collect (the same bounded collect)
     → IndexReader.group_tables: pyarrow reads of the terms' postings/
-      batch=K/bucket=J files, the lexicon generation's df and the
-      tombstoned doc_ids
+      batch=K/bucket=J files and the lexicon generation's df; the deleted
+      doc_ids of salt 0 from the same loader the Spark path uses
     → idf through java.lang.StrictMath.log, bit-identical to the lexicon's
     → _join_group: the plan's two inner joins, in numpy
     → _score_group (the same call the one Python task would make)
@@ -41,14 +41,13 @@ group holds about √Q queries' rows, so there are √Q·S scorer calls per batc
 by √Q × |query terms| × τ postings — constant in corpus size.  A single query
 is one bucket.
 
-Tombstones reach the scorer *distributed*: the tombstone frame is keyed by
-(query-bucket, salt) — its salt is the same doc-hash shard, crossed with the
-√Q bucket ids — and cogrouped with the postings groups, so each scorer call
-receives exactly its shard's deleted ids as an Arrow column.  Nothing is
-collected on the driver (the round-1 design shipped a driver-side set in the
-UDF closure; at web scale that set is unbounded).  Replicating each
-tombstone per *query* instead of per bucket would shuffle |tombstones| ×
-|queries| rows.
+Tombstones are read where the doc maps are: in the process that scores.
+They are stored by the same doc-hash salt (``doc_stats/batch=K/__t=t/
+salt=S``), so a group of salt S reads ``DocMaps.deleted(S)`` — its shard's
+deleted doc_ids, from the snapshot's tombstone batches only, through the
+file-stamped worker cache of plans/docmap.py.  Nothing crosses a shuffle
+and nothing is collected on the driver; the UDF closure carries the index
+path and the tombstone batch ids, never the ids themselves.
 
 The scorer is the vectorized-exact block-max variant (after Ding & Suel's
 BMW, SIGIR'11); :func:`_score_group` states the bound and why it is safe.
@@ -121,12 +120,12 @@ def _copies(table: pa.Table) -> np.ndarray:
     return (np.bincount(qt) / np.bincount(distinct))[qt]
 
 
-def _score_group(table: pa.Table, tombstones: pa.Table | None,
+def _score_group(table: pa.Table, deleted: np.ndarray,
                  avgdl: float, doc_maps) -> pa.Table:
     """Exact block-max WAND for every query of one (query-bucket, salt)
     group, in one numpy pass → (query_id, doc_id, score, k) tie-inclusive
     shard top-ks.  ``table`` rows are (query, term, segment) posting rows;
-    ``tombstones`` holds the shard's deleted ids (``__ts_doc_id``) or None;
+    ``deleted`` holds the shard's deleted doc_ids (int64, empty when none);
     ``doc_maps[(batch, salt)]`` is a segment's ord → doc_id array
     (plans/docmap.py), through which every decoded ordinal becomes a doc_id.
 
@@ -219,8 +218,6 @@ def _score_group(table: pa.Table, tombstones: pa.Table | None,
     streams = [ranges(vb, off_col) for vb, off_col in _STREAMS]
     lens = np.full(blk_row.size, BLOCK_SIZE, dtype=np.int64)
     lens[last] = n_docs - BLOCK_SIZE * (nblk - 1)
-    ts = (tombstones.column("__ts_doc_id").to_numpy()
-          if tombstones is not None and tombstones.num_rows else None)
 
     def score_blocks(sel):
         """(query, doc, partial) of every live posting of blocks ``sel``."""
@@ -233,9 +230,9 @@ def _score_group(table: pa.Table, tombstones: pa.Table | None,
         return q_of[rows], d, p
 
     def live(q, d, s):
-        if ts is None:
+        if not deleted.size:
             return q, d, s
-        keep = ~np.isin(d, ts)
+        keep = ~np.isin(d, deleted)
         return q[keep], d[keep], s[keep]
 
     def kth(q):
@@ -385,17 +382,15 @@ def _join_group(qt: pa.Table, post: pa.Table, lex_terms: pa.ChunkedArray,
     return table
 
 
-def _local_group(spark: SparkSession, reader, qt: pa.Table
-                 ) -> tuple[pa.Table, pa.Table | None]:
-    """(the kernel input, the tombstones) of the one scorer group of a
-    one-group request, read (IndexReader.group_tables) and joined
-    (:func:`_join_group`) on the driver."""
-    post, lex, tombs = reader.group_tables(sorted(set(qt.column("term").to_pylist())))
-    ts = pa.table({"__ts_doc_id": tombs}) if tombs.size else None
+def _local_group(spark: SparkSession, reader, qt: pa.Table) -> pa.Table:
+    """The kernel input of the one scorer group of a one-group request,
+    read (IndexReader.group_tables) and joined (:func:`_join_group`) on the
+    driver."""
+    post, lex = reader.group_tables(sorted(set(qt.column("term").to_pylist())))
     if post is None:
-        return pa.table({}), ts  # no postings row: the kernel scores none
+        return pa.table({})  # no postings row: the kernel scores none
     idf = _strict_idf(spark, lex.column("df").to_numpy(), reader.state.n_docs)
-    return _join_group(qt, post, lex.column("term"), idf), ts
+    return _join_group(qt, post, lex.column("term"), idf)
 
 
 def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
@@ -421,33 +416,14 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
     n_qb = _query_buckets(qt)
     avgdl, doc_maps = reader.avgdl_value(), reader.doc_maps
     if not candidates and n_qb == 1 and reader.state.s_shards == 1:
-        table, ts = _local_group(spark, reader, qt)
-        return _merge_shard_topks(
-            spark, _score_group(table, ts, avgdl, doc_maps), round_to)
-    scored = _scorer_input(spark, reader, qterms, qt, n_qb)
-    schema = "query_id int, doc_id bigint, score double, k int"
-    tomb = reader.tombstones_df()
-    if tomb is None:
-        shard_topk = scored.groupBy("__qbucket", "salt").applyInArrow(
-            lambda t: _score_group(t, None, avgdl, doc_maps), schema=schema)
-    else:
-        # each tombstone travels once per query bucket (√Q times), keyed by
-        # its doc-hash salt.  Fresh aliases guard against the Spark 4.1
-        # shared-lineage cogroup pruning bug (see operators/asof.py).
-        buckets = spark.range(n_qb).selectExpr("cast(id as int) AS __ts_qbucket")
-        tomb_keyed = (
-            tomb.selectExpr(
-                "doc_id AS __ts_doc_id",
-                f"cast(pmod(xxhash64(doc_id), {reader.state.s_shards}) as int)"
-                " AS __ts_salt")
-            .crossJoin(F.broadcast(buckets))
-        )
-        shard_topk = (
-            scored.groupBy("__qbucket", "salt")
-            .cogroup(tomb_keyed.groupBy("__ts_qbucket", "__ts_salt"))
-            .applyInArrow(lambda t, ts: _score_group(t, ts, avgdl, doc_maps),
-                          schema=schema)
-        )
+        table = _local_group(spark, reader, qt)
+        return _merge_shard_topks(spark, _score_group(
+            table, doc_maps.deleted(0), avgdl, doc_maps), round_to)
+    shard_topk = _scorer_input(spark, reader, qterms, qt, n_qb).groupBy(
+        "__qbucket", "salt").applyInArrow(
+        lambda key, t: _score_group(t, doc_maps.deleted(key[1].as_py()), avgdl,
+                                    doc_maps),
+        schema="query_id int, doc_id bigint, score double, k int")
     if candidates:
         return shard_topk
     return _merge_shard_topks(spark, shard_topk.toArrow(), round_to)

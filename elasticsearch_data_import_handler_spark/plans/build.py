@@ -978,7 +978,9 @@ def delete_by_query(spark: SparkSession, index_dir: str, must=None,
     bool query — the LSM delete this index format is built around (build
     docstring: "an upsert is append-new + tombstone-old, never in-place
     posting edits").  No posting is rewritten; queries exclude the victims
-    immediately via the cogrouped tombstone path, :func:`compact_index`
+    as soon as the batch commits — TAAT scorers through
+    ``IndexReader.live``, the WAND scorer through the per-salt tombstones it
+    reads beside the doc maps (plans/docmap.py) — and :func:`compact_index`
     reclaims the bytes later, exactly like ES's delete + forcemerge.
 
     Commits as a regular batch so every invariant holds downstream:
@@ -1183,8 +1185,17 @@ class IndexReader:
         if st is None:
             raise FileNotFoundError(f"no committed index at {index_dir}")
         self.state = st
-        self.doc_maps = DocMaps(index_dir)
         self._memo: dict = {}
+
+    @property
+    def doc_maps(self) -> DocMaps:
+        """The snapshot's segment doc maps and tombstones (plans/docmap.py):
+        the committed batches that hold tombstones are listed once."""
+        if "doc_maps" not in self._memo:
+            self._memo["doc_maps"] = DocMaps(self.index_dir, [
+                b for b in self.state.committed_batches
+                if _doc_stats_dirs(self.index_dir, [b], "t")])
+        return self._memo["doc_maps"]
 
     def avgdl_value(self) -> float:
         """The corpus avgdl as a driver-side float — exactly the value
@@ -1339,9 +1350,9 @@ class IndexReader:
         read on the driver with pyarrow, no Spark job: (the committed
         batches' postings rows of ``terms`` with ``batch`` added, read from
         the terms' ``bucket=J`` dirs only; the lexicon generation's ``(term,
-        df)`` rows of ``terms``; the tombstoned doc_ids, an int64 array).
-        The rows are those of :meth:`postings_for_terms` and
-        :meth:`lexicon`; what to join is the caller's."""
+        df)`` rows of ``terms``).  The rows are those of
+        :meth:`postings_for_terms` and :meth:`lexicon`; what to join is the
+        caller's, and the deleted doc_ids are ``doc_maps.deleted``'s."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as _ds
@@ -1364,12 +1375,7 @@ class IndexReader:
 
         lex = _ds.dataset(self._lexicon_dir(), format="parquet").to_table(
             columns=["term", "df"], filter=want)
-        files = [f for d in _doc_stats_dirs(self.index_dir, st.committed_batches, "t")
-                 for f in glob.glob(f"{d}/salt=*/*.parquet")]
-        tombs = (_ds.dataset(files, format="parquet").to_table(columns=["doc_id"])
-                 .column("doc_id").to_numpy() if files
-                 else np.empty(0, np.int64))
-        return post, lex, tombs
+        return post, lex
 
     def decoded_postings_for_terms(self, terms: list[str]) -> DataFrame:
         """Bucket-pruned scan decoded to one row per posting:

@@ -1,19 +1,23 @@
-"""Segment doc maps: the ``ord → doc_id`` array of one ``(batch, salt)``
-segment of an index.
+"""Segment doc maps and tombstones: the ``ord → doc_id`` array of one
+``(batch, salt)`` segment of an index, and the doc_ids a batch tombstoned
+in one salt.
 
 Postings name a document by its dense ordinal inside its ``(batch, salt)``
 segment (functions/varbyte.py).  The segment's doc rows, in
 ``doc_stats/batch=K/__t=d/salt=S/``, carry ``ord`` beside ``doc_id``; ord is
 the doc_id's rank in the segment, so the map is the segment's doc_ids in
-ascending order and ``np.searchsorted`` inverts it.
+ascending order and ``np.searchsorted`` inverts it.  The doc_ids a batch
+deleted lie beside them, in ``doc_stats/batch=K/__t=t/salt=S/``, sharded by
+the same doc-hash salt.
 
 Both decode sites — the posting explode of plans/build.py (TAAT scans, df
 corrections, compaction) and the WAND kernel — read maps through
-:class:`DocMaps`.  A Python worker caches the maps it has read, keyed by the
-directory and the ``(path, st_mtime_ns, st_size)`` of each of its files —
-the rule zipcache.py applies to archives — so a rewritten segment is read
-anew, never served stale.  The cache holds at most ``_CACHE_BYTES`` of maps
-and drops the least recently used first.
+:class:`DocMaps`, and the WAND kernel reads its group's deleted doc_ids
+there too, in the process that scores.  A Python worker caches the arrays
+it has read, keyed by the directory and the ``(path, st_mtime_ns,
+st_size)`` of each of its files — the rule zipcache.py applies to archives
+— so a rewritten segment is read anew, never served stale.  The cache holds
+at most ``_CACHE_BYTES`` of arrays and drops the least recently used first.
 """
 
 from __future__ import annotations
@@ -28,8 +32,10 @@ _cache: OrderedDict = OrderedDict()
 _cached = {"bytes": 0}
 
 
-def segment_dir(index_dir: str, batch: int, salt: int) -> str:
-    return f"{index_dir}/doc_stats/batch={batch}/__t=d/salt={salt}"
+def segment_dir(index_dir: str, batch: int, salt: int, kind: str = "d") -> str:
+    """The dir of a ``(batch, salt)`` segment's ``kind`` rows: ``d`` doc
+    rows, ``t`` tombstones."""
+    return f"{index_dir}/doc_stats/batch={batch}/__t={kind}/salt={salt}"
 
 
 def _files_key(d: str) -> tuple:
@@ -46,7 +52,7 @@ def _files_key(d: str) -> tuple:
     return tuple(out)
 
 
-def _read(key: tuple) -> np.ndarray:
+def _read_map(key: tuple) -> np.ndarray:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -60,20 +66,27 @@ def _read(key: tuple) -> np.ndarray:
     if ords.size and (ords.min() != 0 or ords.max() != ords.size - 1):
         raise ValueError(f"segment {d}: ordinals are not 0..{ords.size - 1}")
     m[ords] = t.column("doc_id").to_numpy()
-    m.setflags(write=False)
     return m
 
 
-def load_doc_map(d: str) -> np.ndarray:
-    """The ``ord → doc_id`` array of the segment whose doc rows are in
-    ``d``, read-only, from this process's cache when its files are
-    unchanged."""
+def _read_deleted(key: tuple) -> np.ndarray:
+    import pyarrow.parquet as pq
+
+    return np.concatenate([np.empty(0, np.int64)] + [
+        pq.ParquetFile(p).read(columns=["doc_id"]).column("doc_id").to_numpy()
+        for p, _, _ in key[1:]])
+
+
+def _load(d: str, read) -> np.ndarray:
+    """``read``'s array of the files in ``d``, read-only, from this
+    process's cache when those files are unchanged."""
     key = _files_key(d)
     m = _cache.get(key)
     if m is not None:
         _cache.move_to_end(key)
         return m
-    m = _read(key)
+    m = read(key)
+    m.setflags(write=False)
     _cache[key] = m
     _cached["bytes"] += m.nbytes
     while _cached["bytes"] > _CACHE_BYTES and len(_cache) > 1:
@@ -83,16 +96,28 @@ def load_doc_map(d: str) -> np.ndarray:
 
 
 class DocMaps:
-    """``maps[(batch, salt)]`` → that segment's ``ord → doc_id`` array.
-    Holds only the index path, so it pickles into UDF closures; the maps
-    themselves come from the worker-side cache."""
+    """``maps[(batch, salt)]`` → that segment's ``ord → doc_id`` array;
+    ``maps.deleted(salt)`` → the doc_ids that the batches ``tombstoned``
+    deleted in shard ``salt``.  ``tombstoned`` is a reader snapshot's list
+    of committed batches that hold tombstones, so a later commit never
+    shows through it.  Holds only the index path and those batch ids, so it
+    pickles into UDF closures; the arrays come from the worker-side
+    cache."""
 
-    def __init__(self, index_dir: str):
+    def __init__(self, index_dir: str, tombstoned: tuple[int, ...] = ()):
         self.index_dir = index_dir
+        self.tombstoned = tuple(tombstoned)
 
     def __getitem__(self, key: tuple[int, int]) -> np.ndarray:
         batch, salt = key
-        return load_doc_map(segment_dir(self.index_dir, batch, salt))
+        return _load(segment_dir(self.index_dir, batch, salt), _read_map)
+
+    def deleted(self, salt: int) -> np.ndarray:
+        """The doc_ids tombstoned in shard ``salt``, int64, empty when none
+        is (a batch may tombstone none in a salt)."""
+        return np.concatenate([np.empty(0, np.int64)] + [
+            _load(segment_dir(self.index_dir, b, salt, "t"), _read_deleted)
+            for b in self.tombstoned])
 
 
 def segment_maps(doc_maps, batch: np.ndarray,

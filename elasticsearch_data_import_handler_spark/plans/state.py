@@ -8,9 +8,9 @@ external service:
   re-imported next run.  Here: ``_state/state.json`` + a ``lineage`` parquet
   table, committed only after the batch's data files are fully written.
 - A7 statement lock — the reference aborted if another run held the
-  per-statement lock.  Here: an O_EXCL lock file under the index dir
-  (single-writer per index; a real deployment swaps this for an Iceberg
-  conditional commit — same contract).
+  per-statement lock.  Here: an exclusive ``flock`` on a file under the
+  index dir (single-writer per index; a real deployment swaps this for an
+  Iceberg conditional commit — same contract).
 - A5 {lastRun} macro — the reference substituted the last successful
   timestamp into the SQL.  Here: ``last_indexed_batch`` in state.json is the
   snapshot watermark; the builder indexes batches strictly after it.
@@ -26,6 +26,7 @@ and the batches they count advance in one atomic write.
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import time
@@ -95,49 +96,32 @@ def write_state(index_dir: str, state: IndexState) -> None:
 
 
 class BuildLock:
-    """A7: single-writer lock per index dir.  O_EXCL create; stale locks
-    (dead pid) are reclaimed."""
+    """A7: single-writer lock per index dir: an exclusive, non-blocking
+    ``flock`` on ``_state/build.lock``.  The kernel releases it when the
+    holder's descriptor closes, on exit or crash alike, so a dead holder
+    leaves nothing to reclaim; the file itself stays.  ``flock``, not
+    ``lockf``: two opens of the file conflict even within one process."""
 
     def __init__(self, index_dir: str):
         self.path = os.path.join(index_dir, "_state", "build.lock")
-        self.acquired = False
+        self._fd: int | None = None
 
     def acquire(self) -> bool:
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
+        fd = os.open(self.path, os.O_CREAT | os.O_WRONLY)
         try:
-            fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            try:
-                with open(self.path) as f:
-                    pid = int(f.read().strip() or "0")
-                os.kill(pid, 0)  # raises if the holder is dead
-                return False
-            except FileNotFoundError:
-                return self.acquire()  # holder released between open attempts
-            except (ProcessLookupError, ValueError):
-                # Stale lock (dead pid).  Reclaim ATOMICALLY: rename the stale
-                # file to a unique name first — os.rename fails for every
-                # contender but one, so exactly one process removes it and
-                # nobody can delete a NEW holder's freshly created lock.
-                claim = f"{self.path}.reclaim.{os.getpid()}"
-                try:
-                    os.rename(self.path, claim)
-                except (FileNotFoundError, OSError):
-                    time.sleep(0.01)  # another contender won the reclaim race
-                else:
-                    os.remove(claim)
-                return self.acquire()
-            except PermissionError:
-                return False
-        os.write(fd, str(os.getpid()).encode())
-        os.close(fd)
-        self.acquired = True
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            os.close(fd)
+            return False
+        self._fd = fd
         return True
 
     def release(self) -> None:
-        if self.acquired and os.path.exists(self.path):
-            os.remove(self.path)
-            self.acquired = False
+        if self._fd is not None:
+            fcntl.flock(self._fd, fcntl.LOCK_UN)
+            os.close(self._fd)
+            self._fd = None
 
     def __enter__(self):
         if not self.acquire():

@@ -23,6 +23,7 @@ from elasticsearch_data_import_handler_spark.operators.textsearch import (
 from elasticsearch_data_import_handler_spark.operators.wand import bm25_topk_wand
 from elasticsearch_data_import_handler_spark.plans.build import (
     IndexReader,
+    build_incremental,
     build_index,
     compact_index,
     delete_by_query,
@@ -130,7 +131,7 @@ EDGE_ROWS = [(0, "zzzunknown", 10), (0, "qqqmissing", 10),
 @pytest.mark.parametrize("which", ["deleted", "clean"])
 def test_wand_k_edge_cases_match_join_scorer(spark, deleted_and_clean, which):
     """The k that each shard scorer carries ranks a mixed batch exactly as
-    the join scorer does, through the tombstone cogroup and without it."""
+    the join scorer does, on the deleted index and on the clean one."""
     del_dir, clean_dir, victims = deleted_and_clean
     reader = IndexReader(spark, del_dir if which == "deleted" else clean_dir)
     qt = query_terms_df(spark, EDGE_ROWS)
@@ -152,6 +153,36 @@ def test_wand_k_edge_cases_match_join_scorer(spark, deleted_and_clean, which):
     # tie-inclusive: both tied docs stay candidates of the k=1 query
     assert {r.doc_id for r in tied} <= {r.doc_id for r in rows
                                         if r.query_id == 1}
+
+
+@pytest.mark.parametrize("tau", [100_000, 100], ids=["one_salt", "two_salts"])
+def test_reader_opened_before_a_delete_keeps_its_snapshot(spark, tmp_path, tau):
+    """A reader opened between two delete_by_query calls ranks as it did
+    before the second, on the one-group driver path and on the Spark plan,
+    even when it first reads its tombstones after that delete committed:
+    the tombstone batches come from its state, not from listing the index."""
+    d = str(tmp_path / "idx")
+    build_incremental(spark, [synth_pages(spark, 240, seed=42, batches=2, batch=b)
+                              for b in (0, 1)], d, tau=tau, n_buckets=4)
+    first = delete_by_query(spark, d, must=["t0100"])
+    single = [(0, "spark", 10), (0, "sql", 10)]
+    batch = [(q, t, 5) for q in range(3) for t in ("spark", "join")]
+
+    def ranked(reader):
+        return [bm25_topk_wand(spark, reader, qterms=query_terms_df(spark, r))
+                .collect() for r in (single, batch)]
+
+    want = ranked(IndexReader(spark, d))
+    old = IndexReader(spark, d)
+    assert old.state.s_shards == (1 if tau == 100_000 else 2)
+    second = delete_by_query(spark, d, must=["spark"])
+    assert first["n_tombstones"] > 0 and second["n_tombstones"] > 0
+    assert ranked(old) == want
+    assert first["batch_id"] in old.doc_maps.tombstoned
+    assert second["batch_id"] not in old.doc_maps.tombstoned
+    new = IndexReader(spark, d)
+    assert second["batch_id"] in new.doc_maps.tombstoned
+    assert ranked(new) != want  # the delete shows after
 
 
 def test_delete_updates_stats_and_lineage(spark, deleted_and_clean):

@@ -63,6 +63,65 @@ def test_build_lock_blocks_concurrent(spark, index_dir):
         assert lock2.acquire() is False
 
 
+def _dead_pid() -> int:
+    import subprocess
+    import sys
+
+    p = subprocess.Popen([sys.executable, "-c", "pass"])
+    p.wait()
+    return p.pid
+
+
+def test_build_lock_stale_reclaim_admits_one_holder(tmp_path, monkeypatch):
+    """Two contenders find a lock file left by a dead process.  Whatever
+    one of them does to the file (here: the whole take-over of the other
+    runs just before its first rename), exactly one of them holds the
+    lock."""
+    import os
+
+    d = str(tmp_path)
+    os.makedirs(f"{d}/_state")
+    with open(f"{d}/_state/build.lock", "w") as f:
+        f.write(str(_dead_pid()))
+    a, b = BuildLock(d), BuildLock(d)
+    real, got_a = os.rename, []
+
+    def rename(*args):
+        if not got_a:
+            got_a.append(None)  # a's own take-over renames too: run it once
+            got_a[0] = a.acquire()
+        return real(*args)
+
+    monkeypatch.setattr(os, "rename", rename)
+    got_b = b.acquire()
+    if not got_a:
+        got_a.append(a.acquire())
+    assert [got_a[0], got_b].count(True) == 1
+    a.release()
+    b.release()
+
+
+def test_build_lock_freed_when_holder_dies(tmp_path):
+    """A process that takes the lock and exits without releasing it
+    (``os._exit``: no ``finally``, no atexit) leaves it acquirable."""
+    import os
+    import subprocess
+    import sys
+
+    d = str(tmp_path)
+    code = ("import os, sys; from elasticsearch_data_import_handler_spark."
+            "plans.state import BuildLock; "
+            "assert BuildLock(sys.argv[1]).acquire(); os._exit(0)")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code, d], check=True, cwd=root)
+    lock = BuildLock(d)
+    assert lock.acquire()
+    assert BuildLock(d).acquire() is False
+    lock.release()
+    assert lock.acquire()
+    lock.release()
+
+
 def test_partition_pruned_scan(spark, index_dir):
     """The postings scan for a query must touch only the term's bucket
     (partition pruning visible in the physical plan)."""

@@ -130,27 +130,66 @@ def test_upsert_merge_scans_only_affected_partitions(spark, tmp_path):
     assert spark.read.parquet(target).count() == 400
 
 
-def test_wand_cogrouped_tombstones_no_driver_collect(spark, tmp_path):
-    """Tombstone delivery to the WAND scorer is a cogroup (FlatMapCoGroups
-    in the plan), not a driver-side set in the UDF closure; the scorer is
-    the Arrow kernel on both paths."""
+def test_wand_tombstoned_index_runs_the_clean_budget(spark, tmp_path,
+                                                    monkeypatch):
+    """Tombstones reach the WAND scorer from the segment files, read in the
+    process that scores (plans/docmap.py), not as a second plan input.  On
+    a tombstoned index of two salts a warm ranked request and a
+    ``candidates=True`` request each run the clean index's jobs and stages
+    (at most 4 jobs); the plan holds no cogroup, cartesian product or
+    nested-loop join; and the pickled scorer closure is the clean index's
+    size — it carries no tombstone ids."""
+    from pyspark import cloudpickle
+    from pyspark.sql.group import GroupedData
+
+    from elasticsearch_data_import_handler_spark.operators.scoring import (
+        query_terms_df)
     from elasticsearch_data_import_handler_spark.operators.wand import (
         bm25_topk_wand)
     from elasticsearch_data_import_handler_spark.plans.build import (
-        IndexReader, build_incremental)
+        IndexReader, build_incremental, build_index, delete_by_query)
     from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
 
-    d = str(tmp_path / "idx2")
-    b0 = synth_pages(spark, 200, seed=42, batches=2, batch=0)
-    b1 = synth_pages(spark, 200, seed=42, batches=2, batch=1)
-    build_incremental(spark, [b0, b1], d, tau=100, n_buckets=4)
-    reader = IndexReader(spark, d)
-    assert reader.tombstones_df() is not None  # upserts created tombstones
-    # the ranked result is a local relation; the scorer plan is the
-    # candidates frame's
-    df = bm25_topk_wand(spark, reader, candidates=True)
-    plan = _plan(df)
-    assert "FlatMapCoGroupsInArrow" in plan, plan
+    dirs = {"clean": str(tmp_path / "clean"), "tombd": str(tmp_path / "tombd")}
+    build_index(spark, synth_pages(spark, 200, seed=42), dirs["clean"],
+                tau=100, n_buckets=4)
+    build_incremental(spark, [synth_pages(spark, 200, seed=42, batches=2, batch=b)
+                              for b in (0, 1)], dirs["tombd"], tau=100, n_buckets=4)
+    delete_by_query(spark, dirs["tombd"], must=["merge"])
+    scorers = []
+    real = GroupedData.applyInArrow
+    monkeypatch.setattr(GroupedData, "applyInArrow",
+                        lambda self, f, schema: scorers.append(f)
+                        or real(self, f, schema))
+    rows = [(0, "spark", 10), (0, "sql", 10)]
+    got = {}
+    for name, d in dirs.items():
+        reader = IndexReader(spark, d)
+        assert reader.state.s_shards == 2
+
+        def request(**kw):
+            df = bm25_topk_wand(spark, reader,
+                                qterms=query_terms_df(spark, rows), **kw)
+            return df, df.collect()
+
+        request()  # warm: the reader's lexicon and doc maps are read once
+        ranked = _jobs_and_stages(spark, f"tomb-{name}-ranked", request)
+        cands = _jobs_and_stages(spark, f"tomb-{name}-cands",
+                                 lambda: request(candidates=True))
+        plan = _plan(cands[2][0])
+        for node in ("FlatMapCoGroupsInArrow", "CartesianProduct",
+                     "BroadcastNestedLoopJoin"):
+            assert node not in plan, plan
+        assert ranked[2][1] and cands[2][1]
+        got[name] = (ranked[:2], cands[:2], cloudpickle.dumps(scorers[-1]))
+    deleted = IndexReader(spark, dirs["tombd"]).tombstones_df().toPandas()
+    ids = deleted["doc_id"].to_numpy()
+    assert ids.size >= 20  # the upserts and the delete made tombstones
+    assert got["tombd"][:2] == got["clean"][:2], got  # same jobs and stages
+    assert got["clean"][0][0] <= 4 and got["clean"][1][0] <= 4, got
+    pickled = got["tombd"][2]
+    assert len(pickled) - len(got["clean"][2]) < 64
+    assert not any(i.tobytes() in pickled for i in ids)
 
 
 def _jobs_in_group(spark, group, action):
@@ -163,6 +202,19 @@ def _jobs_in_group(spark, group, action):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
     return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _jobs_and_stages(spark, group, action):
+    """Run ``action`` under its own job group → (its Spark job count, the
+    stages those jobs ran, result); a stage skipped because its shuffle
+    output was reused is not counted."""
+    n, out = _jobs_in_group(spark, group, action)
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    stages = sum(store.lastStageAttempt(s).status().toString() != "SKIPPED"
+                 for j in sc.statusTracker().getJobIdsForGroup(group)
+                 for s in sc.statusTracker().getJobInfo(j).stageIds)
+    return n, stages, out
 
 
 def test_wand_single_query_job_budget(spark, tmp_path):

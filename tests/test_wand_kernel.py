@@ -125,8 +125,8 @@ def _exhaustive(rows, maps, tomb) -> set:
 
 
 def _kernel(rows, maps, tomb) -> set:
-    ts = None if tomb is None else pa.table({"__ts_doc_id": pa.array(tomb, pa.int64())})
-    got = _score_group(_table(rows), ts, AVGDL, maps).to_pylist()
+    deleted = np.empty(0, np.int64) if tomb is None else tomb.astype(np.int64)
+    got = _score_group(_table(rows), deleted, AVGDL, maps).to_pylist()
     return {(r["query_id"], r["doc_id"], r["score"], r["k"]) for r in got}
 
 
@@ -182,12 +182,14 @@ def test_repeated_non_seed_term_is_weighted():
 
 def test_empty_and_missing_inputs():
     empty = pa.schema(_ROW_TYPES).empty_table()
-    assert _score_group(empty, None, AVGDL, {}).num_rows == 0
+    assert _score_group(empty, np.empty(0, np.int64), AVGDL, {}).num_rows == 0
     rows, maps = _repeated_non_seed_rows()
-    all_dead = pa.table({"__ts_doc_id": pa.array(
-        np.concatenate([_doc_ids(b, e, maps) for *_, b, _, e in rows]), pa.int64())})
+    all_dead = np.concatenate([_doc_ids(b, e, maps) for *_, b, _, e in rows])
+    assert all_dead.dtype == np.int64
     assert _score_group(_table(rows), all_dead, AVGDL, maps).num_rows == 0
-    ts_empty = pa.table({"__ts_doc_id": pa.array([], pa.int64())})
-    assert _kernel(rows, maps, None) == {
-        (r["query_id"], r["doc_id"], r["score"], r["k"])
-        for r in _score_group(_table(rows), ts_empty, AVGDL, maps).to_pylist()}
+    # no deleted ids, and deleted ids none of the group's docs carry
+    none_hit = np.array([-1, 7, 1 << 50], np.int64)
+    for deleted in (np.array([], np.int64), none_hit):
+        assert _kernel(rows, maps, None) == {
+            (r["query_id"], r["doc_id"], r["score"], r["k"])
+            for r in _score_group(_table(rows), deleted, AVGDL, maps).to_pylist()}
