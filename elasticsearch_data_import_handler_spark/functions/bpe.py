@@ -5,12 +5,6 @@ Real pretraining pipelines pack SUBWORD tokens, not analyzer words
 (Sennrich, Haddow, Birch, "Neural Machine Translation of Rare Words with
 Subword Units", ACL 2016) end-to-end with the repo's determinism policy:
 
-* **training** — distributed word counts (one groupBy shuffle), then the
-  merge loop runs driver-side over the top ``max_words`` (count DESC, word
-  ASC — a bounded, deterministic sample, which is how production tokenizers
-  are trained: the vocabulary estimate converges long before the corpus
-  does).  Pair selection ties break lexicographically, so the merge list is
-  bit-identical on every run and engine.
 * **application** — iterative leftmost-best-pair merging: repeatedly find
   the adjacent pair with the lowest merge rank and fuse its LEFTMOST
   occurrence.  This is provably the same output as the classic "merge all
@@ -19,18 +13,19 @@ Subword Units", ACL 2016) end-to-end with the repo's determinism policy:
   formulation — it is directly replayable as a DuckDB recursive CTE over
   list functions, which is what keeps the gate row hash-verifiable.
 * **fixture** — ``data/bpe_merges.txt`` is a fixed merge list trained once
-  on the deterministic synthetic corpus and checked in, so encoding (the
-  hot path) never depends on re-training; retraining reproduces it
-  bit-for-bit (test-enforced).
+  on the deterministic synthetic corpus (most frequent adjacent pair per
+  step over the top 50k analyzer words, ties broken lexicographically;
+  the trainer was commit bc5867b's ``train_bpe``) and checked in as data;
+  encoding reads it and never re-trains.
 
 No end-of-word marker: merges act within ``[a-z0-9]+`` analyzer words only,
 so the BPE token count of a document is Σ_words |segment(word)| and word
 boundaries stay aligned with the analyzer the rest of the engine uses.
 
-Scale shape: training collects ≤ max_words (count, word) pairs once; the
-encoder is an Arrow-batched kernel with a per-batch word→pieces cache
-(Zipf: a batch's distinct-word count is far below its token count).  The
-merge table itself is ~n_merges entries — closure-captured, never shuffled.
+Scale shape: the encoder is an Arrow-batched kernel with a per-batch
+word→pieces cache (Zipf: a batch's distinct-word count is far below its
+token count).  The merge table itself is ~n_merges entries —
+closure-captured, never shuffled.
 """
 
 from __future__ import annotations
@@ -56,61 +51,6 @@ def load_merges(path: str = DEFAULT_MERGES_PATH) -> list[tuple[str, str]]:
                 continue
             l, r = line.split(" ")
             merges.append((l, r))
-    return merges
-
-
-def word_counts(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, cnt): analyzer-word frequencies — one explode + one groupBy."""
-    toks = F.explode(F.regexp_extract_all(
-        F.lower(F.col(text_col)), F.lit(WORD_RE), 0)).alias("word")
-    return documents.select(toks).groupBy("word").agg(
-        F.count(F.lit(1)).alias("cnt"))
-
-
-def train_bpe(documents: DataFrame, n_merges: int = 200,
-              max_words: int = 50_000,
-              text_col: str = "text") -> list[tuple[str, str]]:
-    """Train a BPE merge list: distributed word counts, driver merge loop
-    over the top ``max_words``.  Deterministic: word sample ordered
-    (cnt DESC, word ASC); each step picks the most frequent adjacent pair,
-    ties broken lexicographically."""
-    rows = (word_counts(documents, text_col)
-            .orderBy(F.desc("cnt"), F.asc("word"))
-            .limit(max_words).collect())
-    vocab = [(tuple(r["word"]), int(r["cnt"])) for r in rows]
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pair_counts: dict[tuple[str, str], int] = {}
-        for pieces, cnt in vocab:
-            i, n = 0, len(pieces)
-            while i < n - 1:
-                p = (pieces[i], pieces[i + 1])
-                pair_counts[p] = pair_counts.get(p, 0) + cnt
-                # non-overlapping occurrence counting (aaa → one 'aa' pair),
-                # matching how a left-to-right merge would consume them
-                i += 2 if i + 2 < n and (pieces[i + 1], pieces[i + 2]) == p \
-                    else 1
-        if not pair_counts:
-            break
-        # highest count wins; ties go to the lexicographically smallest
-        # (left, right) pair — bit-identical merge lists on every run
-        (l, r), c = min(pair_counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        if c < 2:
-            break
-        merges.append((l, r))
-        fused = l + r
-        new_vocab = []
-        for pieces, cnt in vocab:
-            out, i, n = [], 0, len(pieces)
-            while i < n:
-                if i < n - 1 and pieces[i] == l and pieces[i + 1] == r:
-                    out.append(fused)
-                    i += 2
-                else:
-                    out.append(pieces[i])
-                    i += 1
-            new_vocab.append((tuple(out), cnt))
-        vocab = new_vocab
     return merges
 
 

@@ -26,19 +26,6 @@ from .. import BM25_B, BM25_K1
 from ..functions.textanalysis import jvm_tokens_col
 
 
-def docs_from_pages(pages: DataFrame) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → docs(doc_id, url, tokens, doc_len).
-
-    doc_id = xxhash64(url) — stable across incremental runs (the analog of the
-    reference's ES ``_id = idField`` identity, SURVEY.md §2A A9).
-    """
-    return pages.select(
-        F.xxhash64("url").alias("doc_id"),
-        "url",
-        jvm_tokens_col("text").alias("tokens"),
-    ).withColumn("doc_len", F.size("tokens"))
-
-
 def docs_from_documents(documents: DataFrame) -> DataFrame:
     """Driver ``documents`` table → docs frame, reusing the native doc_id."""
     return documents.select(

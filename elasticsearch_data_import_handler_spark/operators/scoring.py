@@ -1,26 +1,16 @@
-"""BM25 scoring + top-k (C11/C12): the join-based reference scorer, plus
-the query-term frame, search_after and rescore helpers the request paths
-use.
-
-``bm25_topk`` (with ``score_bm25_join`` and ``topk``) is not a request
-path.  It re-tokenizes a raw docs frame and scores it fully declaratively:
-broadcast the (tiny) query-term table, join it to term_freqs on term, bring
-in doc_len and corpus stats, sum BM25 contributions per (query_id, doc_id),
-rank with a fixed total order (score DESC, doc_id ASC — C12's
-rank-determinism contract).  The tests compare the block-max WAND path
-(operators/wand.py), which serves every BM25 top-k request from the
-compressed index, against it.
+"""Request-side helpers of the BM25 top-k path: the query-term frame a
+request starts from, ``search_after`` keyset pagination and batched
+``rescore`` over already-ranked windows.  The scorer itself is the
+block-max WAND path (operators/wand.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .indexing import bm25_score_expr
-
 
 def query_terms_df(spark, rows=None) -> DataFrame:
-    """(query_id, term, k) — the broadcast side of the score join.
+    """(query_id, term, k) — a request's query terms.
 
     Built from a pyarrow Table, so the frame is a ``LocalRelation``: the
     query stays on the driver, collecting it runs no Spark job, and no Python
@@ -36,57 +26,6 @@ def query_terms_df(spark, rows=None) -> DataFrame:
         "term": pa.array(terms, pa.string()),
         "k": pa.array(ks, pa.int32()),
     }))
-
-
-def score_bm25_join(qterms: DataFrame, tfreqs: DataFrame, lex: DataFrame,
-                    dstats: DataFrame, cstats: DataFrame) -> DataFrame:
-    """→ (query_id, doc_id, score).  All joins on the query side broadcast."""
-    q_lex = F.broadcast(qterms.join(lex, "term"))  # tiny: |query terms| rows
-    matched = tfreqs.join(q_lex, "term")
-    with_dl = matched.join(dstats.select("doc_id", "doc_len"), "doc_id")
-    with_stats = with_dl.crossJoin(F.broadcast(cstats.select("avgdl")))
-    return (
-        with_stats.withColumn("contrib", bm25_score_expr())
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"), F.first("k").alias("k"))
-    )
-
-
-def topk(scored: DataFrame, k: int | None = None) -> DataFrame:
-    """C12: rank-identical top-k. Total order: score DESC, doc_id ASC.
-
-    Rank is computed on full float64 precision; presentation rounding (if
-    any) happens after ranking so ties can't be manufactured by rounding.
-    """
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w).cast("long"))
-    if k is not None:
-        ranked = ranked.filter(F.col("rank") <= k)
-    elif "k" in scored.columns:
-        ranked = ranked.filter(F.col("rank") <= F.col("k"))
-    return ranked.select("query_id", "rank", "doc_id", "score")
-
-
-def bm25_topk(spark, docs: DataFrame, qterms: DataFrame | None = None,
-              round_to: int | None = 4) -> DataFrame:
-    """Join-based BM25 top-k over a raw docs frame: the reference the tests
-    compare the WAND path against; no request path calls it.
-
-    Returns (query_id, rank, doc_id, score) ordered by (query_id, rank).
-    """
-    from .indexing import corpus_stats, doc_stats, lexicon, term_freqs
-
-    if qterms is None:
-        qterms = query_terms_df(spark)
-    dstats = doc_stats(docs)
-    tfreqs = term_freqs(docs)
-    cstats = corpus_stats(dstats)
-    lex = lexicon(tfreqs, cstats)
-    scored = score_bm25_join(qterms, tfreqs, lex, dstats, cstats)
-    out = topk(scored)
-    if round_to is not None:
-        out = out.withColumn("score", F.round("score", round_to))
-    return out.orderBy("query_id", "rank")
 
 
 def search_after(scored: DataFrame, cursor: DataFrame, k_col: str = "k",

@@ -326,28 +326,6 @@ def collapse_hits(scored: DataFrame, meta: DataFrame, field: str,
     return out
 
 
-def facet_cardinality(spark, reader, meta: DataFrame, group_col: str,
-                      distinct_col: str, k: int = 64, must=None,
-                      should=None, must_not=None, min_should: int = 0,
-                      id_col: str = "doc_id") -> DataFrame:
-    """ES terms-agg + **cardinality sub-agg** ("unique X per bucket over
-    the matching docs"): bool-query candidates joined to doc-values
-    ``meta``, then the KMV distinct sketch per ``group_col`` bucket —
-    (grp, est_distinct, exact_mode).  ES backs this with HLL; here the KMV
-    sketch (operators/sketches.py) gives the same mergeable-bounded-state
-    scaling with an exactly-replayable estimate.  Candidate set is
-    O(Σ df of query terms); the sketch shuffle is O(k · buckets ·
-    partitions)."""
-    from .sketches import kmv_distinct
-    from .textsearch import bool_query
-
-    matched = bool_query(spark, reader, must=must, should=should,
-                         must_not=must_not, min_should=min_should)
-    j = matched.select("doc_id").join(
-        meta.withColumnRenamed(id_col, "doc_id"), "doc_id")
-    return kmv_distinct(j, group_col, distinct_col, k=k)
-
-
 def multi_match_fields_agg(spark, readers: dict, terms,
                            boosts: dict | None = None) -> DataFrame:
     """The shared per-field aggregation of :func:`multi_match`:
@@ -505,38 +483,6 @@ def pipeline_aggs(buckets: DataFrame, key_col: str = "value",
         F.round(F.sum(sum_col).over(
             w.rowsBetween(Window.unboundedPreceding, 0)), 2)
         .alias("cumulative_sum"),
-    )
-
-
-def pipeline_aggs_ext(buckets: DataFrame, key_col: str = "value",
-                      count_col: str = "doc_count",
-                      sum_col: str = "sum_score", window: int = 3,
-                      lag: int = 1) -> DataFrame:
-    """The rest of the ES pipeline-agg family over ordered buckets:
-    ``moving_fn`` (here: unweighted moving average of ``sum_col`` over the
-    trailing ``window`` buckets INCLUDING the current one — ES
-    MovingFunctions.unweightedAvg with shift=1), ``serial_diff`` of
-    ``count_col`` at ``lag`` (NULL for the first ``lag`` buckets, as ES),
-    and ``bucket_sort``'s rank under (count DESC, key ASC).
-
-    Determinism: the moving avg divides a windowed sum of 2dp-rounded
-    values by the in-window row count and rounds the RATIO at 6dp — the
-    repo's derived-avg policy.  Same scale shape as :func:`pipeline_aggs`:
-    runs on the reduced agg tree, one row per bucket."""
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.col(key_col).cast("long"))
-    mv = w.rowsBetween(-(window - 1), 0)
-    return buckets.select(
-        "*",
-        F.round(F.sum(F.round(F.col(sum_col), 2)).over(mv)
-                / F.count(F.lit(1)).over(mv), 6).alias("moving_avg"),
-        (F.col(count_col) - F.lag(count_col, lag).over(w)).cast("long")
-        .alias("serial_diff"),
-        F.row_number().over(
-            Window.orderBy(F.desc(count_col),
-                           F.asc(F.col(key_col).cast("long"))))
-        .cast("long").alias("sort_rank"),
     )
 
 
@@ -1009,78 +955,6 @@ def metric_aggs(scored: DataFrame, meta: DataFrame, value_col: str,
                  nulld.alias("sum_score")))
     return (one.select(F.explode(rows).alias("b"))
             .select("b.facet", "b.value", "b.doc_count", "b.sum_score"))
-
-
-def adjacency_matrix_agg(scored: DataFrame, meta: DataFrame,
-                         filters: dict, sep: str = "&",
-                         id_col: str = "doc_id") -> DataFrame:
-    """ES ``adjacency_matrix`` aggregation: doc_count for every named
-    filter AND every pairwise intersection (key "a&b", a < b), ES's
-    co-occurrence matrix for overlapping segments.
-
-    One conditional-aggregate pass computes all n + n·(n−1)/2 cells —
-    never a self-join of the candidate set; ES caps n (default 100
-    filters) for the same quadratic-cells reason, and the cell count is
-    the ONLY quadratic term here (rows stay |candidates| × 1 pass).
-    Buckets with doc_count 0 are dropped, as ES does."""
-    j = _facet_join(scored, meta, id_col)
-    conds = {name: (F.expr(c) if isinstance(c, str) else c)
-             for name, c in filters.items()}
-    names = sorted(conds)
-    cells = [(n, conds[n]) for n in names]
-    cells += [(f"{a}{sep}{b}", conds[a] & conds[b])
-              for i, a in enumerate(names) for b in names[i + 1:]]
-    aggs = [F.sum(F.when(cond, 1).otherwise(0)).cast("long")
-            .alias(f"__n_{i}") for i, (_, cond) in enumerate(cells)]
-    one = j.agg(*aggs)
-    buckets = F.array(*[
-        F.struct(F.lit(key).alias("value"),
-                 F.col(f"__n_{i}").alias("doc_count"))
-        for i, (key, _) in enumerate(cells)])
-    return (one.select(F.explode(buckets).alias("b"))
-            .select(F.lit("adjacency").alias("facet"), "b.value",
-                    "b.doc_count",
-                    F.lit(None).cast("double").alias("sum_score"))
-            .filter(F.col("doc_count") > 0))
-
-
-def auto_date_histogram_search(spark, reader, target_buckets: int = 10,
-                               intervals: tuple = (1, 5, 10, 30, 60, 300,
-                                                   600, 1800, 3600, 43200,
-                                                   86400),
-                               must=None, should=None, must_not=None,
-                               min_should: int = 0,
-                               scored: DataFrame | None = None) -> DataFrame:
-    """ES ``auto_date_histogram``: pick the smallest interval from the ES
-    rounding ladder that yields ≤ ``target_buckets`` non-empty-span
-    buckets over the matched docs' warc_ts range, then run the fixed
-    histogram at that interval.
-
-    The span comes from ONE bounded min/max aggregate over the candidate
-    set (a 1-row collect — the same driver-side handshake ES's
-    coordinating node does when it halves bucket resolution); the
-    histogram itself is :func:`date_histogram_search` at the chosen
-    interval, so the output schema and scale shape are identical."""
-    from .textsearch import bool_query
-
-    if scored is None:
-        scored = bool_query(spark, reader, must=must, should=should,
-                            must_not=must_not, min_should=min_should,
-                            round_to=4)
-    ds = reader.doc_stats().select(
-        "doc_id", F.col("warc_ts").cast("long").alias("__ts"))
-    row = (scored.join(ds, "doc_id")
-           .agg(F.min("__ts").alias("lo"), F.max("__ts").alias("hi"))
-           .first())
-    if row["lo"] is None:
-        chosen = intervals[-1]
-    else:
-        span = int(row["hi"]) - int(row["lo"]) + 1
-        chosen = next((iv for iv in intervals
-                       if -(-span // iv) <= target_buckets), intervals[-1])
-    out = date_histogram_search(spark, reader, interval_s=int(chosen),
-                                scored=scored)
-    return out.withColumn("facet", F.lit(f"adh:{int(chosen)}s"))
 
 
 def extended_stats_agg(scored: DataFrame, meta: DataFrame, field: str,

@@ -130,23 +130,6 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     )
 
 
-def embedding_neardup_pairs(embeddings: DataFrame, threshold: float = 0.92,
-                            bucket_col: str = "label", id_col: str = "vec_id",
-                            vec_col: str = "embedding") -> DataFrame:
-    """Embedding-cosine near-dup pairs within a bucket (label here; LSH bucket
-    at scale).  → (id_a, id_b, cos) with id_a < id_b, cos ≥ threshold."""
-    e = embeddings.select(
-        F.col(bucket_col).alias("bucket"), F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-    )
-    a = e.select("bucket", F.col("id").alias("id_a"), F.col("vec").alias("va"))
-    b = e.select("bucket", F.col("id").alias("id_b"), F.col("vec").alias("vb"))
-    pairs = a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b"))
-    return (cosine_pairs(pairs, "va", "vb", ["id_a", "id_b"],
-                         threshold=threshold)
-            .select("id_a", "id_b", F.round("cos", 4).alias("cos")))
-
-
 def rademacher_sign(tbl: int, plane: int, dim_idx: int) -> int:
     """±1 plane component, deterministic from md5 — the same value any SQL
     engine derives (parity of the first md5 hex nibble of 't,j,d'), so the
@@ -280,13 +263,6 @@ def embedding_neardup_lsh(embeddings: DataFrame, threshold: float = 0.35,
     return (cosine_pairs(pairs, "va", "vb", ["id_a", "id_b"],
                          threshold=threshold)
             .select("id_a", "id_b", F.round("cos", 4).alias("cos")))
-
-
-def ivf_centroids_filter(id_col: str = "vec_id"):
-    """The round-2 closed-form stand-in quantizer (centroids = vectors with
-    id % 31 == 6).  Superseded by ``kmeans_centroids`` — kept as the
-    zero-training fallback and for recall comparisons in tests."""
-    return (F.col(id_col) % 31 == 6)
 
 
 def _cell_norms(C):
@@ -489,46 +465,12 @@ def _residuals(cand: DataFrame, assigned_cells: DataFrame, C,
     return joined.mapInPandas(_res, schema="id long, cell int, r array<long>")
 
 
-def _pq_assign_codes(residuals: DataFrame, CB) -> DataFrame:
-    """(id, m, code): nearest sub-codebook entry per subspace, minimizing the
-    integer L2 objective ||cb||² − 2·r·cb (per-row ||r||² is constant in the
-    argmin) with stable low-code tie-break — one batched einsum per subspace,
-    bit-reproducible in SQL."""
-    import numpy as np
-    import pandas as pd
-
-    CBm = CB.copy()               # (M, k_pq, dsub) int64
-    M, k_pq, dsub = CBm.shape
-    cb_sq = (CBm * CBm).sum(axis=2)     # (M, k_pq)
-
-    def _assign(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            R = np.array(pdf["r"].tolist(), dtype=np.int64).reshape(
-                len(pdf), M, dsub)
-            codes = np.empty((len(pdf), M), dtype=np.int32)
-            for m in range(M):
-                # obj (n, k_pq) = ||cb||² − 2·R_m·cb — still int64-exact
-                obj = cb_sq[m][None, :] - 2 * (R[:, m, :] @ CBm[m].T)
-                codes[:, m] = np.argmin(obj, axis=1)  # argmin: first (low) code on ties
-            n = len(pdf)
-            yield pd.DataFrame({
-                "id": np.repeat(pdf["id"].to_numpy(np.int64), M),
-                "m": np.tile(np.arange(M, dtype=np.int32), n),
-                "code": codes.ravel(),
-            })
-
-    return residuals.select("id", "r").mapInPandas(
-        _assign, schema="id long, m int, code int")
-
-
 def _pq_codes_rows(residuals: DataFrame, CB) -> DataFrame:
     """(id, cell, codes array<int>): every subspace's nearest sub-codebook
-    entry per residual row in ONE kernel pass — the m-ordered array
-    _pq_assign_codes emits as (id, m, code) rows, without the reassembly
-    groupBy + join.  Same integer objective, same first-(low)-code
-    tie-break."""
+    entry per residual row in ONE kernel pass, m-ordered.  Minimizes the
+    integer L2 objective ||cb||² − 2·r·cb (per-row ||r||² is constant in
+    the argmin) with a stable first-(low)-code tie-break — one batched
+    matmul per subspace, bit-reproducible in SQL."""
     import numpy as np
     import pandas as pd
 
@@ -602,7 +544,7 @@ def pq_codebooks(residuals: DataFrame, M: int = 8, k_pq: int = 16,
                     len(pdf), M, dsub)
                 for m in range(M):
                     # same integer objective + first-(low)-code tie-break
-                    # as _pq_assign_codes
+                    # as _pq_codes_rows
                     obj = cb_sq[m][None, :] - 2 * (R[:, m, :] @ CBm[m].T)
                     codes = np.argmin(obj, axis=1)
                     np.add.at(acc[m], codes, R[:, m, :])
@@ -674,10 +616,7 @@ def ivf_pq_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     res = _residuals(cand, cells1, Cq, id_col, vec_col).persist()
     CB = pq_codebooks(res, M=M, k_pq=k_pq, iters=pq_iters, dim=dim)
     # the persisted 100-TB artifact shape: (vec_id, cell, codes[M]) — one
-    # kernel pass over the residual rows (round 6: the former per-(id, m)
-    # assignment → groupBy(id) collect_list → join(res) spent two shuffles
-    # re-assembling arrays the kernel emits directly; the code values are
-    # the same argmin per subspace)
+    # kernel pass over the residual rows
     coded = _pq_codes_rows(res, CB).withColumnRenamed("id", id_col)
     q_rows = (embeddings.filter(F.col(id_col) < n_queries)
               .select(id_col, quantized_vec(vec_col).alias("qz"))

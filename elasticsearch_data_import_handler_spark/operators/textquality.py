@@ -27,15 +27,6 @@ def _tokens():
     return F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
 
 
-def token_count(documents: DataFrame) -> DataFrame:
-    """(doc_id, n_tokens, n_distinct) — whitespace/regex token counting."""
-    return documents.select(
-        "doc_id",
-        F.size(_tokens()).cast("long").alias("n_tokens"),
-        F.size(F.array_distinct(_tokens())).cast("long").alias("n_distinct"),
-    )
-
-
 def quality_score(documents: DataFrame) -> DataFrame:
     """Heuristic document quality: length, mean token length, stopword and
     distinct ratios, combined score.  Formula mirrored in the SQL oracle."""
@@ -62,37 +53,6 @@ def quality_score(documents: DataFrame) -> DataFrame:
     return d
 
 
-def lang_id(documents: DataFrame) -> DataFrame:
-    """Marker-token language-ID: argmax of per-language marker hits, ties and
-    zero-hit docs → 'und' / first alphabetically.  (On the synthetic corpus
-    this mostly says 'en' — the point is deterministic, scalable plumbing.)"""
-    toks = _tokens()
-
-    def _hits(markers):
-        # NB: closure, not a default arg — a 2-arg lambda would make PySpark
-        # pass the array index as the second parameter.
-        return F.size(F.filter(toks, lambda t: t.isin(*markers))).cast("long")
-
-    counts = {lang: _hits(markers) for lang, markers in LANG_MARKERS.items()}
-    best = F.greatest(*counts.values())
-    pred = F.lit("und")
-    for lang in sorted(LANG_MARKERS, reverse=True):  # reverse so earliest wins last
-        pred = F.when((best > 0) & (counts[lang] == best), F.lit(lang)).otherwise(pred)
-    sel = [F.col("doc_id")]
-    sel += [c.alias(f"hits_{lang}") for lang, c in counts.items()]
-    sel.append(pred.alias("pred_lang"))
-    return documents.select(*sel)
-
-
-def fingerprint(documents: DataFrame) -> DataFrame:
-    """Content fingerprints: md5 hex (cross-engine checkable) + xxhash64."""
-    return documents.select(
-        "doc_id",
-        F.md5(F.col("text")).alias("md5"),
-        F.xxhash64(F.col("text")).alias("xxh64"),
-    )
-
-
 def text_metrics(documents: DataFrame) -> DataFrame:
     """One-pass union of the per-doc scalar text metrics: token counts,
     quality-score components, language-ID hits + prediction, and the md5
@@ -101,9 +61,10 @@ def text_metrics(documents: DataFrame) -> DataFrame:
     how a 100 TB quality-filter pass actually runs: one scan, all features.
 
     Columns: doc_id, n_tokens, n_distinct, mean_token_len, stopword_ratio,
-    distinct_ratio, quality, hits_{de,en,es,fr}, pred_lang, md5 — the same
-    formulas as token_count/quality_score/lang_id/fingerprint (shared
-    oracle)."""
+    distinct_ratio, quality, hits_{de,en,es,fr}, pred_lang, md5 — the
+    quality columns are :func:`quality_score`'s formulas (shared oracle).
+    Language-ID is the argmax of per-language marker hits; ties go to the
+    alphabetically first language, zero-hit docs to 'und'."""
     toks = _tokens()
     n = F.size(toks).cast("double")
     sum_len = F.length(F.array_join(toks, "")).cast("double")

@@ -1050,34 +1050,6 @@ def pinned_query(organic: DataFrame, pinned_ids: list, k: int = 20,
             .filter(F.col("rank") <= int(k)))
 
 
-def terms_lookup_query(spark, reader, lookup: DataFrame,
-                       term_col: str = "term", max_terms: int = 65_536,
-                       round_to: int | None = 4) -> DataFrame:
-    """ES ``terms`` query with **terms lookup**: the term list comes from
-    another document's field (here: any DataFrame of terms — typically one
-    looked-up row's tokens) instead of being inlined in the request; docs
-    matching ANY fetched term are returned with their BM25 bool score.
-
-    Like ES — which fetches the lookup doc's field and rewrites to a plain
-    terms query capped at 65 536 terms — the lookup side materializes: ONE
-    bounded collect of ≤ ``max_terms`` distinct terms (df-descending,
-    term-ASC deterministic cut), then the standard TAAT bool path scores
-    O(Σ df) postings, never the corpus."""
-    from .textsearch import bool_query  # self-import safe at call time
-
-    lex = reader.lexicon().select("term", "df")
-    terms = [r["term"] for r in
-             (lookup.select(F.col(term_col).alias("term")).distinct()
-              .join(lex, "term")
-              .orderBy(F.desc("df"), F.asc("term"))
-              .limit(int(max_terms)).collect())]
-    if not terms:
-        # ES: empty lookup list matches nothing
-        return spark.createDataFrame([], "doc_id long, score double")
-    return bool_query(spark, reader, should=terms, min_should=1,
-                      round_to=round_to)
-
-
 def msm_to_int(spec, n_clauses: int) -> int:
     """ES ``minimum_should_match`` spec → concrete clause count for a query
     with ``n_clauses`` optional clauses.  Supports the documented forms:

@@ -399,8 +399,8 @@ def bm25_topk_wand(spark: SparkSession, reader, qterms: DataFrame | None = None,
     """Top-k via the persisted index.  ``reader`` is a plans.build.IndexReader.
 
     Returns (query_id, rank, doc_id, score) ordered by (query_id, rank) —
-    identical to operators.scoring.bm25_topk (test-enforced).  The ranked
-    result runs its Spark jobs when this function is called: the shard
+    identical to the join-based BM25 reference scorer in the tests.  The
+    ranked result runs its Spark jobs when this function is called: the shard
     top-ks are collected and merged on the driver, and the returned frame is
     a local relation over the hits, so collecting it runs no job.  A ranked
     request that is one scorer group — at most 2 queries (round(√Q) = 1) on

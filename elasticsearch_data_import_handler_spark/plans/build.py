@@ -1069,101 +1069,104 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     generation fully readable (the NEW dirs are invisible — not committed —
     and a retry overwrites them); a crash after it leaves stray old dirs
     that readers ignore (every read is committed-gated) and that the cleanup
-    pass below or a later compaction removes."""
+    pass below or a later compaction removes.  It holds the index's
+    ``BuildLock`` throughout: a commit or delete that picked the same batch
+    id while it ran would otherwise be overwritten and dropped by the flip."""
     import shutil
 
-    st = read_state(index_dir)
-    if st is None:
-        raise FileNotFoundError(index_dir)
-    committed = st.committed_batches
-    new_b = max(committed) + 1
-    tomb = _read_tombstones(spark, index_dir, committed)
-    ds = _read_doc_stats(spark, index_dir, committed)
-    active = ds.join(tomb, "doc_id", "left_anti") if tomb is not None else ds
+    with BuildLock(index_dir):
+        st = read_state(index_dir)
+        if st is None:
+            raise FileNotFoundError(index_dir)
+        committed = st.committed_batches
+        new_b = max(committed) + 1
+        tomb = _read_tombstones(spark, index_dir, committed)
+        ds = _read_doc_stats(spark, index_dir, committed)
+        active = ds.join(tomb, "doc_id", "left_anti") if tomb is not None else ds
 
-    # the new segment's doc rows and ord → doc_id map, before the postings
-    # whose encode reads the map
-    from pyspark.sql import Observation
-    obs = Observation(f"compact_b{new_b}")
-    (with_ordinals(active, st.s_shards)
-     .select("doc_id", "url", "warc_ts", "doc_len", "ord", "salt",
-             F.lit("d").alias("__t"))
-     .observe(obs, F.count(F.lit(1)).alias("n_docs"),
-              F.coalesce(F.sum("doc_len"), F.lit(0)).alias("sum_dl"))
-     .write.mode("overwrite").partitionBy("__t", "salt")
-     .parquet(f"{index_dir}/doc_stats/batch={new_b}"))
-    n_active = int(obs.get["n_docs"])
-    sum_active = int(obs.get["sum_dl"])
+        # the new segment's doc rows and ord → doc_id map, before the postings
+        # whose encode reads the map
+        from pyspark.sql import Observation
+        obs = Observation(f"compact_b{new_b}")
+        (with_ordinals(active, st.s_shards)
+         .select("doc_id", "url", "warc_ts", "doc_len", "ord", "salt",
+                 F.lit("d").alias("__t"))
+         .observe(obs, F.count(F.lit(1)).alias("n_docs"),
+                  F.coalesce(F.sum("doc_len"), F.lit(0)).alias("sum_dl"))
+         .write.mode("overwrite").partitionBy("__t", "salt")
+         .parquet(f"{index_dir}/doc_stats/batch={new_b}"))
+        n_active = int(obs.get["n_docs"])
+        sum_active = int(obs.get["sum_dl"])
 
-    post = spark.read.option("basePath", f"{index_dir}/postings").parquet(
-        *_batch_dirs(index_dir, "postings", committed))
-    doc_maps = DocMaps(index_dir)
+        post = spark.read.option("basePath", f"{index_dir}/postings").parquet(
+            *_batch_dirs(index_dir, "postings", committed))
+        doc_maps = DocMaps(index_dir)
 
-    decoded = post.select("term", "batch", "salt", "n_docs", *_STREAMS) \
-        .mapInArrow(_explode_postings(("term", "salt"), doc_maps),
-                    schema="term string, salt int, doc_id bigint, tf int, "
-                           "doc_len int") \
-        .select(F.xxhash64("term").alias("term_id"), "salt", "doc_id", "tf",
-                "doc_len")
-    if tomb is not None:
-        decoded = decoded.join(tomb, "doc_id", "left_anti")
-    # Size the re-encode shuffle from the DATA, not the core count — the
-    # same ~48 B/occurrence rule as commit_batch: compaction folds the WHOLE
-    # index, so a core-count partition count is the first thing to spill at
-    # scale.  The doc_stats write above observed the active occurrence
-    # total.
-    dp = spark.sparkContext.defaultParallelism
-    p = max(dp, sum_active * 48 // (128 << 20) + 1)
-    # full final wave (same quantization rule as commit_batch's p_enc)
-    p = ((p + dp - 1) // dp) * dp
-    part = (decoded.repartition(p, "term_id", "salt")
-            .sortWithinPartitions("term_id", "salt", "doc_id"))
-    enc = part.mapInPandas(
-        _encode_stream_factory(
-            st.n_buckets, with_tf=True,
-            ord_of=lambda salt, d: ordinals_of(doc_maps, new_b, salt, d)),
-        schema=POSTINGS_ENC_SCHEMA)
-    terms = post.select("term").distinct().select(
-        "term", F.xxhash64("term").alias("term_id"))
-    merged = enc.join(terms, "term_id").drop("term_id")
+        decoded = post.select("term", "batch", "salt", "n_docs", *_STREAMS) \
+            .mapInArrow(_explode_postings(("term", "salt"), doc_maps),
+                        schema="term string, salt int, doc_id bigint, tf int, "
+                               "doc_len int") \
+            .select(F.xxhash64("term").alias("term_id"), "salt", "doc_id", "tf",
+                    "doc_len")
+        if tomb is not None:
+            decoded = decoded.join(tomb, "doc_id", "left_anti")
+        # Size the re-encode shuffle from the DATA, not the core count — the
+        # same ~48 B/occurrence rule as commit_batch: compaction folds the WHOLE
+        # index, so a core-count partition count is the first thing to spill at
+        # scale.  The doc_stats write above observed the active occurrence
+        # total.
+        dp = spark.sparkContext.defaultParallelism
+        p = max(dp, sum_active * 48 // (128 << 20) + 1)
+        # full final wave (same quantization rule as commit_batch's p_enc)
+        p = ((p + dp - 1) // dp) * dp
+        part = (decoded.repartition(p, "term_id", "salt")
+                .sortWithinPartitions("term_id", "salt", "doc_id"))
+        enc = part.mapInPandas(
+            _encode_stream_factory(
+                st.n_buckets, with_tf=True,
+                ord_of=lambda salt, d: ordinals_of(doc_maps, new_b, salt, d)),
+            schema=POSTINGS_ENC_SCHEMA)
+        terms = post.select("term").distinct().select(
+            "term", F.xxhash64("term").alias("term_id"))
+        merged = enc.join(terms, "term_id").drop("term_id")
 
-    # positional postings fold into the new generation too: concat batch
-    # segments, drop tombstoned docs, rewrite (rows are already unique per
-    # (term, doc) across segments — a doc version lives in one batch)
-    if st.has_positions:
-        pdirs = _batch_dirs(index_dir, "positions", committed)
-        if pdirs:
-            posd = spark.read.option(
-                "basePath", f"{index_dir}/positions").parquet(*pdirs) \
-                .select("term_id", "doc_id", "n_pos", "pos_vb", "bucket")
-            if tomb is not None:
-                posd = posd.join(tomb, "doc_id", "left_anti")
-            posd.write.mode("overwrite").partitionBy("bucket").parquet(
-                f"{index_dir}/positions/batch={new_b}")
+        # positional postings fold into the new generation too: concat batch
+        # segments, drop tombstoned docs, rewrite (rows are already unique per
+        # (term, doc) across segments — a doc version lives in one batch)
+        if st.has_positions:
+            pdirs = _batch_dirs(index_dir, "positions", committed)
+            if pdirs:
+                posd = spark.read.option(
+                    "basePath", f"{index_dir}/positions").parquet(*pdirs) \
+                    .select("term_id", "doc_id", "n_pos", "pos_vb", "bucket")
+                if tomb is not None:
+                    posd = posd.join(tomb, "doc_id", "left_anti")
+                posd.write.mode("overwrite").partitionBy("bucket").parquet(
+                    f"{index_dir}/positions/batch={new_b}")
 
-    # materialize the new generation's postings before the state flip
-    merged.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{index_dir}/postings/batch={new_b}")
-    # post-compaction lexicon = segment metadata sums (no corrections left)
-    _write_lexicon_gen(spark, index_dir, new_b, [], False)
+        # materialize the new generation's postings before the state flip
+        merged.write.mode("overwrite").partitionBy("bucket").parquet(
+            f"{index_dir}/postings/batch={new_b}")
+        # post-compaction lexicon = segment metadata sums (no corrections left)
+        _write_lexicon_gen(spark, index_dir, new_b, [], False)
 
-    # --- atomic commit point ---
-    st.committed_batches = [new_b]
-    st.last_indexed_batch = new_b
-    st.n_docs, st.sum_dl = n_active, sum_active
-    write_state(index_dir, st)
+        # --- atomic commit point ---
+        st.committed_batches = [new_b]
+        st.last_indexed_batch = new_b
+        st.n_docs, st.sum_dl = n_active, sum_active
+        write_state(index_dir, st)
 
-    # cleanup (crash-tolerant: everything below is invisible to readers)
-    for b in committed:
-        shutil.rmtree(f"{index_dir}/postings/batch={b}", ignore_errors=True)
-        shutil.rmtree(f"{index_dir}/doc_stats/batch={b}", ignore_errors=True)
-        shutil.rmtree(f"{index_dir}/positions/batch={b}", ignore_errors=True)
-    shutil.rmtree(f"{index_dir}/df_corrections", ignore_errors=True)
-    _cleanup_stale_gens(index_dir, new_b)
-    import pyarrow.dataset as _ds
-    return {"n_posting_rows": _ds.dataset(
-        f"{index_dir}/postings/batch={new_b}", format="parquet",
-        partitioning="hive").count_rows(), "batch_id": new_b}
+        # cleanup (crash-tolerant: everything below is invisible to readers)
+        for b in committed:
+            shutil.rmtree(f"{index_dir}/postings/batch={b}", ignore_errors=True)
+            shutil.rmtree(f"{index_dir}/doc_stats/batch={b}", ignore_errors=True)
+            shutil.rmtree(f"{index_dir}/positions/batch={b}", ignore_errors=True)
+        shutil.rmtree(f"{index_dir}/df_corrections", ignore_errors=True)
+        _cleanup_stale_gens(index_dir, new_b)
+        import pyarrow.dataset as _ds
+        return {"n_posting_rows": _ds.dataset(
+            f"{index_dir}/postings/batch={new_b}", format="parquet",
+            partitioning="hive").count_rows(), "batch_id": new_b}
 
 
 class IndexReader:
@@ -1198,9 +1201,9 @@ class IndexReader:
         return self._memo["doc_maps"]
 
     def avgdl_value(self) -> float:
-        """The corpus avgdl as a driver-side float — exactly the value
-        ``corpus_stats()`` carries (same Python division), usable as a
-        literal column instead of a 1-row crossJoin."""
+        """The corpus avgdl as a driver-side float (``sum_dl / n_docs`` of
+        the snapshot's state, 0.0 on an empty corpus), usable as a literal
+        column instead of a 1-row crossJoin."""
         n_docs, sum_dl = self.state.n_docs, self.state.sum_dl
         return (sum_dl / n_docs) if n_docs else 0.0
 
@@ -1220,13 +1223,6 @@ class IndexReader:
         if gen is None:
             raise FileNotFoundError(f"no lexicon generation in {self.index_dir}")
         return _lexicon_gen_dir(self.index_dir, gen)
-
-    def corpus_stats(self) -> DataFrame:
-        if "corpus_stats" not in self._memo:
-            self._memo["corpus_stats"] = self.spark.createDataFrame(
-                [(self.state.n_docs, self.state.sum_dl, self.avgdl_value())],
-                "n_docs long, sum_dl long, avgdl double")
-        return self._memo["corpus_stats"]
 
     def doc_stats(self) -> DataFrame:
         if "doc_stats" not in self._memo:

@@ -23,9 +23,11 @@ def stream_index_pages(spark: SparkSession, pages_dir: str, index_dir: str,
                        n_buckets: int = 8):
     """Index every new pages file exactly once (AvailableNow drains what's
     present, then stops; re-run to pick up new files — the streaming analog
-    of the reference's cron-driven incremental import)."""
+    of the reference's cron-driven incremental import).  Each micro-batch
+    commits under the index's ``BuildLock``; a lock held elsewhere fails the
+    batch, which stops the stream with nothing committed."""
     from ..plans.build import commit_batch
-    from ..plans.state import read_state
+    from ..plans.state import BuildLock, read_state
 
     stream = (
         spark.readStream.schema(PAGES_SCHEMA).format("parquet")
@@ -34,10 +36,11 @@ def stream_index_pages(spark: SparkSession, pages_dir: str, index_dir: str,
     )
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        st = read_state(index_dir)
-        batch_id = (st.last_indexed_batch + 1) if st else 0
-        commit_batch(batch_df.sparkSession, batch_df, index_dir,
-                     batch_id=batch_id, tau=tau, n_buckets=n_buckets)
+        with BuildLock(index_dir):
+            st = read_state(index_dir)
+            batch_id = (st.last_indexed_batch + 1) if st else 0
+            commit_batch(batch_df.sparkSession, batch_df, index_dir,
+                         batch_id=batch_id, tau=tau, n_buckets=n_buckets)
 
     return (
         stream.writeStream.foreachBatch(_sink)

@@ -325,8 +325,7 @@ def test_pipeline_quality_filter_and_delete_by_query(spark, tmp_path, sf_dir):
 
     reader = IndexReader(spark, idx)
     assert bool_query(spark, reader, must=["spark"]).count() == 0
-    st = reader.corpus_stats().first()
-    assert st["n_docs"] == keep - report[1]["rows"]  # active-doc accounting
+    assert reader.state.n_docs == keep - report[1]["rows"]  # active-doc accounting
 
     # idempotent re-run: no surviving doc matches, so 0 new tombstones
     report2 = run_pipeline(spark, cfg)
@@ -394,7 +393,7 @@ def test_pipeline_update_by_query(spark, tmp_path, sf_dir):
     assert (bool_query(spark, reader, must=["zzpipelinemark"]).count()
             == report[1]["rows"])
     # upsert, not insert: active-doc count unchanged
-    assert reader.corpus_stats().first()["n_docs"] == report[0]["rows"]
+    assert reader.state.n_docs == report[0]["rows"]
 
 
 def test_temperature_weights_recipe(spark):

@@ -8,12 +8,10 @@ synthetic `pages` corpus (post-dedup).
 import pytest
 
 from elasticsearch_data_import_handler_spark.operators.indexing import (
-    docs_from_documents,
-    docs_from_pages,
-)
-from elasticsearch_data_import_handler_spark.operators.scoring import bm25_topk
+    docs_from_documents)
 from elasticsearch_data_import_handler_spark.queryset import QUERIES
 from tests.oracle.bm25 import BM25Oracle
+from tests.oracle.bm25_join import bm25_topk, docs_from_pages
 
 
 def _assert_rank_identical(spark_rows, oracle_rows):

@@ -126,21 +126,3 @@ def test_metric_aggs_one_pass(frames):
     assert wa["doc_count"] == 5
     assert rows["vcount:score"]["doc_count"] == 5
     assert rows["missing:lang"]["doc_count"] == 1
-
-
-def test_adjacency_matrix_cells(frames, spark):
-    from elasticsearch_data_import_handler_spark.operators.search import (
-        adjacency_matrix_agg)
-
-    scored, meta = frames
-    rows = {r["value"]: r["doc_count"] for r in adjacency_matrix_agg(
-        scored, meta,
-        {"en": "lang = 'en'", "big": "n_chars >= 250",
-         "srcc": "source = 'c'"}).collect()}
-    # docs: 1(en,a,100) 2(en,b,250) 3(de,a,400) 4(de,c,50) 5(null,c,300)
-    assert rows["en"] == 2 and rows["big"] == 3 and rows["srcc"] == 2
-    assert rows["big&en"] == 1          # doc 2
-    assert rows["big&srcc"] == 1        # doc 5
-    assert "en&srcc" not in rows        # 0-count cells dropped (ES)
-    # keys are sorted pairs — never both orders
-    assert "en&big" not in rows

@@ -100,32 +100,3 @@ def test_pipeline_aggs_over_histogram(spark, dh_index):
         run = round(run + r["sum_score"], 2)
         assert r["cumulative_sum"] == run
         prev = r["doc_count"]
-
-
-def test_auto_date_histogram_picks_interval(spark, dh_index):
-    """auto_date_histogram: the chosen interval is the smallest ladder
-    rung whose bucket count fits target_buckets, and the histogram at
-    that interval equals date_histogram_search run explicitly."""
-    from elasticsearch_data_import_handler_spark.operators.search import (
-        auto_date_histogram_search)
-
-    reader = IndexReader(spark, dh_index)
-    scored = bool_query(spark, reader, must=["spark"], round_to=4)
-    ts = {r["doc_id"]: int(r["warc_ts"].timestamp())
-          for r in reader.doc_stats().select("doc_id", "warc_ts").collect()}
-    matched = [ts[r["doc_id"]] for r in scored.select("doc_id").collect()]
-    span = max(matched) - min(matched) + 1
-    ladder = (1, 5, 10, 30, 60, 300, 600, 1800, 3600, 43200, 86400)
-    target = 7
-    expect_iv = next(iv for iv in ladder if -(-span // iv) <= target)
-
-    got = auto_date_histogram_search(spark, reader, target_buckets=target,
-                                     must=["spark"]).collect()
-    assert all(r["facet"] == f"adh:{expect_iv}s" for r in got)
-    want = {r["value"]: (r["doc_count"], r["sum_score"]) for r in
-            date_histogram_search(spark, reader, interval_s=expect_iv,
-                                  must=["spark"]).collect()}
-    assert {r["value"]: (r["doc_count"], r["sum_score"])
-            for r in got} == want
-    # non-empty-span bucket COUNT respects the target (ES guarantee)
-    assert len(got) <= target

@@ -134,7 +134,7 @@ def test_ivf_trained_recall_at_least_closed_form(spark, sf_dir):
     and its assignment stage must plan as a kernel + equi-joins — no
     crossJoin of all vectors x centroids, no nested-loop join."""
     from elasticsearch_data_import_handler_spark.operators.similarity import (
-        ivf_centroids_filter, ivf_topk, quantized_vec)
+        ivf_topk, quantized_vec)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     exact = cosine_topk(emb, n_queries=5, k=10).collect()
@@ -152,7 +152,7 @@ def test_ivf_trained_recall_at_least_closed_form(spark, sf_dir):
     # closed-form quantizer via the centroids override
     cf = np.array([list(r["q"]) for r in
                    emb.filter((F.col("vec_id") >= 5)
-                              & ivf_centroids_filter())
+                              & (F.col("vec_id") % 31 == 6))
                    .select(quantized_vec().alias("q"))
                    .orderBy("vec_id").collect()], dtype=np.int64)
     trained_df = ivf_topk(emb, n_queries=5, k=10, n_probe=4)
@@ -212,9 +212,10 @@ def test_ivf_pq_recall_and_plan(spark, sf_dir):
 
 def test_ivf_pq_codes_shape(spark, sf_dir):
     """The PQ code table (the persisted 100-TB artifact) must carry exactly
-    M codes per vector, each < k_pq — M bytes/vector is the memory story."""
+    M codes per vector, each in [0, k_pq) — M bytes/vector is the memory
+    story.  ``_pq_codes_rows`` is the kernel ``ivf_pq_topk`` runs."""
     from elasticsearch_data_import_handler_spark.operators.similarity import (
-        _assign_cells, _pq_assign_codes, _residuals, kmeans_centroids,
+        _assign_cells, _pq_codes_rows, _residuals, kmeans_centroids,
         pq_codebooks)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -226,11 +227,11 @@ def test_ivf_pq_codes_shape(spark, sf_dir):
     res = _residuals(cand, cells, C, "vec_id", "embedding")
     CB = pq_codebooks(res, M=8, k_pq=16, iters=1)
     assert CB.shape == (8, 16, 8)
-    codes = _pq_assign_codes(res, CB)
-    agg = codes.groupBy("id").count().collect()
-    assert all(r["count"] == 8 for r in agg)
-    assert codes.filter((F.col("code") < 0) | (F.col("code") >= 16)).count() == 0
-    assert len(agg) == cand.count()
+    codes = _pq_codes_rows(res, CB).collect()
+    assert sorted(r["id"] for r in codes) == sorted(
+        r["vec_id"] for r in cand.select("vec_id").collect())
+    assert all(len(r["codes"]) == 8 for r in codes)
+    assert all(0 <= c < 16 for r in codes for c in r["codes"])
 
 
 def test_line_dedup_removes_boilerplate_preserves_order(spark):

@@ -9,10 +9,7 @@ from pyspark.sql import functions as F
 
 from elasticsearch_data_import_handler_spark.operators.dedup import dedup_latest
 from elasticsearch_data_import_handler_spark.operators.docapi import explain_score
-from elasticsearch_data_import_handler_spark.operators.scoring import (
-    bm25_topk,
-    query_terms_df,
-)
+from elasticsearch_data_import_handler_spark.operators.scoring import query_terms_df
 from elasticsearch_data_import_handler_spark.operators.search import multi_match
 from elasticsearch_data_import_handler_spark.operators.textsearch import (
     bool_query,
@@ -31,6 +28,7 @@ from elasticsearch_data_import_handler_spark.plans.build import (
 )
 from elasticsearch_data_import_handler_spark.plans.state import read_lineage, read_state
 from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
+from tests.oracle.bm25_join import bm25_topk
 
 
 @pytest.fixture(scope="module")
@@ -187,9 +185,9 @@ def test_reader_opened_before_a_delete_keeps_its_snapshot(spark, tmp_path, tau):
 
 def test_delete_updates_stats_and_lineage(spark, deleted_and_clean):
     del_dir, clean_dir, _ = deleted_and_clean
-    a = IndexReader(spark, del_dir).corpus_stats().first()
-    b = IndexReader(spark, clean_dir).corpus_stats().first()
-    assert (a["n_docs"], a["sum_dl"]) == (b["n_docs"], b["sum_dl"])
+    a = IndexReader(spark, del_dir)
+    b = IndexReader(spark, clean_dir)
+    assert (a.state.n_docs, a.state.sum_dl) == (b.state.n_docs, b.state.sum_dl)
     st = read_state(del_dir)
     assert len(st.committed_batches) == 2  # build + delete batch
     assert "delete" in set(read_lineage(del_dir)["status"])
@@ -204,9 +202,9 @@ def test_reader_stats_surface(spark, deleted_and_clean):
     delete batch shows up as a segment with its tombstones counted."""
     del_dir, clean_dir, victims = deleted_and_clean
     st = IndexReader(spark, del_dir).stats()
-    cs = IndexReader(spark, del_dir).corpus_stats().first()
-    assert st["n_docs"] == cs["n_docs"]
-    assert st["sum_doc_len"] == cs["sum_dl"]
+    cs = IndexReader(spark, del_dir).state
+    assert st["n_docs"] == cs.n_docs
+    assert st["sum_doc_len"] == cs.sum_dl
     assert st["n_segments"] == len(st["committed_batches"]) == 2
     assert st["n_tombstones"] == len(victims)
     assert st["n_posting_rows"] > 0 and st["postings_bytes"] > 0

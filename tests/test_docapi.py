@@ -106,26 +106,3 @@ def test_msearch_matches_singleton_queries(spark, api_index):
             round_to=4)
         for r in solo.collect():
             assert got[(key, r["rank"])] == (r["doc_id"], r["score"])
-
-
-def test_pipeline_aggs_ext_semantics(spark):
-    from elasticsearch_data_import_handler_spark.operators.search import (
-        pipeline_aggs_ext)
-
-    buckets = spark.createDataFrame(
-        [("0", 4, 2.0), ("60", 1, 1.0), ("120", 3, 3.0), ("180", 3, 5.0)],
-        "value string, doc_count long, sum_score double")
-    rows = {r["value"]: r for r in
-            pipeline_aggs_ext(buckets, window=3, lag=1).collect()}
-    # moving avg over trailing 3 buckets incl. current
-    assert rows["0"]["moving_avg"] == pytest.approx(2.0)
-    assert rows["60"]["moving_avg"] == pytest.approx(1.5)
-    assert rows["120"]["moving_avg"] == pytest.approx(2.0)
-    assert rows["180"]["moving_avg"] == pytest.approx(3.0)
-    # serial diff lag 1: NULL first bucket
-    assert rows["0"]["serial_diff"] is None
-    assert rows["60"]["serial_diff"] == -3
-    assert rows["120"]["serial_diff"] == 2
-    # bucket_sort rank: count desc, key asc
-    assert [rows[k]["sort_rank"] for k in ("0", "60", "120", "180")] \
-        == [1, 4, 2, 3]

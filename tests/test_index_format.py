@@ -12,7 +12,6 @@ import pyarrow.parquet as pq
 import pytest
 
 from elasticsearch_data_import_handler_spark.operators.dedup import dedup_latest
-from elasticsearch_data_import_handler_spark.operators.scoring import bm25_topk
 from elasticsearch_data_import_handler_spark.operators.wand import bm25_topk_wand
 from elasticsearch_data_import_handler_spark.plans import docmap
 from elasticsearch_data_import_handler_spark.plans.build import (
@@ -21,6 +20,7 @@ from elasticsearch_data_import_handler_spark.plans.build import (
 from elasticsearch_data_import_handler_spark.plans.state import (
     FORMAT_VERSION, IndexFormatError, read_state)
 from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
+from tests.oracle.bm25_join import bm25_topk
 
 
 def _hits(rows):

@@ -5,12 +5,11 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from elasticsearch_data_import_handler_spark.operators.indexing import docs_from_pages
-from elasticsearch_data_import_handler_spark.operators.scoring import bm25_topk
 from elasticsearch_data_import_handler_spark.operators.wand import bm25_topk_wand
 from elasticsearch_data_import_handler_spark.plans.build import IndexReader, build_index
 from elasticsearch_data_import_handler_spark.plans.state import BuildLock, read_lineage, read_state
 from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
+from tests.oracle.bm25_join import bm25_topk
 
 
 @pytest.fixture(scope="module")
@@ -61,6 +60,21 @@ def test_build_lock_blocks_concurrent(spark, index_dir):
     with BuildLock(index_dir):
         lock2 = BuildLock(index_dir)
         assert lock2.acquire() is False
+
+
+def test_compaction_takes_the_build_lock(spark, index_dir):
+    """A compaction that finds another writer's lock aborts before writing:
+    it would otherwise pick the other writer's batch id and drop its
+    commit at the state flip."""
+    from elasticsearch_data_import_handler_spark.plans.build import compact_index
+
+    with open(f"{index_dir}/_state/state.json", "rb") as f:
+        before = f.read()
+    with BuildLock(index_dir):
+        with pytest.raises(RuntimeError, match="locked"):
+            compact_index(spark, index_dir)
+    with open(f"{index_dir}/_state/state.json", "rb") as f:
+        assert f.read() == before
 
 
 def _dead_pid() -> int:

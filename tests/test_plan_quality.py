@@ -19,19 +19,6 @@ def test_filter_and_projection_pushdown(spark, sf_dir):
     assert "l_extendedprice" not in plan.split("ReadSchema")[1][:400]
 
 
-def test_bm25_join_scorer_broadcasts_query_side(spark, documents):
-    from elasticsearch_data_import_handler_spark.operators.indexing import (
-        docs_from_documents)
-    from elasticsearch_data_import_handler_spark.operators.scoring import (
-        bm25_topk)
-
-    df = bm25_topk(spark, docs_from_documents(documents))
-    df.collect()  # AQE finalizes the physical plan only after execution
-    plan = _plan(df)
-    assert "BroadcastExchange" in plan  # query terms + lexicon side
-    assert "*(" in plan  # WholeStageCodegen spans render as *(n) markers
-
-
 @pytest.mark.parametrize("name", ["bm25_topk", "multi_match",
                                   "function_score", "query_string_tagged"])
 def test_entry_persists_nothing_read_once(spark, sf_dir, name):

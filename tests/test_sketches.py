@@ -63,42 +63,6 @@ def test_union_mergeability(spark):
     assert abs(row.est_distinct - 950) / 950 < 4 / math.sqrt(64)
 
 
-def test_facet_cardinality_composition(spark, tmp_path_factory):
-    """terms-agg + cardinality sub-agg: KMV distinct per bucket over the
-    docs matching a bool query — with k above every bucket's true
-    cardinality the sketch is exact, so it must equal countDistinct."""
-    import shutil
-
-    from elasticsearch_data_import_handler_spark.operators.search import (
-        facet_cardinality)
-    from elasticsearch_data_import_handler_spark.operators.textsearch import (
-        bool_query)
-    from elasticsearch_data_import_handler_spark.plans.build import (
-        IndexReader, build_index)
-    from elasticsearch_data_import_handler_spark.sources.corpus import (
-        synth_pages)
-
-    d = str(tmp_path_factory.mktemp("fcidx"))
-    pages = synth_pages(spark, 300, seed=42)
-    build_index(spark, pages, d, tau=100, n_buckets=4)
-    reader = IndexReader(spark, d)
-    # doc-values side table: bucket by lang, count distinct url tails
-    meta = reader.doc_stats().select(
-        "doc_id", F.element_at(F.split("url", "/"), -1).alias("tail"),
-        (F.xxhash64("url") % 4).cast("string").alias("bucket"))
-    got = {r.grp: (r.est_distinct, r.exact_mode) for r in
-           facet_cardinality(spark, reader, meta, "bucket", "tail",
-                             k=4096, must=["spark"]).collect()}
-    matched = bool_query(spark, reader, must=["spark"]).select("doc_id")
-    truth = {r["bucket"]: r["n"] for r in
-             matched.join(meta, "doc_id").groupBy("bucket")
-             .agg(F.countDistinct("tail").alias("n")).collect()}
-    assert len(got) == len(truth) > 1
-    for grp, (est, exact) in got.items():
-        assert exact == 1 and est == float(truth[grp])
-    shutil.rmtree(d, ignore_errors=True)
-
-
 def test_sampled_quantiles_accuracy_and_determinism(spark, sf_dir):
     from elasticsearch_data_import_handler_spark.operators.sketches import (
         sampled_quantiles)

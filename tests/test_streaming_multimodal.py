@@ -49,6 +49,28 @@ def test_stream_index_equals_batch(spark, tmp_path):
     shutil.rmtree(str(tmp_path), ignore_errors=True)
 
 
+def test_stream_commit_takes_the_build_lock(spark, tmp_path):
+    """A stream whose index is locked by another writer fails its first
+    micro-batch and commits nothing."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from elasticsearch_data_import_handler_spark.plans.state import (
+        BuildLock, read_state)
+    from elasticsearch_data_import_handler_spark.sources.corpus import synth_pages
+
+    pages_dir = str(tmp_path / "pages_in")
+    synth_pages(spark, 20, seed=42).coalesce(1).write.parquet(pages_dir)
+    idx = str(tmp_path / "idx")
+    with BuildLock(idx):
+        q = stream_index_pages(spark, pages_dir, idx, str(tmp_path / "ckpt"),
+                               tau=100, n_buckets=2)
+        with pytest.raises(StreamingQueryException, match="locked"):
+            q.awaitTermination(120)
+    assert read_state(idx) is None
+    shutil.rmtree(str(tmp_path), ignore_errors=True)
+
+
 def test_windowed_event_counts_static(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
         .withColumn("ts", F.col("ts").cast("timestamp"))

@@ -437,19 +437,6 @@ def test_quality_filter_composite(spark, sf_dir):
 
 # ------------------------------------------------------------------- BPE
 
-def test_bpe_train_deterministic_and_matches_fixture(spark, sf_dir):
-    """Retraining on the same corpus reproduces the checked-in merge
-    fixture bit-for-bit (the determinism contract that lets the oracle
-    embed the merge list as a literal)."""
-    from elasticsearch_data_import_handler_spark.functions import bpe
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    trained = bpe.train_bpe(docs, n_merges=200, max_words=50_000)
-    if sf_dir.rstrip("/").endswith("sf0.01"):
-        assert trained == bpe.load_merges()
-    assert trained == bpe.train_bpe(docs, n_merges=200, max_words=50_000)
-
-
 def test_bpe_segment_properties():
     """Segmentation invariants: concatenation round-trips to the word, a
     word with no merges stays characters, merge priority is respected

@@ -485,41 +485,6 @@ def test_match_bool_prefix_equals_manual_compose(spark, pos_index):
         match_bool_prefix(spark, reader, "")
 
 
-def test_terms_lookup_matches_any_shared_term(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from elasticsearch_data_import_handler_spark.operators.textsearch import (
-        terms_lookup_query)
-    from elasticsearch_data_import_handler_spark.plans.build import (
-        IndexReader, build_index)
-    from elasticsearch_data_import_handler_spark.sources.corpus import (
-        synth_pages)
-
-    d = str(tmp_path / "tl")
-    pages = synth_pages(spark, 120, seed=5)
-    build_index(spark, pages, d, tau=100, n_buckets=4)
-    reader = IndexReader(spark, d)
-
-    # lookup doc = tokens of one source page (the ES lookup-path analog)
-    one = pages.orderBy("url").limit(1)
-    lookup = one.select(F.explode(F.split(F.lower("text"), " "))
-                        .alias("term"))
-    hits = {r["doc_id"] for r in
-            terms_lookup_query(spark, reader, lookup).collect()}
-    # ground truth: docs sharing ANY token with the lookup doc
-    toks = {t for t, in lookup.distinct().collect()}
-    ds = reader.doc_stats().select("doc_id", "url").collect()
-    texts = {r["url"]: set(r["text"].lower().split())
-             for r in pages.select("url", "text").collect()}
-    want = {r["doc_id"] for r in ds if texts[r["url"]] & toks}
-    assert hits == want and hits
-
-    empty = terms_lookup_query(
-        spark, reader,
-        spark.createDataFrame([("zzznoterm",)], ["term"]))
-    assert empty.count() == 0
-
-
 def test_msm_spec_forms():
     from elasticsearch_data_import_handler_spark.operators.textsearch import (
         msm_to_int)

@@ -42,8 +42,7 @@ def test_update_by_query_equals_fresh_build(spark, tmp_path):
     assert {r["url"] for r in marked.collect()} == victim_urls
 
     # corpus cardinality unchanged: update is an upsert, not an insert
-    cs = r2.corpus_stats().collect()[0]
-    assert cs["n_docs"] == 200
+    assert r2.state.n_docs == 200
 
     # gold standard: lexicon (term, df) equals a FRESH index built from the
     # pre-transformed pages
@@ -92,7 +91,7 @@ def test_reindex_active_set_new_analyzer_alias_flip(spark, tmp_path):
     assert res["n_docs"] == active
     r2 = IndexReader(spark, dst)
     assert r2.state.analyzer.get("stemmer") == "porter"
-    assert r2.corpus_stats().first()["n_docs"] == active
+    assert r2.state.n_docs == active
     # the victims stayed gone: 'merge' stems to 'merg' under porter, and
     # every doc containing it was deleted upstream
     assert bool_query(spark, r2, must=["merge"]).count() == 0
